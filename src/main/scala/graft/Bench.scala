@@ -642,7 +642,7 @@ object Bench {
     // (90% of docs token-prefixed by doc_id so no gram crosses them; 10%
     // kept verbatim with the fixture's replica structure) — the regime
     // the tier was designed for — with the tier on vs off. Measured (and
-    // cross-checked at 10×/30× doc lengths by tools/ProfileSpan): the
+    // cross-checked at 10×/30× doc lengths, README's r9 note): the
     // REBUILD path wins everywhere, so the tier is opt-in from r10 and
     // the default (= what q_span_removal times) is the rebuild.
     // span_touched_frac rides in BENCH_FULL.json as the attribution for
@@ -850,7 +850,7 @@ object Bench {
         // medianed like every other entry (VERDICT r8 #2): the r8
         // single-shot readings put q_minhash_pairs at 17.3× and this
         // delta at 38× — re-measured with medians + stage instrumentation
-        // (tools/ProfileScale10) they are 1.4× and ~5.6× at 10× data;
+        // (a one-off r8 re-run) they are 1.4× and ~5.6× at 10× data;
         // both "superlinear ratios" were single-shot host noise, which a
         // single-shot scale tier has no defense against
         val b10 = median((1 to runs).map(_ =>

@@ -54,7 +54,7 @@ object DedupOps {
     * Built as posexplode(words) + window `lead` instead of array lambdas:
     * `transform`+`array_distinct` are interpreted per element and were ~11×
     * slower at sf0.1; r12 re-measured the plain-transform HOF lattice
-    * (no array_distinct) via tools/ProfileShingle and it STILL loses here
+    * (no array_distinct; OPTIMIZATION_r12.md §1) and it STILL loses here
     * (interleaved A/B at sf0.1: 0.86 vs 0.98 s under the signature agg) —
     * the interpreted per-gram lambda costs more than the window exchange
     * it removes when the gram STRING must materialize anyway. The window
@@ -92,7 +92,7 @@ object DedupOps {
     * exchange left). Construction is the [[gramLattice]] HOF shape
     * (transform + element_at over the in-row word array, zero window
     * exchange) rather than [[shingleRows]]' posexplode + lead:
-    * tools/ProfileShingle's interleaved A/B at sf0.1 measured the two
+    * OPTIMIZATION_r12.md §1-2's interleaved A/B at sf0.1 measured the two
     * hashed forms at parity (HOF 0.75 s vs lead-window 0.71 under the
     * df-cap window; both beat the old string-distinct 0.80), so the
     * zero-exchange form wins on the at-scale argument — shuffles get
@@ -218,7 +218,7 @@ object DedupOps {
           col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
       .distinct()
-    jaccardVerified(cand, shr, minJaccard = 0.0, shr, bandRows)
+    jaccardVerified(cand, shr, shingleSets, minJaccard = 0.0, shr, bandRows)
   }
 
   /** The persisted LSH index of a corpus: (doc_id, band, bucket) rows plus
@@ -239,15 +239,16 @@ object DedupOps {
     * delta JOINS this table on the pair members (point lookups on doc_id —
     * bucketable/bloom-filterable at scale) instead of re-aggregating a
     * corpus-sized shingle table on every batch. */
-  def shingleSets(shr: DataFrame): DataFrame = {
-    // accepts raw (doc_id, sh) rows or pre-hashed (doc_id, shh) rows from
-    // [[shingleHashRows]] — same sets either way (the hash is applied at
-    // distinct time there instead of here)
-    val elem = if (shr.columns.contains("shh")) col("shh") else shingleHash
-    shr.groupBy(col("doc_id"))
-      .agg(sort_array(collect_list(elem)).as("hs"),
-        count(lit(1)).as("n"))
-  }
+  def shingleSets(shr: DataFrame): DataFrame = setsOf(shr, shingleHash)
+
+  /** [[shingleSets]] over pre-hashed (doc_id, shh) rows from
+    * [[shingleHashRows]] — the same sets (the hash is applied at distinct
+    * time there instead of here). */
+  def shingleSetsFromHashes(hashed: DataFrame): DataFrame = setsOf(hashed, col("shh"))
+
+  private def setsOf(rows: DataFrame, elem: org.apache.spark.sql.Column): DataFrame =
+    rows.groupBy(col("doc_id"))
+      .agg(sort_array(collect_list(elem)).as("hs"), count(lit(1)).as("n"))
 
   /** The near-dup index in its INCREMENTAL-friendly form: (bands, sets).
     * Bands are identical to [[buildBandIndex]]'s; the second table is
@@ -353,7 +354,7 @@ object DedupOps {
     * [[overCapBloomWorthIt]]-gated bloom prefilter drops non-matching
     * stored rows before the join exchange once the index is
     * shuffle-dominant). Measured at 10× data with a 10× over-cap delta
-    * (tools/ProfileScale10, medians): ~5.6× wall time — sublinear,
+    * (r8 one-off re-run, medians): ~5.6× wall time — sublinear,
     * because the scan is cheap relative to delta hashing + candidate
     * verification at that shape. */
   /** Floor + ratio for [[overCapBloomWorthIt]]'s cost gate. The bloom
@@ -634,7 +635,7 @@ object DedupOps {
       .union(pairsOf(newBands, newBands))
       .distinct()
     val shrAll = storedShingles.select(col("doc_id"), col("sh")).union(shrNew)
-    jaccardVerified(cand, shrAll, minJaccard = 0.0, shrNew, newBands)
+    jaccardVerified(cand, shrAll, shingleSets, minJaccard = 0.0, shrNew, newBands)
   }
 
   /** Chunk-level cross-corpus dedup statistics — the "remove duplicated
@@ -900,7 +901,7 @@ object DedupOps {
     * positions around the rebuild (anti-join against the broadcast
     * touched-doc set, re-emit the normalized token stream as one per-row
     * projection — identical output by construction). MEASURED A LOSS and
-    * therefore OFF by default: tools/ProfileSpan timed it on four corpus
+    * therefore OFF by default: an r9 A/B (README) timed it on four corpus
     * shapes at sf0.1 (short/10×/30×-long docs, 90%-clean and
     * replica-heavy) and the rebuild path won every one (pass-through
     * 1.11–1.27× slower; e.g. 8.1M-token 90%-clean: 36.4 vs 32.6 s). The
@@ -1113,7 +1114,7 @@ object DedupOps {
         col("a.shh") === col("b.shh") && col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
       .distinct()
-    jaccardVerified(cand, shr, minJaccard,
+    jaccardVerified(cand, shr, shingleSetsFromHashes, minJaccard,
       (if (capped) Seq(shr, candSource) else Seq(shr)): _*)
   }
 
@@ -1161,7 +1162,7 @@ object DedupOps {
       val p = cand.localCheckpoint()
       val docsInPairs = p.select(col("id_a").as("doc_id"))
         .union(p.select(col("id_b").as("doc_id"))).distinct()
-      val sets = track(shingleSets(
+      val sets = track(shingleSetsFromHashes(
         shr.join(docsInPairs, Seq("doc_id"), "left_semi")))
       sets.count()
       val out = p
@@ -1217,6 +1218,7 @@ object DedupOps {
     *    embedded once per consumer (explain/AQE plan strings alone were
     *    heap-killers). */
   private def jaccardVerified(pairs: DataFrame, shingleRows: DataFrame,
+                              toSets: DataFrame => DataFrame,
                               minJaccard: Double,
                               release: DataFrame*): DataFrame = {
     val disk = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
@@ -1224,7 +1226,7 @@ object DedupOps {
     val docsInPairs = p.select(col("id_a").as("doc_id"))
       .union(p.select(col("id_b").as("doc_id")))
       .distinct()
-    val sets = shingleSets(
+    val sets = toSets(
       shingleRows.join(docsInPairs, Seq("doc_id"), "left_semi"))
       .persist(disk)
     graft.pipeline.Timing.stage("dedup", "sets")(sets.count())

@@ -22,7 +22,7 @@ object TextOps {
     * so per-word/per-gram hash and regex work runs nearly serial no
     * matter the core count — measured at sf0.1/local[32]: the minhash
     * signature stage dropped 0.99 → 0.30 s once widened
-    * (tools/ProfileShingle, interleaved A/B). An EXPLICIT numbered
+    * (OPTIMIZATION_r12.md §5, interleaved A/B). An EXPLICIT numbered
     * repartition is exempt from AQE coalescing, its id key is reused by
     * the doc-grain windows/aggregations these operators run (no second
     * exchange appears), and redistribution cannot change any value

@@ -96,21 +96,12 @@ object Pipeline {
         .repartition(col("month")), Seq("month"))
       case other => throw new IllegalArgumentException(s"bronze grain: $other")
     }
-    // the two bronze tables are independent — overlap the tiny splits
-    // write with the heavy partitioned stocks write (guide §2.6) instead
-    // of paying its job+commit tail serially after
-    locally {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      Timing.stage("pipesub", "bronze.writes")(
-        Await.result(Future.sequence(Seq(
-          Future(Storage.writeTable(bars, lake.bronze("stocks"),
-            partitionBy = partCols)),
-          Future(Storage.writeTable(
-            DomainQueries.syntheticSplits(spark), lake.bronze("splits"))))),
-          Duration.Inf))
-    }
+    // independent: the tiny splits write hides under the stocks write
+    Jobs.overlap(spark, "bronze.writes")(
+      "stocks" -> (() => Storage.writeTable(bars, lake.bronze("stocks"),
+        partitionBy = partCols)),
+      "splits" -> (() => Storage.writeTable(
+        DomainQueries.syntheticSplits(spark), lake.bronze("splits"))))
     // checkpoint high-water mark from the WRITTEN table: `date` is its
     // partition column there, so max(date) is answered from the partition
     // index — probing the source instead would re-run the whole bars
@@ -140,10 +131,8 @@ object Pipeline {
       else Storage.readTable(spark, ref).select(col("date")).distinct()
         .collect().map(_.getDate(0).toLocalDate).toSet
     val missing = graft.sources.IngestPlanner.missingDates(startYear, today, stored)
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.global
     val (rows, doneDates, hitLimit) =
-      graft.sources.ParallelFetch.fetchAll(source, missing, parallelism)
+      graft.sources.ParallelFetch.fetchAll(source, missing, parallelism)(Jobs.ec)
     if (rows.nonEmpty) {
       val bars = rows.toDF()
         .select(col("ticker"), col("date").cast("date"),
@@ -209,59 +198,47 @@ object Pipeline {
 
     // cast-validate on write (`schemas.py:108-117`): non-strict coercion to
     // the declared silver schema
+    val disk = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val daily = graft.functions.GraftFunctions.coerceTo(
       SilverOps.applySplits(input, splits), graft.Schemas.silverDaily)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    Timing.stage("pipesub", "silver.daily")(
-      Storage.writeTable(daily, lake.silver("daily_aggregates"), mode))
-
-    // weekly/monthly + indicators always derive from the full silver daily
-    // table (windows need history regardless of how much daily was new).
-    // Cached: four derivations consume it, and re-reading means re-running
-    // partition discovery + scan per consumer. On the full-rewrite path the
-    // just-written table IS the computed frame, already cached by the write
-    // above — reuse it instead of a read-back scan.
-    val allDaily =
-      if (full) daily
-      else Storage.readTable(spark, lake.silver("daily_aggregates"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // the weekly chain, monthly chain, and daily indicators are independent
-    // consumers of the cached daily frame — submit them as CONCURRENT Spark
-    // jobs (driver-side futures; executors interleave their tasks) instead
-    // of serializing three small job waves. Each rollup feeds its aggregate
-    // table AND its indicator table, so it is cached per grain.
-    locally {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val grains = Seq(
-        "week" -> ("weekly_aggregates", "weekly_indicators"),
-        "month" -> ("monthly_aggregates", "monthly_indicators")).map {
-        case (b, (aggT, indT)) => Future {
-          val r = SilverOps.rollup(allDaily, b)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(disk)
+    try {
+      Timing.stage("pipesub", "silver.daily")(
+        Storage.writeTable(daily, lake.silver("daily_aggregates"), mode))
+      // weekly/monthly + indicators always derive from the full silver
+      // daily table (windows need history regardless of how much daily was
+      // new). Cached: four derivations consume it, and re-reading means
+      // re-running partition discovery + scan per consumer. On the
+      // full-rewrite path the just-written table IS the computed frame,
+      // already cached by the write above — reuse it instead of a
+      // read-back scan.
+      val allDaily =
+        if (full) daily
+        else Storage.readTable(spark, lake.silver("daily_aggregates")).persist(disk)
+      // three independent chains over the cached daily frame; each rollup
+      // feeds its aggregate AND its indicator table, so it is cached
+      def grain(bucket: String, aggT: String, indT: String): () => Unit = () => {
+        val r = SilverOps.rollup(allDaily, bucket).persist(disk)
+        try {
           Storage.writeTable(r, lake.silver(aggT))
           Storage.writeTable(SilverOps.indicators(r), lake.silver(indT))
-          r.unpersist(false)
-        }
+        } finally r.unpersist(false)
       }
-      // GRAFT_SILVER_CLUSTERED=<numFiles>: lay indicators out range-
-      // clustered on ticker (narrow per-file key ranges → min/max-stat
-      // pruning for the per-ticker reads gold and the catalog do).
-      val dailyInd = Future {
-        clusteredFiles match {
+      try Jobs.overlap(spark, "silver.derived")(
+        "weekly" -> grain("week", "weekly_aggregates", "weekly_indicators"),
+        "monthly" -> grain("month", "monthly_aggregates", "monthly_indicators"),
+        // GRAFT_SILVER_CLUSTERED=<numFiles>: lay indicators out range-
+        // clustered on ticker (narrow per-file key ranges → min/max-stat
+        // pruning for the per-ticker reads gold and the catalog do).
+        "daily_indicators" -> (() => clusteredFiles match {
           case Some(n) => Storage.writeClustered(
             SilverOps.indicators(allDaily), lake.silver("daily_indicators"),
             clusterBy = Seq("ticker"), numFiles = n)
           case None => Storage.writeTable(
             SilverOps.indicators(allDaily), lake.silver("daily_indicators"))
-        }
-      }
-      Timing.stage("pipesub", "silver.derived")(
-        Await.result(Future.sequence(grains :+ dailyInd), Duration.Inf))
-    }
-    allDaily.unpersist(false)
-    if (allDaily ne daily) daily.unpersist(false)
+        }))
+      finally if (allDaily ne daily) allDaily.unpersist(false)
+    } finally daily.unpersist(false)
 
     if (full) Checkpoints.save(lake.checkpointPath,
       Checkpoints.load(lake.checkpointPath) +
@@ -277,34 +254,22 @@ object Pipeline {
     // so the indicator scan + HVC windows run once, not three times.
     val hvc = PatternOps.highVolumeCloses(ind, threshold = 1.5)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // materialize BEFORE the concurrent consumers fork (the caching
-    // doctrine: an unmaterialized cache does not dedupe in-flight work)
-    hvc.count()
-    // the four gold tables are independent consumers of two cached/read
-    // frames — submit them as CONCURRENT jobs (guide §2.6 "overlap
-    // independent jobs": each write is a small job wave with a fixed
-    // ~0.3-0.5 s commit tail; serialized, pipeline_full paid that tail
-    // four times back-to-back while most cores idled — the silver stage's
-    // derived writes already run this way)
-    locally {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val writes = Seq(
-        Future(Storage.writeTable(
-          GoldOps.vwapSignals(daily), lake.gold("vwap_signals"))),
-        Future(Storage.writeTable(hvc, lake.gold("daily_high_volume_closes"))),
-        Future(Storage.writeTable(
-          PatternOps.stairPatterns(hvc, ascending = true, minSteps = 2),
-          lake.gold("stairstepping_patterns"))),
-        Future(Storage.writeTable(
-          PatternOps.bestPatternPerTicker(
-            PatternOps.stairPatterns(hvc, ascending = false, minSteps = 2)),
-          lake.gold("falling_down_stairs_summary"))))
-      Timing.stage("pipesub", "gold.writes")(
-        Await.result(Future.sequence(writes), Duration.Inf))
-    }
-    hvc.unpersist(false)
+    try {
+      // materialize BEFORE the concurrent consumers fork (the caching
+      // doctrine: an unmaterialized cache does not dedupe in-flight work)
+      hvc.count()
+      // four independent writes, each a small job wave with a ~0.3-0.5 s
+      // commit tail that serialized would leave most cores idle
+      def write(table: String)(df: => DataFrame) =
+        table -> (() => Storage.writeTable(df, lake.gold(table)))
+      Jobs.overlap(spark, "gold.writes")(
+        write("vwap_signals")(GoldOps.vwapSignals(daily)),
+        write("daily_high_volume_closes")(hvc),
+        write("stairstepping_patterns")(
+          PatternOps.stairPatterns(hvc, ascending = true, minSteps = 2)),
+        write("falling_down_stairs_summary")(PatternOps.bestPatternPerTicker(
+          PatternOps.stairPatterns(hvc, ascending = false, minSteps = 2))))
+    } finally hvc.unpersist(false)
   }
 
   /** Clean: drop bronze (the reference's `clean` CLI). */

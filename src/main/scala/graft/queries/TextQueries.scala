@@ -423,7 +423,13 @@ object TextQueries {
     // doc_id rollup.
     // keyed on the 64-bit shingle hash, not the gram string (r12): df and
     // the join-back need gram EQUALITY only — same collision bet as every
-    // dedup verification; the df exchange and join carry 8-byte keys
+    // dedup verification; the df exchange and join carry 8-byte keys.
+    // Scale bound: unlike dedup (where a collision is re-verified), here a
+    // collision changes output — two grams sharing a key merge their df, so
+    // n_grams/n_novel are exact only while xxhash64 keeps every distinct
+    // trigram distinct. Expected colliding pairs ≈ n²/2⁶⁵ for n distinct
+    // shingles: ≪ 1 up to ~1e9, but ~3e4 at ~1e12 (100 TB corpora), where
+    // the counts turn slightly inexact.
     "q_novelty" -> ((s, dir) => {
       val shr = DedupOps.shingleHashRows(Tables.documents(s, dir), 3)
       val dfreq = shr.groupBy(col("shh")).agg(count(lit(1)).as("df"))

@@ -314,6 +314,7 @@ object StreamingOps {
                            checkpointDir: String)
   : org.apache.spark.sql.streaming.StreamingQuery = {
     import graft.operators.DedupOps
+    import graft.pipeline.Jobs
     import graft.sources.Storage
     docs.writeStream
       .option("checkpointLocation", checkpointDir)
@@ -343,9 +344,8 @@ object StreamingOps {
         // append so each write commits a handful of files, not one per
         // shuffle partition — 3 tables × 32 task-files per batch was a
         // measurable slice of the per-batch fixed cost.
-        // The three appends run CONCURRENTLY (r12, guide §2.6): each is a
-        // tiny job with a fixed commit tail, and serialized they were the
-        // dominant slice of the ~3 s/batch fixed cost. Safe because the
+        // The three appends overlap: serialized, their commit tails were
+        // the dominant slice of the ~3 s/batch fixed cost. Safe because the
         // pairing already materialized every input (pairs is counted,
         // newBands/newSets persisted — the index tables never see the
         // in-flight batch: reads filter batch_id < current), the three
@@ -354,23 +354,13 @@ object StreamingOps {
         // within the batch. "Grow the index after pairing" still holds —
         // pairing COMPUTED before any append starts; only the writes
         // overlap.
-        locally {
-          import scala.concurrent.{Await, Future}
-          import scala.concurrent.duration.Duration
-          import scala.concurrent.ExecutionContext.Implicits.global
-          Await.result(Future.sequence(Seq(
-            Future(idempotentBatchAppend(pairs.coalesce(4), pairsRef, batchId)),
-            Future(idempotentBatchAppend(
-              newBands.coalesce(4).sortWithinPartitions("bucket"),
-              bandsRef, batchId)),
-            Future(idempotentBatchAppend(
-              newSets.coalesce(4).sortWithinPartitions("doc_id"),
-              setsRef, batchId)))), Duration.Inf)
-        }
-        pairs.unpersist(false)
-        newBands.unpersist(false)
-        newSets.unpersist(false)
-        ()
+        try Jobs.overlap(s, "dedup_sink")(
+          "pairs" -> (() => idempotentBatchAppend(pairs.coalesce(4), pairsRef, batchId)),
+          "bands" -> (() => idempotentBatchAppend(
+            newBands.coalesce(4).sortWithinPartitions("bucket"), bandsRef, batchId)),
+          "sets" -> (() => idempotentBatchAppend(
+            newSets.coalesce(4).sortWithinPartitions("doc_id"), setsRef, batchId)))
+        finally Seq(pairs, newBands, newSets).foreach(_.unpersist(false))
       }
       .start()
   }

@@ -85,6 +85,21 @@ class TextOpsSpec extends SparkSpecBase {
     assert(p.getDouble(2) === 1.0)
   }
 
+  test("shingle sets: an unrelated shh column on raw rows changes nothing") {
+    val docs = Seq(
+      (1L, "the quick brown fox jumps over the lazy dog"),
+      (2L, "a completely unrelated sentence about spark engines"))
+      .toDF("doc_id", "text")
+    def sets(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getLong(0) -> (r.getSeq[Long](1), r.getLong(2))).toMap
+    val raw = DedupOps.shingleRows(docs, 3)
+    val plain = sets(DedupOps.shingleSets(raw))
+    assert(sets(DedupOps.shingleSets(raw.withColumn("shh", lit(7L)))) === plain)
+    // the explicit pre-hashed form builds the same sets
+    assert(sets(DedupOps.shingleSetsFromHashes(
+      DedupOps.shingleHashRows(docs, 3))) === plain)
+  }
+
   test("dedup index delete-then-compact == rebuild without the deleted docs") {
     // right-to-be-forgotten on the stored near-dup index: both tables are
     // keyed per-doc (signatures and shingle sets never mix docs), so the
