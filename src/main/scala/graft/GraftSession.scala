@@ -45,9 +45,26 @@ object GraftSession {
       // cluster deploy uses: --conf spark.sql.extensions=graft.GraftExtensions
       .config("spark.sql.extensions", "graft.GraftExtensions")
       .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
+      // Spark keeps compiled generated classes in one LRU per JVM, capped
+      // at 100 by default. One backfill build (bronze → silver → gold)
+      // generates ~150–160 distinct classes and a first pass over the 23
+      // catalog queries ~190–225, so under the default every warm build
+      // and pass misses and recompiles (~150 and ~90–115 Janino compiles).
+      // 1000 is ~4× the largest per-operation working set; warm builds and
+      // passes then compile 0 classes (PipelineSpec, DeclaredCatalogSpec).
+      // STATIC conf: the cache is created once per JVM at the first
+      // codegen, so a session built outside `builder` before graft's own
+      // keeps the cap of 100.
+      .config("spark.sql.codegen.cache.maxEntries", "1000")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.warehouse.dir",
         sys.env.getOrElse("SPARK_GRAFT_WAREHOUSE", "/tmp/graft_warehouse"))
+
+  /** Janino compiles so far in this JVM (driver and, under `local[N]`,
+    * task threads alike): a warm operation's delta of this is the
+    * generated classes the codegen cache failed to hold. */
+  def codegenCompiles(): Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
   def defaultCpus: Int =
     sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)

@@ -174,9 +174,13 @@ object DedupOps {
     * ⇒ row dropped, as before.
     *
     * STORED-INDEX CONTRACT (r12): persisted band indexes written before
-    * this change carry `bucket: string` — reading one with this build
-    * fails loudly at analysis (the join/pushdown types no longer line
-    * up). Rebuild stored band indexes after upgrading; the sets table
+    * this change carry `bucket: string`. Analysis does NOT catch that:
+    * under `spark.sql.ansi.enabled=false` (GraftSession) the long = string
+    * join and IN pushdown coerce, hex buckets cast to null, and the delta
+    * silently finds zero stored candidates. The incremental paths that
+    * read stored bands therefore check the type on entry
+    * ([[requireLongBuckets]]) and fail with "rebuild stored band index".
+    * Rebuild stored band indexes after upgrading; the sets table
     * (array<long>, r11) is unchanged by this round. */
   def lshBands(sigs: DataFrame, bands: Int, rowsPerBand: Int): DataFrame = {
     val bandStructs = (0 until bands).map { b =>
@@ -387,6 +391,15 @@ object DedupOps {
       stored >= delta * OverCapBloomMinRatio
   }
 
+  /** The r12 stored-band contract, checked before any stored band is read
+    * (see [[lshBands]]): a pre-r12 `bucket: string` index would otherwise
+    * coerce silently under ANSI-off and match nothing. */
+  private def requireLongBuckets(storedBands: DataFrame): Unit =
+    require(storedBands.schema("bucket").dataType ==
+        org.apache.spark.sql.types.LongType,
+      "rebuild stored band index (r12 bucket format: long), found bucket: " +
+        storedBands.schema("bucket").dataType.simpleString)
+
   def incrementalNearDupsIndexed(newDocs: DataFrame, storedBands: DataFrame,
                                  storedSets: DataFrame, k: Int = 8,
                                  bands: Int = 4, shingleN: Int = 3,
@@ -439,6 +452,7 @@ object DedupOps {
       k: Int, bands: Int, shingleN: Int, textCol: String, idCol: String,
       keepDelta: Boolean, maxPushdownKeys: Int,
       overCapBloom: Option[Boolean]): (DataFrame, DataFrame, DataFrame) = {
+    requireLongBuckets(storedBands)
     val disk = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     // every persist is tracked so a mid-flight failure (stored-table read,
     // checkpoint, verification join) releases them on the way out — without
@@ -617,6 +631,7 @@ object DedupOps {
                           storedShingles: DataFrame, k: Int = 8, bands: Int = 4,
                           shingleN: Int = 3, textCol: String = "text",
                           idCol: String = "doc_id"): DataFrame = {
+    requireLongBuckets(storedBands)
     val disk = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val shrNew = shingleRows(newDocs, shingleN, textCol, idCol).persist(disk)
     val sigs = signaturesFromShingles(newDocs, shrNew, k, idCol)

@@ -75,20 +75,25 @@ object Pipeline {
     // one shuffle on the partition key so each partition directory gets
     // exactly one writer (otherwise: |dirs| × |tasks| tiny files)
     val raw = Tables.bars(spark, sfDir)
-    val resolved = if (grain != "auto") grain else {
-      // scan-free volume estimate: optimizer stats = source file bytes;
-      // day span from footer min/max via a single-column agg
-      val bytes = raw.queryExecution.optimizedPlan.stats.sizeInBytes
-      val span = raw.agg(min(col("date")).as("lo"), max(col("date")).as("hi")).first()
-      // empty source ⇒ null min/max: degrade to the coarse grain instead of
-      // NPEing before the (empty) write
-      if (span.isNullAt(0) || span.isNullAt(1)) "month"
-      else {
-        val days = math.max(1L,
-          java.time.temporal.ChronoUnit.DAYS.between(
-            span.getDate(0).toLocalDate, span.getDate(1).toLocalDate) + 1)
+    // ONE date-span probe over the source, for every grain: its min/max
+    // size `auto`'s day count, and its max is the checkpoint high-water
+    // mark. Reading max(date) back from the written table instead costs a
+    // partition-listing job plus an aggregate, and at the `month` grain
+    // (what `auto` picks at test and bench scale) `date` is a data column
+    // there, not a partition column. Empty source ⇒ null min/max.
+    val span = raw.agg(min(col("date")), max(col("date"))).first()
+    val lastDate =
+      if (span.isNullAt(1)) None else Some(span.getDate(1).toLocalDate)
+    val resolved = if (grain != "auto") grain else lastDate match {
+      // empty source: degrade to the coarse grain instead of NPEing
+      // before the (empty) write
+      case None => "month"
+      case Some(hi) =>
+        // scan-free volume estimate: optimizer stats = source file bytes
+        val bytes = raw.queryExecution.optimizedPlan.stats.sizeInBytes
+        val days = math.max(1L, java.time.temporal.ChronoUnit.DAYS.between(
+          span.getDate(0).toLocalDate, hi) + 1)
         if (bytes / days >= BigInt(16L << 20)) "date" else "month"
-      }
     }
     val (bars, partCols) = resolved match {
       case "date"  => (raw.repartition(col("date")), Seq("date"))
@@ -102,15 +107,9 @@ object Pipeline {
         partitionBy = partCols)),
       "splits" -> (() => Storage.writeTable(
         DomainQueries.syntheticSplits(spark), lake.bronze("splits"))))
-    // checkpoint high-water mark from the WRITTEN table: `date` is its
-    // partition column there, so max(date) is answered from the partition
-    // index — probing the source instead would re-run the whole bars
-    // aggregation a second time.
-    val maxDate = Timing.stage("pipesub", "bronze.ckpt")(
-      Storage.maxDate(spark, lake.bronze("stocks")))
     Checkpoints.save(lake.checkpointPath,
       Checkpoints.load(lake.checkpointPath) +
-        ("bronze_stocks_last_date" -> maxDate.map(_.toString).getOrElse("")))
+        ("bronze_stocks_last_date" -> lastDate.map(_.toString).getOrElse("")))
   }
 
   /** Bronze ingest from a live [[graft.sources.BarsSource]] — the

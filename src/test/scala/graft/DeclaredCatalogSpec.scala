@@ -1,6 +1,6 @@
 package graft
 
-import graft.queries.DeclaredCatalog
+import graft.queries.{DeclaredCatalog, DeclaredQueries}
 
 /** Every canned query in the reference's Datasette catalog must run
   * unchanged over this engine's gold views — the switch-over contract. */
@@ -16,6 +16,21 @@ class DeclaredCatalogSpec extends SparkSpecBase {
         assert(df.columns.nonEmpty)
       }
     }
+  }
+
+  test("a warm pass over the 23 catalog queries compiles no generated classes") {
+    // a first pass generates ~225 distinct classes here; GraftSession's
+    // codegen cache cap (1000) holds them, where Spark's default of 100
+    // makes every warm pass recompile ~90
+    def pass(): Unit = {
+      DeclaredCatalog.sql.keys.foreach(DeclaredCatalog.run(spark, sf, _).collect())
+      DeclaredQueries.queries.values.foreach(_(spark, sf).collect())
+    }
+    assert(DeclaredCatalog.sql.size + DeclaredQueries.queries.size === 23)
+    pass()
+    val c0 = GraftSession.codegenCompiles()
+    pass()
+    assert(GraftSession.codegenCompiles() - c0 === 0)
   }
 
   test("catalog invariants: limits respected, union compares both directions") {

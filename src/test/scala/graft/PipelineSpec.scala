@@ -52,6 +52,30 @@ class PipelineSpec extends SparkSpecBase {
     val m = Storage.readTable(spark, lakeM.silver("daily_aggregates"))
     assert(d.except(m).count() === 0)
     assert(m.except(d).count() === 0)
+    // both grains checkpoint the written table's last date
+    for (lake <- Seq(lakeD, lakeM))
+      assert(Checkpoints.load(lake.checkpointPath)("bronze_stocks_last_date")
+        === Storage.maxDate(spark, lake.bronze("stocks")).get.toString)
+  }
+
+  test("bronze over an empty source checkpoints an empty high-water mark") {
+    val dir = Files.createTempDirectory("graft_sf_empty").toString
+    Tables.lineitem(spark, sf).limit(0).write.parquet(s"$dir/lineitem.parquet")
+    val lake = Lake(Files.createTempDirectory("graft_lake_empty").toString)
+    Pipeline.runBronze(spark, dir, lake)
+    assert(Checkpoints.load(lake.checkpointPath)("bronze_stocks_last_date")
+      === "")
+  }
+
+  test("a warm build compiles no generated classes") {
+    // one build generates ~153 distinct classes here; GraftSession's
+    // codegen cache cap (1000) holds them all, where Spark's default of 100
+    // makes every warm build recompile ~150
+    Pipeline.runAll(spark, sf, Lake(Files.createTempDirectory("graft_cg1").toString))
+    val lake = Lake(Files.createTempDirectory("graft_cg2").toString)
+    val c0 = GraftSession.codegenCompiles()
+    Pipeline.runAll(spark, sf, lake)
+    assert(GraftSession.codegenCompiles() - c0 === 0)
   }
 
   test("silver append path: no new splits → incremental, not rewrite") {

@@ -197,6 +197,31 @@ class TextOpsSpec extends SparkSpecBase {
       spark.range(1L << 26).toDF("bucket"), spark.range(1000).toDF("doc_id")))
   }
 
+  test("a stored band index with a pre-r12 string bucket fails loudly") {
+    // the pre-r12 format: md5-hex string buckets. Under ANSI-off the
+    // long = string join would coerce and silently match nothing.
+    val docs = Tables.documents(spark, sf).filter(col("doc_id") < 100)
+    val delta = Tables.documents(spark, sf)
+      .filter(col("doc_id") >= 100 && col("doc_id") < 120)
+    val dir = java.nio.file.Files.createTempDirectory("graft_idx_old").toString
+    DedupOps.writeNearDupIndex(docs,
+      _.withColumn("bucket", md5(col("bucket").cast("string")))
+        .write.parquet(s"$dir/bands"),
+      _.write.parquet(s"$dir/sets"))
+    val bands = spark.read.parquet(s"$dir/bands")
+    assert(bands.schema("bucket").dataType.simpleString === "string")
+    val indexed = intercept[IllegalArgumentException](
+      DedupOps.incrementalNearDupsIndexed(delta, bands,
+        spark.read.parquet(s"$dir/sets")))
+    assert(indexed.getMessage.contains(
+      "rebuild stored band index (r12 bucket format: long)"))
+    val (_, shingles) = DedupOps.buildBandIndex(docs)
+    val raw = intercept[IllegalArgumentException](
+      DedupOps.incrementalNearDups(delta, bands, shingles))
+    assert(raw.getMessage.contains(
+      "rebuild stored band index (r12 bucket format: long)"))
+  }
+
   test("ngram repetition: looped phrase scores high, varied text low") {
     val docs = Seq(
       (1L, "a b a b a b"),            // 2-grams: ab,ba,ab,ba,ab → 5 tot / 2 dist
