@@ -7,8 +7,6 @@ package graft
 final case class GraftConfig(
     dataStartYear: Int,
     bronzeParallelRequests: Int,
-    aggBatchTickers: Int,      // retained for API parity; the Spark engine
-    indicatorBatchTickers: Int, // does not batch (SURVEY §4) — documented no-ops
     lakeRoot: String) {
   require(bronzeParallelRequests >= 1,
     s"bronze_parallel_requests must be >= 1, got $bronzeParallelRequests")
@@ -23,8 +21,6 @@ object GraftConfig {
       dataStartYear = int("GRAFT_DATA_START_YEAR",
         java.time.LocalDate.now().getYear - 5),
       bronzeParallelRequests = int("GRAFT_BRONZE_PARALLEL", 4),
-      aggBatchTickers = int("GRAFT_AGG_BATCH", 250),
-      indicatorBatchTickers = int("GRAFT_INDICATOR_BATCH", 500),
       lakeRoot = env.getOrElse("GRAFT_LAKE_ROOT", "/tmp/graft_lake"))
   }
 }

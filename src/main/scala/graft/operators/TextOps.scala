@@ -34,10 +34,6 @@ object TextOps {
     * introduce a corpus-scale shuffle. */
   private[operators] def docParallel(docs: DataFrame,
                                      idCol: String): DataFrame = {
-    // GRAFT_DOCPAR=0 is the measurement control (the overCapBloom
-    // Some(false) pattern): profiling runs flip it to attribute deltas to
-    // this widening specifically; production leaves it unset (on).
-    if (sys.env.get("GRAFT_DOCPAR").contains("0")) return docs
     val sc = docs.sparkSession.sparkContext
     val small = docs.queryExecution.optimizedPlan.stats.sizeInBytes <
       BigInt(sc.defaultParallelism.toLong * (4L << 20))

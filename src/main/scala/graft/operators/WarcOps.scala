@@ -15,8 +15,9 @@ import org.apache.spark.sql.types._
   * via java.util.zip, exact Content-Length octets) around the fixture
   * corpus; [[decodeWarc]] is a REAL parser: multi-member GZIP inflate,
   * header-block scan, Content-Length-driven body extraction, one output
-  * row per record. Both run partition-at-a-time — the object-store batch
-  * shape of every op in [[MultimodalOps]].
+  * row per record. Both run partition-at-a-time: typed `mapPartitions` /
+  * `flatMap` over whole blobs with an explicit row encoder, each task
+  * streaming many payloads — the object-store batch shape.
   */
 object WarcOps {
 

@@ -1,14 +1,14 @@
 package graft.queries
 
 import graft.Tables
-import graft.operators.{DedupOps, MultimodalOps, SimilarityOps, TextOps}
+import graft.operators.{DedupOps, SimilarityOps, TextOps}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 /** Training-data pipeline operators (dedup / similarity / text analysis /
-  * multimodal) over the `documents` and `embeddings` fixtures, each with a
+  * WARC) over the `documents` and `embeddings` fixtures, each with a
   * DuckDB oracle that rebuilds the identical md5-derived hashing.
   */
 object TextQueries {
@@ -1258,32 +1258,6 @@ object TextQueries {
       graft.functions.Sketches.kmvDistinct(
         Tables.documents(s, dir), "lang", "source", k = 64)),
 
-    "q_mm_meta" -> ((s, dir) =>
-      MultimodalOps.payloadMetadata(
-        MultimodalOps.withPayload(Tables.documents(s, dir)))
-        .select(col("doc_id"), col("n_bytes"), col("digest"), col("magic"))),
-
-    "q_mm_frames" -> ((s, dir) =>
-      MultimodalOps.frameSample(
-        MultimodalOps.withPayload(Tables.documents(s, dir)))),
-
-    // resize: fixed-width strided downsample of the payload (the image-
-    // resize contract with a deterministic byte stride standing in for the
-    // codec's scaler).
-    "q_mm_resize" -> ((s, dir) =>
-      MultimodalOps.resizePayload(
-        MultimodalOps.withPayload(Tables.documents(s, dir)))),
-
-    // REAL image decode: encode each doc as an uncompressed 24-bit BMP
-    // (closed-form pixels), then parse the actual bytes back — header
-    // fields, stride padding, bottom-up rows, per-channel stats. The
-    // oracle replays the pixel formulas, so a decoder bug (endianness,
-    // stride, row order — the top-left pixel lives in the LAST stored
-    // row) breaks the hash. mapPartitions batch shape end to end.
-    "q_mm_decode" -> ((s, dir) =>
-      MultimodalOps.decodeBmp(
-        MultimodalOps.encodeBmp(Tables.documents(s, dir)))),
-
     // REAL WARC parse — the Common Crawl container: per-record gzip
     // members inflated through the multi-member stream, CRLF header-block
     // scan, Content-Length-octet body slice, terminator required. The
@@ -1291,193 +1265,7 @@ object TextQueries {
     // a mis-sliced body or a skipped record breaks the hash.
     "q_warc_parse" -> ((s, dir) =>
       graft.operators.WarcOps.decodeWarc(
-        graft.operators.WarcOps.encodeWarc(Tables.documents(s, dir)))),
-
-    // REAL PDF text extraction — startxref → xref walk → catalog/pages/
-    // page/content object graph (every xref offset validated against the
-    // object it claims), FlateDecode inflate on even doc_ids, BT/ET scan
-    // over Tj and TJ (alternated per page) with the full literal escape
-    // set. Pages carry consecutive 256-BYTE slices of the UTF-8 text, so
-    // the oracle replays n_pages and the byte-exact text from the corpus
-    // column: a mis-resolved object, a broken escape, or a dropped page
-    // breaks the hash.
-    "q_pdf_extract" -> ((s, dir) =>
-      graft.operators.PdfOps.extractPdfText(
-        graft.operators.PdfOps.encodePdf(Tables.documents(s, dir)))),
-
-    // REAL MP3 frame-header walk (metadata-level: sync/version/layer
-    // bits, ISO bitrate/samplerate tables, the 144·br/sr+pad frame-length
-    // law, ID3v2 syncsafe skip, CBR consistency) — the fingerprint-or-
-    // skip pass for crawled audio. Every field is closed-form in doc_id,
-    // so a mis-hopped frame, a wrong table row, or a mis-sized ID3 skip
-    // breaks the hash.
-    "q_mp3_frames" -> ((s, dir) =>
-      graft.operators.Mp3Ops.parseMp3Frames(
-        graft.operators.Mp3Ops.encodeMp3(Tables.documents(s, dir)))),
-
-    // Media format routing — the ingest front door: magic-byte sniffing
-    // as a PURE codegen expression (binary substring compares, zero
-    // shuffle) over a mixed fixture built by all nine real encoders
-    // (doc_id mod 9), so the router is exercised against every container
-    // this repo writes and the oracle is closed-form.
-    "q_media_sniff" -> ((s, dir) =>
-      graft.operators.MediaRouter
-        .encodeMixed(Tables.documents(s, dir))
-        .select(col("doc_id"),
-          graft.operators.MediaRouter.sniffFormat(col("payload"))
-            .as("format"))),
-
-    // The WHOLE media tier composed under one hash: sniff → dispatch to
-    // the real parser → normalize each format's primary integer fact
-    // (pixels/samples/frames/duration/pages/records). A wrong route
-    // throws in the misrouted decoder; a wrong parse mismatches units.
-    "q_media_route" -> ((s, dir) =>
-      graft.operators.MediaRouter.routeUnits(
-        graft.operators.MediaRouter.encodeMixed(Tables.documents(s, dir)))),
-
-    // REAL GIF87a decode — the fourth image codec, with a genuinely
-    // different decompression algorithm: variable-code-width LZW
-    // (LSB-first bit reader across sub-block boundaries, dictionary
-    // growth + code-width escalation, CLEAR/EOI, KwKwK). Palette and
-    // pixel indices are closed-form, so a wrong LZW step, palette read
-    // or scan order breaks the hash.
-    "q_gif_decode" -> ((s, dir) =>
-      graft.operators.GifOps.decodeGif(
-        graft.operators.GifOps.encodeGif(Tables.documents(s, dir)))),
-
-    // GIF image-dedup fingerprint: aHash over the DECODED palette pixels
-    // (per-pixel integer luma vs the image total, no division, LSB-first
-    // raster pack) — the palette-format member of the format-agnostic
-    // aHash family, so GIF payloads feed the same banded-Hamming
-    // near-dup pass as BMP/PNG/JPEG.
-    "q_gif_phash" -> ((s, dir) =>
-      graft.operators.GifOps.aHashGif(
-        graft.operators.GifOps.encodeGif(Tables.documents(s, dir)))),
-
-    // REAL ISO-BMFF (MP4) box walk — the video leg of the metadata
-    // triad: big-endian length-prefixed boxes with container recursion
-    // (moov/trak/mdia), ftyp-first validation, spec-shaped mvhd/tkhd/
-    // hdlr offsets, every box required to fit its parent. All fields
-    // closed-form in doc_id — a mis-walked container or a wrong offset
-    // breaks the hash.
-    "q_mp4_boxes" -> ((s, dir) =>
-      graft.operators.Mp4Ops.parseMp4Boxes(
-        graft.operators.Mp4Ops.encodeMp4(Tables.documents(s, dir)))),
-
-    // REAL compressed-image decode: PNG with zlib DEFLATE and the five
-    // scanline filters (cycled per row, so every reconstruction branch
-    // runs), chunk CRC32s validated. The oracle replays the pixel closed
-    // forms — a wrong filter inverse, a missed big-endian field, or a
-    // broken inflate scrambles the means/top-left and fails the hash.
-    "q_png_decode" -> ((s, dir) =>
-      MultimodalOps.decodePng(
-        MultimodalOps.encodePng(Tables.documents(s, dir)))),
-
-    // Grayscale PNG (color type 0): one channel per pixel, so the
-    // Sub/Paeth LEFT offset is 1 byte — a different reconstruction
-    // geometry than RGB's 3. Stats replicate the single channel.
-    "q_png_gray_decode" -> ((s, dir) =>
-      MultimodalOps.decodePng(
-        MultimodalOps.encodePngGray(Tables.documents(s, dir)))),
-
-    // RGBA PNG (color type 6 — web transparency): the alpha plane rides
-    // the 4-byte filter geometry, so a wrong bpp corrupts the RGB
-    // reconstruction even though the emitted stats are RGB-only.
-    "q_png_rgba_decode" -> ((s, dir) =>
-      MultimodalOps.decodePng(
-        MultimodalOps.encodePngRgba(Tables.documents(s, dir)))),
-
-    // REAL lossy-codec decode: baseline JFIF — Huffman (canonical
-    // BITS/HUFFVAL), DC DPCM + extend, AC run/size with ZRL/EOB, zigzag,
-    // dequantize, full 64-term IDCT, JFIF YCbCr→RGB, 0xFF00 unstuffing.
-    // The fixture mosaic's DC quantization is exact (see MultimodalOps),
-    // so the lossy round-trip is bit-deterministic and the oracle replays
-    // the per-block closed forms; the nonzero-AC general path is pinned
-    // against the JDK's independent ImageIO decoder in TextOpsSpec.
-    "q_jpeg_decode" -> ((s, dir) =>
-      MultimodalOps.decodeJpeg(
-        MultimodalOps.encodeJpeg(Tables.documents(s, dir)))),
-
-    // 4:2:0 chroma subsampling — the profile real crawled JPEGs actually
-    // use: interleaved 16×16 MCUs (4 luma + Cb + Cr blocks), luma DPCM
-    // threading through four blocks per MCU, chroma planes decoded at
-    // half rate and upsampled by replication. Luma varies per 8×8 block;
-    // chroma is constant per image so the 2× downsample is lossless and
-    // the oracle replays the closed forms exactly.
-    "q_jpeg420_decode" -> ((s, dir) =>
-      MultimodalOps.decodeJpeg(
-        MultimodalOps.encodeJpeg420(Tables.documents(s, dir)))),
-
-    // Restart markers (DRI/RSTn) — the resilience feature real encoders
-    // emit routinely: the scan byte-aligns at every 2-MCU boundary, the
-    // decoder skips the stuffed 1-bit padding, checks the marker index
-    // cycles 0..7 IN ORDER, and resets every DPCM predictor. Both sides
-    // reset, so the pixels are exactly q_jpeg_decode's closed forms —
-    // identical oracle, different entropy-stream geometry.
-    "q_jpeg_rst_decode" -> ((s, dir) =>
-      MultimodalOps.decodeJpeg(
-        MultimodalOps.encodeJpegRst(Tables.documents(s, dir)))),
-
-    // Grayscale single-component JPEG — the scanned-document/OCR corpus
-    // profile: SOF/SOS declare one component, no chroma planes are
-    // decoded, and the pixel is Y itself (R=G=B, no color matrix, so no
-    // rounding either — the luma closed form IS the channel value).
-    "q_jpeg_gray_decode" -> ((s, dir) =>
-      MultimodalOps.decodeJpeg(
-        MultimodalOps.encodeJpegGray(Tables.documents(s, dir)))),
-
-    // Average-hash over DECODED JPEG pixels — the image-dedup
-    // fingerprint on the compressed format crawled images arrive in:
-    // the 8×8-block lattice is the downsample grid, per-block integer
-    // luma sums thresholded against the image total (blockSum·n >
-    // total — no division), packed LSB-first in block raster order.
-    // The mosaic decode is bit-exact, so the oracle replays block
-    // luma = (r+g+b)·64 from the closed forms and the full bit math.
-    "q_jpeg_phash" -> ((s, dir) =>
-      MultimodalOps.aHashJpeg(
-        MultimodalOps.encodeJpeg(Tables.documents(s, dir)))),
-
-    // Perceptual average-hash over the REAL decoded BMP bytes: per-pixel
-    // luma vs the exact image mean (luma·n > Σluma — no division), packed
-    // LSB-first in image row-major order. The oracle replays the pixel
-    // closed form, so any decode-layout bug (row order, stride,
-    // endianness) scrambles the bit positions and the hash.
-    "q_phash" -> ((s, dir) =>
-      MultimodalOps.aHash(
-        MultimodalOps.encodeBmp(Tables.documents(s, dir)))),
-
-    // Image near-dup pairs via banded Hamming join over the perceptual
-    // hashes — banding exact at maxDist=2 < 4 bands, dimension-matched
-    // buckets only.
-    "q_phash_neardup" -> ((s, dir) =>
-      MultimodalOps.aHashNearDups(
-        MultimodalOps.aHash(
-          MultimodalOps.encodeBmp(Tables.documents(s, dir))))),
-
-    // REAL audio decode: each doc becomes a mono 16-bit PCM WAV (RIFF
-    // container, closed-form waveform), parsed back byte-for-byte —
-    // header fields, little-endian int16 frames, integer waveform
-    // features (peak / exact sum / Σs² energy / sign-change zero
-    // crossings). All-integer outputs: the oracle replays the waveform
-    // formula with no rounding doctrine at all.
-    "q_wav_decode" -> ((s, dir) =>
-      MultimodalOps.decodeWav(
-        MultimodalOps.encodeWav(Tables.documents(s, dir)))),
-
-    // Framed Σs² energy (16-sample frames) — the spectrogram-prep slicing
-    // over the same decoded bytes.
-    "q_wav_frames" -> ((s, dir) =>
-      MultimodalOps.wavFrameEnergy(
-        MultimodalOps.encodeWav(Tables.documents(s, dir)))),
-
-    // Audio dedup fingerprint — the waveform sibling of q_jpeg_phash:
-    // one bit per energy frame, set iff the frame beats the per-sample
-    // mean energy (cross-multiplied so the partial last frame weighs
-    // correctly, all-integer), LSB-first. The oracle replays the
-    // closed-form waveform through the identical bit math.
-    "q_wav_fingerprint" -> ((s, dir) =>
-      MultimodalOps.wavFingerprint(
-        MultimodalOps.encodeWav(Tables.documents(s, dir))))
+        graft.operators.WarcOps.encodeWarc(Tables.documents(s, dir))))
   )
 
   // ---- oracle SQL ----------------------------------------------------------
@@ -3495,64 +3283,6 @@ object TextQueries {
         |  COALESCE(l.label, em.vec_id) = em.vec_id AS is_kept
         |FROM embeddings em LEFT JOIN labels l ON l.id = em.vec_id""".stripMargin),
 
-    "q_mm_frames" ->
-      """WITH hx AS (SELECT doc_id, hex(CAST(text AS BLOB)) AS hexp FROM documents)
-        |SELECT doc_id, CAST(i AS INTEGER) AS frame_idx,
-        |  CAST(length(substr(hexp, CAST(i * 128 + 1 AS BIGINT), 128)) // 2 AS INTEGER) AS frame_len,
-        |  md5(substr(hexp, CAST(i * 128 + 1 AS BIGINT), 128)) AS frame_digest
-        |FROM hx CROSS JOIN range(0, 64) t(i)
-        |WHERE i * 128 < length(hexp)""".stripMargin,
-
-    "q_mm_resize" ->
-      """WITH hx AS (
-        |  SELECT doc_id, hex(CAST(text AS BLOB)) AS hexp,
-        |         octet_length(CAST(text AS BLOB)) AS n
-        |  FROM documents),
-        |p AS (
-        |  SELECT doc_id, n,
-        |    CASE WHEN n >= 32 THEN
-        |      list_aggr(list_transform(range(0, 32),
-        |        i -> substr(hexp, CAST(FLOOR(i * n / 32.0) AS INT) * 2 + 1, 2)),
-        |        'string_agg', '')
-        |    ELSE rpad(hexp, 64, '20') END AS rhex
-        |  FROM hx)
-        |SELECT doc_id, CAST(n AS INTEGER) AS n_bytes,
-        |  CAST(length(rhex) // 2 AS INTEGER) AS resized_len,
-        |  md5(rhex) AS resized_digest
-        |FROM p""".stripMargin,
-
-    "q_mm_meta" ->
-      """SELECT doc_id,
-        |  CAST(octet_length(CAST(text AS BLOB)) AS INTEGER) AS n_bytes,
-        |  md5(text) AS digest,
-        |  substr(hex(CAST(text AS BLOB)), 1, 8) AS magic
-        |FROM documents""".stripMargin,
-
-    // replay of the BMP pixel formulas — the Spark side must reproduce
-    // these by PARSING the actual bytes it encoded (header, stride,
-    // bottom-up rows); px_* pin the top-left pixel, which lives in the
-    // LAST stored row
-    "q_mm_decode" ->
-      """WITH d AS (
-        |  SELECT doc_id,
-        |    CAST(4 + doc_id % 5 AS INTEGER) AS width,
-        |    CAST(4 + doc_id % 3 AS INTEGER) AS height
-        |  FROM documents),
-        |px AS (
-        |  SELECT d.doc_id, d.width, d.height, CAST(t.i AS BIGINT) AS k
-        |  FROM d CROSS JOIN range(0, 48) t(i)
-        |  WHERE t.i < d.width * d.height)
-        |SELECT doc_id,
-        |  CAST(54 + ((3 * width + 3) // 4) * 4 * height AS INTEGER) AS n_bytes,
-        |  width, height, CAST(24 AS INTEGER) AS bpp,
-        |  CAST((doc_id * 7) % 256 AS INTEGER) AS px_b,
-        |  CAST((doc_id * 11) % 256 AS INTEGER) AS px_g,
-        |  CAST((doc_id * 3) % 256 AS INTEGER) AS px_r,
-        |  ROUND(AVG((doc_id * 7 + k * 13) % 256), 6) AS mean_b,
-        |  ROUND(AVG((doc_id * 11 + k * 17) % 256), 6) AS mean_g,
-        |  ROUND(AVG((doc_id * 3 + k * 19) % 256), 6) AS mean_r
-        |FROM px GROUP BY doc_id, width, height""".stripMargin,
-
     "q_warc_parse" ->
       """WITH d AS (SELECT doc_id, text, lang FROM documents)
         |SELECT doc_id, CAST(0 AS INT) AS seq, 'response' AS rec_type,
@@ -3564,484 +3294,6 @@ object TextQueries {
         |SELECT doc_id, CAST(1 AS INT), 'metadata',
         |  'https://example.com/doc/' || doc_id,
         |  CAST(strlen('lang=' || lang) AS INT), md5('lang=' || lang)
-        |FROM d""".stripMargin,
-
-    "q_pdf_extract" ->
-      """SELECT doc_id,
-        |  CAST(GREATEST(1, CEIL(strlen(text) / 256.0)) AS INT) AS n_pages,
-        |  (doc_id % 2 = 0) AS flate,
-        |  text AS pdf_text
-        |FROM documents""".stripMargin,
-
-    "q_mp3_frames" ->
-      """WITH d AS (
-        |  SELECT doc_id,
-        |    CAST(2 + doc_id % 7 AS BIGINT) AS n,
-        |    list_extract([32,40,48,56,64,80,96,112,128,160,192,224,256,320],
-        |      CAST(doc_id % 14 AS INT) + 1) AS br,
-        |    list_extract([44100,48000,32000],
-        |      CAST(doc_id % 3 AS INT) + 1) AS sr,
-        |    CASE WHEN doc_id % 3 = 0 THEN 30 + doc_id % 30 ELSE 0 END AS id3
-        |  FROM documents),
-        |p AS (
-        |  SELECT *,
-        |    n // 2 + CASE WHEN doc_id % 2 = 1 THEN n % 2 ELSE 0 END AS pad
-        |  FROM d)
-        |SELECT doc_id,
-        |  CAST(n AS INT) AS n_frames,
-        |  CAST(br AS INT) AS bitrate_kbps,
-        |  CAST(sr AS INT) AS sample_rate,
-        |  CAST(pad AS INT) AS padded_frames,
-        |  CAST(id3 AS INT) AS id3_bytes,
-        |  CAST(id3 + n * ((144000 * br) // sr) + pad AS BIGINT) AS total_bytes,
-        |  (n * 1152) * 1000.0 / sr AS duration_ms
-        |FROM p""".stripMargin,
-
-    "q_media_sniff" ->
-      """SELECT doc_id,
-        |  CASE CAST(doc_id % 9 AS INT)
-        |    WHEN 0 THEN 'bmp' WHEN 1 THEN 'png' WHEN 2 THEN 'jpeg'
-        |    WHEN 3 THEN 'gif' WHEN 4 THEN 'wav' WHEN 5 THEN 'mp3'
-        |    WHEN 6 THEN 'mp4' WHEN 7 THEN 'pdf' ELSE 'warc_gz'
-        |  END AS format
-        |FROM documents""".stripMargin,
-
-    "q_media_route" ->
-      """SELECT doc_id,
-        |  CASE CAST(doc_id % 9 AS INT)
-        |    WHEN 0 THEN 'bmp' WHEN 1 THEN 'png' WHEN 2 THEN 'jpeg'
-        |    WHEN 3 THEN 'gif' WHEN 4 THEN 'wav' WHEN 5 THEN 'mp3'
-        |    WHEN 6 THEN 'mp4' WHEN 7 THEN 'pdf' ELSE 'warc_gz'
-        |  END AS format,
-        |  CAST(CASE CAST(doc_id % 9 AS INT)
-        |    WHEN 0 THEN (4 + doc_id % 5) * (4 + doc_id % 3)
-        |    WHEN 1 THEN (4 + doc_id % 5) * (4 + doc_id % 3)
-        |    WHEN 2 THEN 8 * (1 + doc_id % 3) * 8 * (1 + doc_id % 2)
-        |    WHEN 3 THEN (4 + doc_id % 5) * (4 + doc_id % 3)
-        |    WHEN 4 THEN 32 + doc_id % 17
-        |    WHEN 5 THEN 2 + doc_id % 7
-        |    WHEN 6 THEN (3 + doc_id % 10) * (600 * (1 + doc_id % 4))
-        |      + (doc_id % 7) * 30
-        |    WHEN 7 THEN GREATEST(1, CAST(CEIL(strlen(text) / 256.0) AS BIGINT))
-        |    ELSE 2
-        |  END AS BIGINT) AS units
-        |FROM documents""".stripMargin,
-
-    "q_gif_decode" ->
-      """WITH d AS (
-        |  SELECT doc_id,
-        |    CAST(4 + doc_id % 5 AS INTEGER) AS width,
-        |    CAST(4 + doc_id % 3 AS INTEGER) AS height
-        |  FROM documents),
-        |px AS (
-        |  SELECT d.doc_id, d.width, d.height, CAST(t.i AS BIGINT) AS k
-        |  FROM d CROSS JOIN range(0, 48) t(i)
-        |  WHERE t.i < d.width * d.height)
-        |SELECT doc_id, width, height,
-        |  CAST(16 AS INTEGER) AS palette_size,
-        |  CAST(16 * (doc_id % 16) AS INTEGER) AS px_r,
-        |  CAST(255 - 16 * (doc_id % 16) AS INTEGER) AS px_g,
-        |  CAST((37 * (doc_id % 16)) % 256 AS INTEGER) AS px_b,
-        |  ROUND(AVG(16 * ((doc_id + 7 * k) % 16)), 6) AS mean_r,
-        |  ROUND(AVG(255 - 16 * ((doc_id + 7 * k) % 16)), 6) AS mean_g,
-        |  ROUND(AVG((37 * ((doc_id + 7 * k) % 16)) % 256), 6) AS mean_b
-        |FROM px GROUP BY doc_id, width, height""".stripMargin,
-
-    "q_gif_phash" ->
-      """WITH d AS (
-        |  SELECT doc_id, CAST(4 + doc_id % 5 AS INTEGER) AS w,
-        |    CAST(4 + doc_id % 3 AS INTEGER) AS h
-        |  FROM documents),
-        |px AS (
-        |  SELECT doc_id, w, h, CAST(k AS INTEGER) AS k,
-        |    255 + (37 * ((doc_id + 7 * k) % 16)) % 256 AS luma
-        |  FROM d, UNNEST(generate_series(0, w*h - 1)) AS t(k)),
-        |agg AS (
-        |  SELECT doc_id, COUNT(*) AS n, SUM(luma) AS total
-        |  FROM px GROUP BY 1)
-        |SELECT p.doc_id, p.w, p.h, CAST(a.n AS INTEGER) AS n_px,
-        |  CAST(SUM(CASE WHEN p.luma * a.n > a.total
-        |    THEN (CAST(1 AS BIGINT) << p.k) ELSE 0 END) AS BIGINT) AS ahash
-        |FROM px p JOIN agg a ON p.doc_id = a.doc_id
-        |GROUP BY 1, 2, 3, 4""".stripMargin,
-
-    "q_mp4_boxes" ->
-      """WITH d AS (
-        |  SELECT doc_id,
-        |    CAST(600 * (1 + doc_id % 4) AS BIGINT) AS ts,
-        |    CAST(1 + doc_id % 3 AS BIGINT) AS n
-        |  FROM documents),
-        |p AS (
-        |  SELECT doc_id, ts, n,
-        |    (3 + doc_id % 10) * ts + (doc_id % 7) * 30 AS dur,
-        |    n // 2 + CASE WHEN doc_id % 2 = 0 THEN n % 2 ELSE 0 END AS nv
-        |  FROM d)
-        |SELECT doc_id,
-        |  'isom' AS brand,
-        |  CAST(ts AS INT) AS timescale,
-        |  CAST(dur AS BIGINT) AS duration_units,
-        |  dur * 1000.0 / ts AS duration_ms,
-        |  CAST(n AS INT) AS n_tracks,
-        |  CAST(nv AS INT) AS n_video,
-        |  CAST(n - nv AS INT) AS n_audio,
-        |  CAST(16 + doc_id % 100 AS INT) AS mdat_bytes,
-        |  CAST(160 + 141 * n + doc_id % 100 AS BIGINT) AS total_bytes
-        |FROM p""".stripMargin,
-
-    "q_png_decode" ->
-      """WITH d AS (
-        |  SELECT doc_id,
-        |    CAST(4 + doc_id % 5 AS INTEGER) AS width,
-        |    CAST(4 + doc_id % 3 AS INTEGER) AS height
-        |  FROM documents),
-        |px AS (
-        |  SELECT d.doc_id, d.width, d.height, CAST(t.i AS BIGINT) AS k
-        |  FROM d CROSS JOIN range(0, 48) t(i)
-        |  WHERE t.i < d.width * d.height)
-        |SELECT doc_id, width, height,
-        |  CAST(8 AS INTEGER) AS bit_depth, CAST(2 AS INTEGER) AS color_type,
-        |  CAST(height * (1 + 3 * width) AS INTEGER) AS n_raw,
-        |  CAST((doc_id * 3) % 256 AS INTEGER) AS px_r,
-        |  CAST((doc_id * 11) % 256 AS INTEGER) AS px_g,
-        |  CAST((doc_id * 7) % 256 AS INTEGER) AS px_b,
-        |  ROUND(AVG((doc_id * 3 + k * 19) % 256), 6) AS mean_r,
-        |  ROUND(AVG((doc_id * 11 + k * 17) % 256), 6) AS mean_g,
-        |  ROUND(AVG((doc_id * 7 + k * 13) % 256), 6) AS mean_b
-        |FROM px GROUP BY doc_id, width, height""".stripMargin,
-
-    // grayscale PNG: single channel replicated into all three outputs
-    "q_png_gray_decode" ->
-      """WITH d AS (
-        |  SELECT doc_id,
-        |    CAST(4 + doc_id % 5 AS INTEGER) AS width,
-        |    CAST(4 + doc_id % 3 AS INTEGER) AS height
-        |  FROM documents),
-        |px AS (
-        |  SELECT d.doc_id, d.width, d.height, CAST(t.i AS BIGINT) AS k
-        |  FROM d CROSS JOIN range(0, 48) t(i)
-        |  WHERE t.i < d.width * d.height)
-        |SELECT doc_id, width, height,
-        |  CAST(8 AS INTEGER) AS bit_depth, CAST(0 AS INTEGER) AS color_type,
-        |  CAST(height * (1 + width) AS INTEGER) AS n_raw,
-        |  CAST((doc_id * 5) % 256 AS INTEGER) AS px_r,
-        |  CAST((doc_id * 5) % 256 AS INTEGER) AS px_g,
-        |  CAST((doc_id * 5) % 256 AS INTEGER) AS px_b,
-        |  ROUND(AVG((doc_id * 5 + k * 23) % 256), 6) AS mean_r,
-        |  ROUND(AVG((doc_id * 5 + k * 23) % 256), 6) AS mean_g,
-        |  ROUND(AVG((doc_id * 5 + k * 23) % 256), 6) AS mean_b
-        |FROM px GROUP BY doc_id, width, height""".stripMargin,
-
-    // RGBA PNG: RGB closed forms as q_png_decode, n_raw at 4 B/px
-    "q_png_rgba_decode" ->
-      """WITH d AS (
-        |  SELECT doc_id,
-        |    CAST(4 + doc_id % 5 AS INTEGER) AS width,
-        |    CAST(4 + doc_id % 3 AS INTEGER) AS height
-        |  FROM documents),
-        |px AS (
-        |  SELECT d.doc_id, d.width, d.height, CAST(t.i AS BIGINT) AS k
-        |  FROM d CROSS JOIN range(0, 48) t(i)
-        |  WHERE t.i < d.width * d.height)
-        |SELECT doc_id, width, height,
-        |  CAST(8 AS INTEGER) AS bit_depth, CAST(6 AS INTEGER) AS color_type,
-        |  CAST(height * (1 + 4 * width) AS INTEGER) AS n_raw,
-        |  CAST((doc_id * 3) % 256 AS INTEGER) AS px_r,
-        |  CAST((doc_id * 11) % 256 AS INTEGER) AS px_g,
-        |  CAST((doc_id * 7) % 256 AS INTEGER) AS px_b,
-        |  ROUND(AVG((doc_id * 3 + k * 19) % 256), 6) AS mean_r,
-        |  ROUND(AVG((doc_id * 11 + k * 17) % 256), 6) AS mean_g,
-        |  ROUND(AVG((doc_id * 7 + k * 13) % 256), 6) AS mean_b
-        |FROM px GROUP BY doc_id, width, height""".stripMargin,
-
-    // JPEG: per-8×8-block constant mosaic with exact DC quantization —
-    // the decode is bit-deterministic, so the oracle replays block YCbCr
-    // closed forms + the JFIF color matrix with floor(x+0.5) rounding
-    // (the decoder's documented contract). Pixel means equal block means
-    // exactly (equal 64-px blocks; scaling num/den by 2^6 is IEEE-exact).
-    "q_jpeg_decode" ->
-      """WITH d AS (
-        |  SELECT doc_id,
-        |    CAST(8 * (1 + doc_id % 3) AS INTEGER) AS width,
-        |    CAST(8 * (1 + doc_id % 2) AS INTEGER) AS height
-        |  FROM documents),
-        |blk AS (
-        |  SELECT d.doc_id, d.width, d.height, CAST(t.i AS BIGINT) AS b
-        |  FROM d CROSS JOIN range(0, 6) t(i)
-        |  WHERE t.i < (d.width // 8) * (d.height // 8)),
-        |ycc AS (
-        |  SELECT doc_id, width, height, b,
-        |    76 + 2 * ((doc_id * 7 + b * 13) % 53) AS y,
-        |    17 * (((doc_id * 11 + b * 17) % 9) - 4) AS cb,
-        |    17 * (((doc_id * 3 + b * 19) % 9) - 4) AS cr
-        |  FROM blk),
-        |rgb AS (
-        |  SELECT doc_id, width, height, b,
-        |    GREATEST(0, LEAST(255, FLOOR(y + 1.402 * cr + 0.5))) AS r,
-        |    GREATEST(0, LEAST(255,
-        |      FLOOR(y - 0.344136 * cb - 0.714136 * cr + 0.5))) AS g,
-        |    GREATEST(0, LEAST(255, FLOOR(y + 1.772 * cb + 0.5))) AS bb
-        |  FROM ycc)
-        |SELECT doc_id, width, height,
-        |  CAST((width // 8) * (height // 8) AS INTEGER) AS n_blocks,
-        |  CAST(MAX(CASE WHEN b = 0 THEN r END) AS INTEGER) AS px_r,
-        |  CAST(MAX(CASE WHEN b = 0 THEN g END) AS INTEGER) AS px_g,
-        |  CAST(MAX(CASE WHEN b = 0 THEN bb END) AS INTEGER) AS px_b,
-        |  ROUND(AVG(r), 6) AS mean_r,
-        |  ROUND(AVG(g), 6) AS mean_g,
-        |  ROUND(AVG(bb), 6) AS mean_b
-        |FROM rgb GROUP BY doc_id, width, height""".stripMargin,
-
-    // 4:2:0: luma per 8x8 block (raster index), chroma constant per image
-    // (lossless 2x downsample), same color matrix + floor rounding
-    "q_jpeg420_decode" ->
-      """WITH d AS (
-        |  SELECT doc_id,
-        |    CAST(16 * (1 + doc_id % 3) AS INTEGER) AS width,
-        |    CAST(16 * (1 + doc_id % 2) AS INTEGER) AS height,
-        |    17 * (((doc_id * 11) % 9) - 4) AS cb,
-        |    17 * (((doc_id * 3) % 9) - 4) AS cr
-        |  FROM documents),
-        |blk AS (
-        |  SELECT d.doc_id, d.width, d.height, d.cb, d.cr,
-        |    CAST(t.i AS BIGINT) AS lb
-        |  FROM d CROSS JOIN range(0, 24) t(i)
-        |  WHERE t.i < (d.width // 8) * (d.height // 8)),
-        |ycc AS (
-        |  SELECT doc_id, width, height, lb, cb, cr,
-        |    76 + 2 * ((doc_id * 7 + lb * 13) % 53) AS y
-        |  FROM blk),
-        |rgb AS (
-        |  SELECT doc_id, width, height, lb,
-        |    GREATEST(0, LEAST(255, FLOOR(y + 1.402 * cr + 0.5))) AS r,
-        |    GREATEST(0, LEAST(255,
-        |      FLOOR(y - 0.344136 * cb - 0.714136 * cr + 0.5))) AS g,
-        |    GREATEST(0, LEAST(255, FLOOR(y + 1.772 * cb + 0.5))) AS bb
-        |  FROM ycc)
-        |SELECT doc_id, width, height,
-        |  CAST((width // 8) * (height // 8) AS INTEGER) AS n_blocks,
-        |  CAST(MAX(CASE WHEN lb = 0 THEN r END) AS INTEGER) AS px_r,
-        |  CAST(MAX(CASE WHEN lb = 0 THEN g END) AS INTEGER) AS px_g,
-        |  CAST(MAX(CASE WHEN lb = 0 THEN bb END) AS INTEGER) AS px_b,
-        |  ROUND(AVG(r), 6) AS mean_r,
-        |  ROUND(AVG(g), 6) AS mean_g,
-        |  ROUND(AVG(bb), 6) AS mean_b
-        |FROM rgb GROUP BY doc_id, width, height""".stripMargin,
-
-    // restart markers change the entropy-stream geometry, not the
-    // pixels: both sides reset DPCM at every boundary, so the oracle is
-    // exactly q_jpeg_decode's closed-form replay
-    "q_jpeg_rst_decode" ->
-      """WITH d AS (
-        |  SELECT doc_id,
-        |    CAST(8 * (1 + doc_id % 3) AS INTEGER) AS width,
-        |    CAST(8 * (1 + doc_id % 2) AS INTEGER) AS height
-        |  FROM documents),
-        |blk AS (
-        |  SELECT d.doc_id, d.width, d.height, CAST(t.i AS BIGINT) AS b
-        |  FROM d CROSS JOIN range(0, 6) t(i)
-        |  WHERE t.i < (d.width // 8) * (d.height // 8)),
-        |ycc AS (
-        |  SELECT doc_id, width, height, b,
-        |    76 + 2 * ((doc_id * 7 + b * 13) % 53) AS y,
-        |    17 * (((doc_id * 11 + b * 17) % 9) - 4) AS cb,
-        |    17 * (((doc_id * 3 + b * 19) % 9) - 4) AS cr
-        |  FROM blk),
-        |rgb AS (
-        |  SELECT doc_id, width, height, b,
-        |    GREATEST(0, LEAST(255, FLOOR(y + 1.402 * cr + 0.5))) AS r,
-        |    GREATEST(0, LEAST(255,
-        |      FLOOR(y - 0.344136 * cb - 0.714136 * cr + 0.5))) AS g,
-        |    GREATEST(0, LEAST(255, FLOOR(y + 1.772 * cb + 0.5))) AS bb
-        |  FROM ycc)
-        |SELECT doc_id, width, height,
-        |  CAST((width // 8) * (height // 8) AS INTEGER) AS n_blocks,
-        |  CAST(MAX(CASE WHEN b = 0 THEN r END) AS INTEGER) AS px_r,
-        |  CAST(MAX(CASE WHEN b = 0 THEN g END) AS INTEGER) AS px_g,
-        |  CAST(MAX(CASE WHEN b = 0 THEN bb END) AS INTEGER) AS px_b,
-        |  ROUND(AVG(r), 6) AS mean_r,
-        |  ROUND(AVG(g), 6) AS mean_g,
-        |  ROUND(AVG(bb), 6) AS mean_b
-        |FROM rgb GROUP BY doc_id, width, height""".stripMargin,
-
-    // grayscale: one component, R=G=B=Y with no color matrix and no
-    // rounding — the luma closed form is the channel value verbatim
-    "q_jpeg_gray_decode" ->
-      """WITH d AS (
-        |  SELECT doc_id,
-        |    CAST(8 * (1 + doc_id % 3) AS INTEGER) AS width,
-        |    CAST(8 * (1 + doc_id % 2) AS INTEGER) AS height
-        |  FROM documents),
-        |blk AS (
-        |  SELECT d.doc_id, d.width, d.height, CAST(t.i AS BIGINT) AS b
-        |  FROM d CROSS JOIN range(0, 6) t(i)
-        |  WHERE t.i < (d.width // 8) * (d.height // 8)),
-        |ycc AS (
-        |  SELECT doc_id, width, height, b,
-        |    76 + 2 * ((doc_id * 7 + b * 13) % 53) AS y
-        |  FROM blk)
-        |SELECT doc_id, width, height,
-        |  CAST((width // 8) * (height // 8) AS INTEGER) AS n_blocks,
-        |  CAST(MAX(CASE WHEN b = 0 THEN y END) AS INTEGER) AS px_r,
-        |  CAST(MAX(CASE WHEN b = 0 THEN y END) AS INTEGER) AS px_g,
-        |  CAST(MAX(CASE WHEN b = 0 THEN y END) AS INTEGER) AS px_b,
-        |  ROUND(AVG(y), 6) AS mean_r,
-        |  ROUND(AVG(y), 6) AS mean_g,
-        |  ROUND(AVG(y), 6) AS mean_b
-        |FROM ycc GROUP BY doc_id, width, height""".stripMargin,
-
-    // JPEG aHash: block luma sum = (r+g+b)*64 from the mosaic closed
-    // forms; bit b set iff lsum*nb > total; pack via BIGINT shifts
-    "q_jpeg_phash" ->
-      """WITH d AS (
-        |  SELECT doc_id,
-        |    CAST(8 * (1 + doc_id % 3) AS INTEGER) AS width,
-        |    CAST(8 * (1 + doc_id % 2) AS INTEGER) AS height
-        |  FROM documents),
-        |blk AS (
-        |  SELECT d.doc_id, d.width, d.height, CAST(t.i AS BIGINT) AS b
-        |  FROM d CROSS JOIN range(0, 6) t(i)
-        |  WHERE t.i < (d.width // 8) * (d.height // 8)),
-        |ycc AS (
-        |  SELECT doc_id, width, height, b,
-        |    76 + 2 * ((doc_id * 7 + b * 13) % 53) AS y,
-        |    17 * (((doc_id * 11 + b * 17) % 9) - 4) AS cb,
-        |    17 * (((doc_id * 3 + b * 19) % 9) - 4) AS cr
-        |  FROM blk),
-        |lum AS (
-        |  SELECT doc_id, width, height, b,
-        |    64 * (GREATEST(0, LEAST(255, FLOOR(y + 1.402 * cr + 0.5)))
-        |        + GREATEST(0, LEAST(255,
-        |            FLOOR(y - 0.344136 * cb - 0.714136 * cr + 0.5)))
-        |        + GREATEST(0, LEAST(255, FLOOR(y + 1.772 * cb + 0.5))))
-        |      AS lsum
-        |  FROM ycc),
-        |tot AS (
-        |  SELECT doc_id, SUM(lsum) AS total, COUNT(*) AS nb
-        |  FROM lum GROUP BY doc_id)
-        |SELECT l.doc_id, l.width, l.height,
-        |  CAST(t.nb AS INTEGER) AS n_blocks,
-        |  CAST(SUM(CASE WHEN l.lsum * t.nb > t.total
-        |    THEN (CAST(1 AS BIGINT) << CAST(l.b AS INTEGER))
-        |    ELSE 0 END) AS BIGINT) AS ahash
-        |FROM lum l JOIN tot t ON l.doc_id = t.doc_id
-        |GROUP BY l.doc_id, l.width, l.height, t.nb""".stripMargin,
-
-    // perceptual hash: replay the pixel closed form, luma = B+G+R, bit k
-    // set iff luma·n > Σluma, packed LSB-first over image row-major k
-    "q_phash" ->
-      """WITH d AS (
-        |  SELECT doc_id, CAST(4 + doc_id % 5 AS INTEGER) AS w,
-        |    CAST(4 + doc_id % 3 AS INTEGER) AS h
-        |  FROM documents),
-        |px AS (
-        |  SELECT doc_id, w, h, CAST(k AS INTEGER) AS k,
-        |    ((doc_id*7 + k*13) % 256) + ((doc_id*11 + k*17) % 256)
-        |      + ((doc_id*3 + k*19) % 256) AS luma
-        |  FROM d, UNNEST(generate_series(0, w*h - 1)) AS t(k)),
-        |agg AS (
-        |  SELECT doc_id, COUNT(*) AS n, SUM(luma) AS total
-        |  FROM px GROUP BY 1)
-        |SELECT p.doc_id, p.w, p.h, CAST(a.n AS INTEGER) AS n_px,
-        |  CAST(SUM(CASE WHEN p.luma * a.n > a.total
-        |    THEN (CAST(1 AS BIGINT) << p.k) ELSE 0 END) AS BIGINT) AS ahash
-        |FROM px p JOIN agg a ON p.doc_id = a.doc_id
-        |GROUP BY 1, 2, 3, 4""".stripMargin,
-
-    "q_phash_neardup" ->
-      """WITH d AS (
-        |  SELECT doc_id, CAST(4 + doc_id % 5 AS INTEGER) AS w,
-        |    CAST(4 + doc_id % 3 AS INTEGER) AS h
-        |  FROM documents),
-        |px AS (
-        |  SELECT doc_id, w, h, CAST(k AS INTEGER) AS k,
-        |    ((doc_id*7 + k*13) % 256) + ((doc_id*11 + k*17) % 256)
-        |      + ((doc_id*3 + k*19) % 256) AS luma
-        |  FROM d, UNNEST(generate_series(0, w*h - 1)) AS t(k)),
-        |agg AS (
-        |  SELECT doc_id, COUNT(*) AS n, SUM(luma) AS total
-        |  FROM px GROUP BY 1),
-        |hash AS (
-        |  SELECT p.doc_id, p.w, p.h,
-        |    CAST(SUM(CASE WHEN p.luma * a.n > a.total
-        |      THEN (CAST(1 AS BIGINT) << p.k) ELSE 0 END) AS BIGINT) AS ahash
-        |  FROM px p JOIN agg a ON p.doc_id = a.doc_id
-        |  GROUP BY 1, 2, 3),
-        |bands AS (
-        |  SELECT doc_id, w, h, ahash, b,
-        |    (ahash >> (12 * b)) & 4095 AS bucket
-        |  FROM hash, UNNEST([0, 1, 2, 3]) AS tb(b)),
-        |cand AS (
-        |  SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b,
-        |    x.ahash AS ha, y.ahash AS hb
-        |  FROM bands x JOIN bands y ON x.b = y.b AND x.bucket = y.bucket
-        |    AND x.w = y.w AND x.h = y.h AND x.doc_id < y.doc_id)
-        |SELECT doc_a, doc_b,
-        |  CAST(bit_count(xor(ha, hb)) AS INTEGER) AS dist
-        |FROM cand WHERE bit_count(xor(ha, hb)) <= 2""".stripMargin,
-
-    // replay of the WAV waveform closed form — the Spark side must
-    // reproduce these by PARSING the RIFF bytes it encoded (fmt chunk,
-    // little-endian int16 frames); all-integer features, so no rounding
-    "q_wav_decode" ->
-      """WITH d AS (
-        |  SELECT doc_id, CAST(32 + doc_id % 17 AS INTEGER) AS n
-        |  FROM documents),
-        |s AS (
-        |  SELECT doc_id, n, CAST(k AS INTEGER) AS k,
-        |    ((doc_id * 31 + k * 57) % 4096) - 2048 AS s
-        |  FROM d, UNNEST(generate_series(0, n - 1)) AS t(k)),
-        |w AS (
-        |  SELECT doc_id, n, k, s,
-        |    LAG(s) OVER (PARTITION BY doc_id ORDER BY k) AS prev
-        |  FROM s)
-        |SELECT doc_id,
-        |  CAST(44 + 2 * n AS INTEGER) AS n_bytes,
-        |  CAST(8000 AS INTEGER) AS sample_rate,
-        |  n AS n_samples,
-        |  CAST(MAX(CASE WHEN k = 0 THEN s END) AS INTEGER) AS first_sample,
-        |  CAST(MAX(ABS(s)) AS INTEGER) AS peak,
-        |  CAST(SUM(s) AS BIGINT) AS sum_sample,
-        |  CAST(SUM(s * s) AS BIGINT) AS energy,
-        |  CAST(SUM(CASE WHEN prev IS NOT NULL AND ((s >= 0) <> (prev >= 0))
-        |    THEN 1 ELSE 0 END) AS INTEGER) AS zero_crossings
-        |FROM w GROUP BY doc_id, n""".stripMargin,
-
-    "q_wav_frames" ->
-      """WITH d AS (
-        |  SELECT doc_id, CAST(32 + doc_id % 17 AS INTEGER) AS n
-        |  FROM documents),
-        |s AS (
-        |  SELECT doc_id, CAST(k // 16 AS INTEGER) AS frame_idx,
-        |    ((doc_id * 31 + k * 57) % 4096) - 2048 AS s
-        |  FROM d, UNNEST(generate_series(0, n - 1)) AS t(k))
-        |SELECT doc_id, frame_idx,
-        |  CAST(COUNT(*) AS INTEGER) AS frame_n,
-        |  CAST(SUM(s * s) AS BIGINT) AS frame_energy
-        |FROM s GROUP BY 1, 2""".stripMargin,
-
-    // waveform fingerprint: frame energies from the closed form, bit f
-    // set iff fe*n_samples > total*frame_n, BIGINT shifts
-    "q_wav_fingerprint" ->
-      """WITH d AS (
-        |  SELECT doc_id, CAST(32 + doc_id % 17 AS INTEGER) AS n
-        |  FROM documents),
-        |s AS (
-        |  SELECT doc_id, CAST(k // 16 AS INTEGER) AS frame_idx,
-        |    ((doc_id * 31 + k * 57) % 4096) - 2048 AS s
-        |  FROM d, UNNEST(generate_series(0, n - 1)) AS t(k)),
-        |fr AS (
-        |  SELECT doc_id, frame_idx, COUNT(*) AS fn, SUM(s * s) AS fe
-        |  FROM s GROUP BY 1, 2),
-        |tot AS (
-        |  SELECT doc_id, SUM(fn) AS ns, SUM(fe) AS te, COUNT(*) AS nf
-        |  FROM fr GROUP BY 1)
-        |SELECT f.doc_id,
-        |  CAST(t.ns AS INTEGER) AS n_samples,
-        |  CAST(t.nf AS INTEGER) AS n_frames,
-        |  CAST(SUM(CASE WHEN f.fe * t.ns > t.te * f.fn
-        |    THEN (CAST(1 AS BIGINT) << CAST(f.frame_idx AS INTEGER))
-        |    ELSE 0 END) AS BIGINT) AS fp
-        |FROM fr f JOIN tot t ON f.doc_id = t.doc_id
-        |GROUP BY f.doc_id, t.ns, t.nf""".stripMargin
+        |FROM d""".stripMargin
   )
 }

@@ -275,24 +275,6 @@ object StreamingOps {
       .partitionBy("batch_id")
       .parquet(ref.path)
 
-  /** Streaming media ingest: binary payloads land as files (the
-    * object-store drop-zone), each micro-batch is sniffed + dispatched
-    * through the SAME [[graft.operators.MediaRouter.routeUnits]] the
-    * batch path runs — unknown formats are ACCOUNTED rows, never drops —
-    * and the normalized (doc_id, format, units) facts append
-    * replay-idempotently ([[idempotentBatchAppend]]). The streaming twin
-    * of `q_media_route`; StreamingSpec pins stream ≡ batch. */
-  def mediaRouteSink(payloads: DataFrame, ref: graft.sources.TableRef,
-                     checkpointDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    payloads.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        idempotentBatchAppend(
-          graft.operators.MediaRouter.routeUnits(batch.toDF()), ref, batchId)
-      }
-      .start()
-
   /** Streaming incremental near-dup: each micro-batch of documents is
     * checked against the STORED LSH index (pairs vs everything already
     * indexed, plus within-batch), discovered pairs append to `pairsRef`,

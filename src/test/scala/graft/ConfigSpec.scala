@@ -7,8 +7,6 @@ class ConfigSpec extends AnyFunSuite {
   test("defaults mirror the reference") {
     val c = GraftConfig.fromEnv(Map.empty)
     assert(c.bronzeParallelRequests === 4)
-    assert(c.aggBatchTickers === 250)
-    assert(c.indicatorBatchTickers === 500)
     assert(c.dataStartYear === java.time.LocalDate.now().getYear - 5)
   }
 

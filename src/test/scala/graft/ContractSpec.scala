@@ -68,8 +68,7 @@ class ContractSpec extends AnyFunSuite with SparkSpecBase {
     // an oracle without a query would silently never run
     assert(os.subsetOf(qs), s"orphan oracles: ${(os -- qs).toSeq.sorted}")
     // a query without an oracle silently degrades to the driver's weaker
-    // rows-only check — nothing is allowed there anymore: q_mm_decode
-    // graduated when the BMP decoder became real, and q_approx_distinct
+    // rows-only check — nothing is allowed there anymore: q_approx_distinct
     // graduated in r7 when the HLL was replaced by the deterministic KMV
     // sketch DuckDB can replay exactly
     assert((qs -- os) === Set.empty[String],
@@ -94,5 +93,7 @@ class ContractSpec extends AnyFunSuite with SparkSpecBase {
       dup = a.intersect(b) if dup.nonEmpty
     } fail(s"$na and $nb both define: ${dup.toSeq.sorted}")
     assert(modules.map(_._2.size).sum === SparkEntry.queries.size)
+    // a change to this count is a declared scope decision: record it in CHANGES.md
+    assert(SparkEntry.queries.size === 303)
   }
 }

@@ -1023,31 +1023,5 @@ class StreamingSpec extends SparkSpecBase {
     assert(streamed === batch)
   }
 
-  test("streaming media ingest equals the batch route, replay-idempotent") {
-    import graft.sources.TableRef
-    import graft.operators.MediaRouter
-    val docs = Tables.documents(spark, sf).limit(90)
-    val mixed = MediaRouter.encodeMixed(docs)
-    val in = Files.createTempDirectory("graft_media_in").toString
-    mixed.repartition(3).write.mode("overwrite").parquet(in)
-    val ref = TableRef(Files.createTempDirectory("graft_media_tbl").toString,
-      "bronze", "media_units")
-    val q = StreamingOps.mediaRouteSink(
-      spark.readStream.schema(mixed.schema)
-        .option("maxFilesPerTrigger", 1).parquet(in),
-      ref, Files.createTempDirectory("graft_media_ckpt").toString)
-    q.processAllAvailable()
-    q.stop()
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.select("doc_id", "format", "units")
-        .collect().map(_.toString).toSet
-    val stored = spark.read.parquet(ref.path)
-    assert(rows(stored) === rows(MediaRouter.routeUnits(mixed)),
-      "micro-batched route must equal the batch route row-for-row")
-    // replay idempotence: re-writing any batch partition cannot double
-    // rows (the batch_id partition is overwritten, not appended)
-    assert(stored.count() === 90)
-  }
-
   private def ts(s: String) = java.sql.Timestamp.valueOf(s)
 }

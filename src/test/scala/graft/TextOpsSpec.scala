@@ -345,355 +345,6 @@ class TextOpsSpec extends SparkSpecBase {
     assert(un === lsh.map(r => (r.getLong(0), r.getLong(1))).toSet)
   }
 
-  test("BMP decode: header, stride padding and bottom-up rows parsed right") {
-    // byte-level fixture check, independent of the Spark plumbing
-    val bytes = MultimodalOps.bmpBytes(3L) // w=4+3%5=7 → stride 24 (3 pad), h=4
-    assert(bytes(0) === 'B'.toByte && bytes(1) === 'M'.toByte)
-    assert(bytes.length === 54 + 24 * 4)
-    val docs = Tables.documents(spark, sf).limit(50)
-    val decoded = MultimodalOps.decodeBmp(MultimodalOps.encodeBmp(docs))
-    assert(decoded.schema === MultimodalOps.bmpStatsSchema)
-    val rows = decoded.collect()
-    assert(rows.length === 50)
-    rows.foreach { r =>
-      val id = r.getLong(0)
-      val (w, h) = ((4 + id % 5).toInt, (4 + id % 3).toInt)
-      assert(r.getInt(2) === w && r.getInt(3) === h)
-      // top-left pixel = pixel k=0, which the encoder stores in the LAST
-      // row of the file — a row-order bug would surface here
-      assert(r.getInt(5) === ((id * 7) % 256).toInt)
-      assert(r.getInt(6) === ((id * 11) % 256).toInt)
-      assert(r.getInt(7) === ((id * 3) % 256).toInt)
-      // per-channel mean replayed from the formula (pad bytes excluded)
-      val n = w * h
-      val expB = BigDecimal((0 until n).map(k => (id * 7 + k * 13) % 256).sum
-        .toDouble / n).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-      assert(r.getDouble(8) === expB, s"mean_b mismatch for doc $id")
-    }
-    // a top-down (negative height) BMP decodes to the same stats
-    val td = {
-      val b = MultimodalOps.bmpBytes(3L).clone()
-      val bb = java.nio.ByteBuffer.wrap(b)
-        .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-      val h = bb.getInt(22)
-      bb.putInt(22, -h)
-      // flip row storage order so the image content is unchanged
-      val stride = 24
-      val rowsBytes = (0 until h).map(s =>
-        b.slice(54 + s * stride, 54 + (s + 1) * stride))
-      rowsBytes.reverse.zipWithIndex.foreach { case (row, s) =>
-        System.arraycopy(row, 0, b, 54 + s * stride, stride)
-      }
-      b
-    }
-    import spark.implicits._
-    val one = MultimodalOps.decodeBmp(
-      Seq((3L, td)).toDF("doc_id", "payload")).collect().head
-    val ref = rows.find(_.getLong(0) === 3L)
-    // doc 3 may not be in the 50-doc slice; decode the bottom-up twin direct
-    val bu = MultimodalOps.decodeBmp(
-      Seq((3L, MultimodalOps.bmpBytes(3L))).toDF("doc_id", "payload"))
-      .collect().head
-    assert(one.toString === bu.toString, "top-down twin must decode equal")
-    assert(ref.forall(_.toString === bu.toString))
-  }
-
-  test("PNG decode: inflate + all five filter inverses, CRC and truncation fail loudly") {
-    import spark.implicits._
-    // byte-level fixture: real signature, chunk layout, deflated IDAT
-    val bytes = MultimodalOps.pngBytes(5L) // w=4+5%5=4, h=4+5%3=6 → filters 0..4,0
-    assert((bytes(0) & 0xff) === 0x89 && bytes(1) === 'P'.toByte)
-    // decode matches the BMP closed forms (same channels, RGB order);
-    // h=6 docs cycle through every filter type including Paeth
-    val docs = Tables.documents(spark, sf).limit(60)
-    val decoded = MultimodalOps.decodePng(MultimodalOps.encodePng(docs))
-    assert(decoded.schema === MultimodalOps.pngStatsSchema)
-    val rows = decoded.collect()
-    assert(rows.length === 60)
-    rows.foreach { r =>
-      val id = r.getLong(0)
-      val (w, h) = ((4 + id % 5).toInt, (4 + id % 3).toInt)
-      assert(r.getInt(1) === w && r.getInt(2) === h)
-      assert(r.getInt(3) === 8 && r.getInt(4) === 2)
-      assert(r.getInt(5) === h * (1 + 3 * w))
-      // top-left pixel k=0, RGB order (PNG) vs BGR (BMP)
-      assert(r.getInt(6) === ((id * 3) % 256).toInt)
-      assert(r.getInt(7) === ((id * 11) % 256).toInt)
-      assert(r.getInt(8) === ((id * 7) % 256).toInt)
-    }
-    // grayscale + RGBA (bpp 1 and 4 filter geometries): closed-form
-    // stats AND exact ImageIO parity — PNG is lossless, so every decoded
-    // channel must match the JDK's independent decoder bit for bit
-    for (variant <- Seq("gray", "rgba")) {
-      val dec = variant match {
-        case "gray" => MultimodalOps.decodePng(MultimodalOps.encodePngGray(docs))
-        case _ => MultimodalOps.decodePng(MultimodalOps.encodePngRgba(docs))
-      }
-      dec.collect().foreach { r =>
-        val id = r.getLong(0)
-        assert(r.getInt(4) === (if (variant == "gray") 0 else 6))
-        if (variant == "gray") {
-          val v = ((id * 5) % 256).toInt
-          assert(r.getInt(6) === v && r.getInt(7) === v && r.getInt(8) === v)
-        } else {
-          assert(r.getInt(6) === ((id * 3) % 256).toInt)
-          assert(r.getInt(7) === ((id * 11) % 256).toInt)
-          assert(r.getInt(8) === ((id * 7) % 256).toInt)
-        }
-      }
-      for (id <- 0L to 10L) {
-        val pb = if (variant == "gray") MultimodalOps.pngBytesGray(id)
-                 else MultimodalOps.pngBytesRgba(id)
-        val img = javax.imageio.ImageIO.read(
-          new java.io.ByteArrayInputStream(pb))
-        assert(img != null, s"ImageIO rejected PNG $variant doc $id")
-        val (w, h) = ((4 + id % 5).toInt, (4 + id % 3).toInt)
-        assert(img.getWidth === w && img.getHeight === h)
-        for (y <- 0 until h; x <- 0 until w) {
-          val k = y * w + x
-          if (variant == "gray") {
-            // getRGB on TYPE_BYTE_GRAY applies a gray→sRGB transform;
-            // the raw raster sample is the decoded channel
-            assert(img.getRaster.getSample(x, y, 0) ===
-              ((id * 5 + k * 23) % 256).toInt, s"gray doc $id px($x,$y)")
-          } else {
-            val argb = img.getRGB(x, y)
-            assert(((argb >> 16) & 0xff) === ((id * 3 + k * 19) % 256).toInt)
-            assert(((argb >> 8) & 0xff) === ((id * 11 + k * 17) % 256).toInt)
-            assert((argb & 0xff) === ((id * 7 + k * 13) % 256).toInt)
-            assert(((argb >>> 24) & 0xff) === ((id * 13 + k * 7) % 256).toInt,
-              s"alpha doc $id px($x,$y)")
-          }
-        }
-      }
-    }
-    // corrupt one IDAT byte → the CRC check names the chunk and doc
-    val corrupt = bytes.clone()
-    corrupt(45) = (corrupt(45) ^ 0x1).toByte // inside IHDR/IDAT body
-    val eCrc = intercept[org.apache.spark.SparkException] {
-      MultimodalOps.decodePng(
-        Seq((5L, corrupt)).toDF("doc_id", "payload")).collect()
-    }
-    assert(eCrc.getMessage.contains("CRC") || eCrc.getCause != null)
-    // truncated payload → loud failure, not an index error deep in a loop
-    val eTrunc = intercept[org.apache.spark.SparkException] {
-      MultimodalOps.decodePng(
-        Seq((5L, bytes.take(30))).toDF("doc_id", "payload")).collect()
-    }
-    assert(eTrunc.getMessage.toLowerCase.contains("truncated") ||
-      eTrunc.getCause != null)
-  }
-
-  test("JPEG decode: baseline Huffman+DPCM+IDCT+YCbCr, closed forms, ImageIO parity") {
-    import spark.implicits._
-    // the quantization-exact mosaic round-trips bit-deterministically:
-    // decode must reproduce the per-block closed forms the oracle replays
-    val docs = Tables.documents(spark, sf).limit(60)
-    val decoded = MultimodalOps.decodeJpeg(MultimodalOps.encodeJpeg(docs))
-    assert(decoded.schema === MultimodalOps.jpegStatsSchema)
-    val rows = decoded.collect()
-    assert(rows.length === 60)
-    def clamp(x: Double): Int =
-      math.max(0, math.min(255, math.floor(x + 0.5).toInt))
-    rows.foreach { r =>
-      val id = r.getLong(0)
-      val (w, h) = MultimodalOps.jpegDims(id)
-      val nb = (w / 8) * (h / 8)
-      assert(r.getInt(1) === w && r.getInt(2) === h && r.getInt(3) === nb)
-      val rgb = (0 until nb).map { b =>
-        val (y, cb, cr) = MultimodalOps.jpegBlockYcc(id, b)
-        (clamp(y + 1.402 * (cr - 128)),
-          clamp(y - 0.344136 * (cb - 128) - 0.714136 * (cr - 128)),
-          clamp(y + 1.772 * (cb - 128)))
-      }
-      // top-left pixel lives in block 0; means over equal-sized blocks
-      assert(r.getInt(4) === rgb.head._1 && r.getInt(5) === rgb.head._2 &&
-        r.getInt(6) === rgb.head._3)
-      assert(math.abs(r.getDouble(7) - rgb.map(_._1).sum.toDouble / nb) < 1e-6)
-      assert(math.abs(r.getDouble(8) - rgb.map(_._2).sum.toDouble / nb) < 1e-6)
-      assert(math.abs(r.getDouble(9) - rgb.map(_._3).sum.toDouble / nb) < 1e-6)
-    }
-    // independent-decoder parity: the JDK's ImageIO (libjpeg-backed) must
-    // read the same files — DC-only mosaics AND the nonzero-AC variant
-    // that drives Huffman AC/ZRL/extend and the general 64-term IDCT.
-    // Tolerance ±3: ImageIO's fixed-point IDCT + integer YCbCr differ from
-    // the float reference by at most a couple of counts per channel.
-    for (id <- 0L to 12L;
-         variant <- Seq("dc", "ac", "420", "rst", "acrst", "gray")) {
-      val bytes = variant match {
-        case "dc" => MultimodalOps.jpegBytes(id)
-        case "ac" => MultimodalOps.jpegBytesWithAc(id)
-        case "420" => MultimodalOps.jpegBytes420(id)
-        case "rst" => MultimodalOps.jpegBytesRst(id)
-        case "acrst" => MultimodalOps.jpegBytesAcRst(id)
-        case _ => MultimodalOps.jpegBytesGray(id)
-      }
-      val img = javax.imageio.ImageIO.read(
-        new java.io.ByteArrayInputStream(bytes))
-      assert(img != null, s"ImageIO rejected doc $id variant=$variant")
-      val (w, h, rr, gg, bb) = MultimodalOps.decodeJpegPixels(id, bytes)
-      assert(img.getWidth === w && img.getHeight === h)
-      if (variant == "gray") {
-        // getRGB on TYPE_BYTE_GRAY applies a gray→sRGB color transform;
-        // compare the raw raster sample (the decoded Y) instead
-        for (y <- 0 until h; x <- 0 until w) {
-          val i = y * w + x
-          assert(rr(i) === gg(i) && gg(i) === bb(i),
-            s"gray doc $id px($x,$y) channels differ")
-          val dy = math.abs(img.getRaster.getSample(x, y, 0) - rr(i))
-          assert(dy <= 3,
-            s"doc $id variant=gray px($x,$y): ImageIO vs graft Δ=$dy")
-        }
-      } else for (y <- 0 until h; x <- 0 until w) {
-        val argb = img.getRGB(x, y)
-        val i = y * w + x
-        val dr = math.abs(((argb >> 16) & 0xff) - rr(i))
-        val dg = math.abs(((argb >> 8) & 0xff) - gg(i))
-        val db = math.abs((argb & 0xff) - bb(i))
-        assert(dr <= 3 && dg <= 3 && db <= 3,
-          s"doc $id variant=$variant px($x,$y): ImageIO vs graft " +
-            s"Δ=($dr,$dg,$db)")
-      }
-    }
-    // restart markers leave the pixels exactly equal to the no-DRI file
-    // (both sides reset DPCM), and a tampered marker index fails loudly
-    for (id <- 0L to 12L) {
-      val (wP, hP, rP, gP, bP) =
-        MultimodalOps.decodeJpegPixels(id, MultimodalOps.jpegBytes(id))
-      val (wR, hR, rR, gR, bR) =
-        MultimodalOps.decodeJpegPixels(id, MultimodalOps.jpegBytesRst(id))
-      assert(wP === wR && hP === hR)
-      assert(rP.sameElements(rR) && gP.sameElements(gR) &&
-        bP.sameElements(bR), s"RST pixels diverge: doc $id")
-    }
-    locally {
-      // doc 5 spans 6 MCUs → markers RST0 (MCU 2) and RST1 (MCU 4);
-      // flipping RST0→RST3 must fail as out-of-order, by doc id
-      val rstBytes = MultimodalOps.jpegBytesRst(5L)
-      val sosIdx = rstBytes.indices.find(i =>
-        (rstBytes(i) & 0xff) == 0xff && (rstBytes(i + 1) & 0xff) == 0xda).get
-      val rstIdx = (sosIdx until rstBytes.length - 1).find(i =>
-        (rstBytes(i) & 0xff) == 0xff && (rstBytes(i + 1) & 0xff) == 0xd0).get
-      val tampered = rstBytes.clone(); tampered(rstIdx + 1) = 0xd3.toByte
-      val eRst = intercept[IllegalArgumentException] {
-        MultimodalOps.decodeJpegPixels(5L, tampered)
-      }
-      assert(eRst.getMessage.contains("out of order") &&
-        eRst.getMessage.contains("doc 5"))
-    }
-    // 4:2:0 closed forms: luma per 8×8 block raster, constant chroma
-    val rows420 = MultimodalOps.decodeJpeg(
-      MultimodalOps.encodeJpeg420(docs)).collect()
-    assert(rows420.length === 60)
-    rows420.foreach { r =>
-      val id = r.getLong(0)
-      val (w, h) = MultimodalOps.jpegDims420(id)
-      val (cb, cr) = MultimodalOps.jpegChroma420(id)
-      val nb = (w / 8) * (h / 8)
-      assert(r.getInt(1) === w && r.getInt(2) === h && r.getInt(3) === nb)
-      val rgb = (0 until nb).map { lb =>
-        val y = (76 + 2 * ((id * 7 + lb * 13) % 53)).toInt
-        (clamp(y + 1.402 * (cr - 128)),
-          clamp(y - 0.344136 * (cb - 128) - 0.714136 * (cr - 128)),
-          clamp(y + 1.772 * (cb - 128)))
-      }
-      assert(r.getInt(4) === rgb.head._1 && r.getInt(5) === rgb.head._2 &&
-        r.getInt(6) === rgb.head._3)
-      assert(math.abs(r.getDouble(7) - rgb.map(_._1).sum.toDouble / nb) < 1e-6)
-      assert(math.abs(r.getDouble(8) - rgb.map(_._2).sum.toDouble / nb) < 1e-6)
-      assert(math.abs(r.getDouble(9) - rgb.map(_._3).sum.toDouble / nb) < 1e-6)
-    }
-    // third-party-encoder realism: files written by the JDK's OWN JPEG
-    // encoder (its choice of tables, subsampling, and dimension padding
-    // — nothing shared with our writer) must decode to what the JDK
-    // itself reads back. Gray pixels keep Cb=Cr constant at 128 so the
-    // encoder's chroma downsample and our replication upsample agree
-    // exactly; 50×34 forces partial-MCU crop handling.
-    for ((w, h, q) <- Seq((48, 32, 0.9f), (50, 34, 0.7f))) {
-      val img = new java.awt.image.BufferedImage(
-        w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-      for (y <- 0 until h; x <- 0 until w) {
-        val v = (x * 4 + y * 2) % 256
-        img.setRGB(x, y, (v << 16) | (v << 8) | v)
-      }
-      val baos = new java.io.ByteArrayOutputStream
-      val writer =
-        javax.imageio.ImageIO.getImageWritersByFormatName("jpeg").next()
-      val ios = javax.imageio.ImageIO.createImageOutputStream(baos)
-      writer.setOutput(ios)
-      val param = writer.getDefaultWriteParam
-      param.setCompressionMode(
-        javax.imageio.ImageWriteParam.MODE_EXPLICIT)
-      param.setCompressionQuality(q)
-      writer.write(null, new javax.imageio.IIOImage(img, null, null), param)
-      writer.dispose(); ios.close()
-      val bytes = baos.toByteArray
-      val (dw, dh, rr, gg, bb) = MultimodalOps.decodeJpegPixels(99L, bytes)
-      assert(dw === w && dh === h)
-      val back = javax.imageio.ImageIO.read(
-        new java.io.ByteArrayInputStream(bytes))
-      for (y <- 0 until h; x <- 0 until w) {
-        val argb = back.getRGB(x, y); val i = y * w + x
-        val dr = math.abs(((argb >> 16) & 0xff) - rr(i))
-        val dg = math.abs(((argb >> 8) & 0xff) - gg(i))
-        val db = math.abs((argb & 0xff) - bb(i))
-        assert(dr <= 3 && dg <= 3 && db <= 3,
-          s"JDK-encoded ${w}x$h q=$q px($x,$y): Δ=($dr,$dg,$db)")
-      }
-    }
-    // grayscale closed form: R=G=B = the per-block luma verbatim
-    val rowsGray = MultimodalOps.decodeJpeg(
-      MultimodalOps.encodeJpegGray(docs)).collect()
-    assert(rowsGray.length === 60)
-    rowsGray.foreach { r =>
-      val id = r.getLong(0)
-      val (w, h) = MultimodalOps.jpegDims(id)
-      val nb = (w / 8) * (h / 8)
-      val ys = (0 until nb).map(b => (76 + 2 * ((id * 7 + b * 13) % 53)).toInt)
-      assert(r.getInt(1) === w && r.getInt(2) === h && r.getInt(3) === nb)
-      assert(r.getInt(4) === ys.head && r.getInt(5) === ys.head &&
-        r.getInt(6) === ys.head)
-      val m = ys.sum.toDouble / nb
-      assert(math.abs(r.getDouble(7) - m) < 1e-6)
-      assert(math.abs(r.getDouble(8) - m) < 1e-6)
-      assert(math.abs(r.getDouble(9) - m) < 1e-6)
-    }
-    // JPEG aHash: a single-block image IS its own mean (hash 0); the
-    // multi-block mosaics must set at least one bit somewhere
-    val jh = MultimodalOps.aHashJpeg(MultimodalOps.encodeJpeg(docs)).collect()
-    assert(jh.length === 60)
-    jh.foreach { r =>
-      assert(r.getInt(3) === (r.getInt(1) / 8) * (r.getInt(2) / 8))
-      if (r.getInt(3) === 1) assert(r.getLong(4) === 0L,
-        s"single-block doc ${r.getLong(0)} must hash to 0")
-    }
-    assert(jh.exists(_.getLong(4) != 0L), "mosaics must set bits")
-    // corrupt structure fails loudly by doc id
-    val good = MultimodalOps.jpegBytes(7L)
-    val noSoi = good.clone(); noSoi(1) = 0x00
-    val e1 = intercept[org.apache.spark.SparkException] {
-      MultimodalOps.decodeJpeg(
-        Seq((7L, noSoi)).toDF("doc_id", "payload")).collect()
-    }
-    assert(e1.getMessage.contains("doc 7") || e1.getCause != null)
-    val e2 = intercept[org.apache.spark.SparkException] {
-      MultimodalOps.decodeJpeg(
-        Seq((7L, good.take(good.length / 3))).toDF("doc_id", "payload"))
-        .collect()
-    }
-    assert(e2.getMessage.contains("doc 7") || e2.getCause != null)
-    // progressive SOF (FFC2) is rejected by marker, not mis-decoded
-    val prog = good.clone()
-    val sof = prog.indices.find(i =>
-      (prog(i) & 0xff) == 0xff && (prog(i + 1) & 0xff) == 0xc0).get
-    prog(sof + 1) = 0xc2.toByte
-    val e3 = intercept[org.apache.spark.SparkException] {
-      MultimodalOps.decodeJpeg(
-        Seq((7L, prog)).toDF("doc_id", "payload")).collect()
-    }
-    assert(e3.getMessage.contains("doc 7") || e3.getCause != null)
-  }
-
   test("WARC: gzip-member framing, exact body octets, truncation fails loudly") {
     import spark.implicits._
     val docs = Tables.documents(spark, sf).limit(10)
@@ -719,175 +370,6 @@ class TextOpsSpec extends SparkSpecBase {
           .toDF("doc_id", "payload")).collect()
     }
     assert(e.getCause != null)
-  }
-
-  test("binaryFile ingest: files on disk decode identically to the direct path") {
-    // the production loop: media files in a directory → binaryFile source
-    // → decodePng; must equal encodePng |> decodePng byte for byte
-    val dir = java.nio.file.Files.createTempDirectory("graft_png_files")
-    val ids = (0L until 20L)
-    ids.foreach { id =>
-      java.nio.file.Files.write(dir.resolve(s"$id.png"),
-        MultimodalOps.pngBytes(id))
-    }
-    // a non-matching file must be pruned by the glob at listing time
-    java.nio.file.Files.write(dir.resolve("readme.txt"),
-      "not a png".getBytes("UTF-8"))
-    val fromFiles = MultimodalOps.decodePng(
-      MultimodalOps.readPayloadFiles(spark, dir.toString))
-      .collect().map(_.toString).sorted
-    import spark.implicits._
-    val direct = MultimodalOps.decodePng(
-      MultimodalOps.encodePng(ids.toDF("doc_id")))
-      .collect().map(_.toString).sorted
-    assert(fromFiles.length === 20)
-    assert(fromFiles.toSeq === direct.toSeq)
-  }
-
-  test("aHash: image-order bit packing, top-down twin equal, banding recall 1") {
-    import spark.implicits._
-    val docs = Tables.documents(spark, sf).limit(100)
-    val hashes = MultimodalOps.aHash(MultimodalOps.encodeBmp(docs)).collect()
-    assert(hashes.length === 100)
-    // closed-form replay per doc (luma·n > Σluma, LSB-first image order)
-    hashes.foreach { r =>
-      val id = r.getLong(0)
-      val (w, h) = ((4 + id % 5).toInt, (4 + id % 3).toInt)
-      val n = w * h
-      val luma = (0 until n).map(k =>
-        (id * 7 + k * 13) % 256 + (id * 11 + k * 17) % 256 +
-          (id * 3 + k * 19) % 256)
-      val total = luma.sum
-      val exp = luma.zipWithIndex.foldLeft(0L) { case (acc, (l, k)) =>
-        if (l * n > total) acc | (1L << k) else acc
-      }
-      assert(r.getLong(4) === exp, s"ahash mismatch for doc $id")
-      assert(r.getInt(1) === w && r.getInt(2) === h && r.getInt(3) === n)
-    }
-    // a top-down (negative height) twin hashes identically — the decoder
-    // must undo the storage order, not assume it
-    val td = {
-      val b = MultimodalOps.bmpBytes(3L).clone()
-      val bb = java.nio.ByteBuffer.wrap(b)
-        .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-      val h = bb.getInt(22)
-      bb.putInt(22, -h)
-      val stride = 24
-      val rowsBytes = (0 until h).map(s =>
-        b.slice(54 + s * stride, 54 + (s + 1) * stride))
-      rowsBytes.reverse.zipWithIndex.foreach { case (row, s) =>
-        System.arraycopy(row, 0, b, 54 + s * stride, stride)
-      }
-      b
-    }
-    val tdHash = MultimodalOps.aHash(
-      Seq((3L, td)).toDF("doc_id", "payload")).collect().head
-    val buHash = MultimodalOps.aHash(
-      Seq((3L, MultimodalOps.bmpBytes(3L))).toDF("doc_id", "payload"))
-      .collect().head
-    assert(tdHash.toString === buHash.toString)
-    // banded near-dup pairs == brute-force pairs at maxDist < nBands
-    val hdf = MultimodalOps.aHash(MultimodalOps.encodeBmp(docs))
-    val banded = MultimodalOps.aHashNearDups(hdf, maxDist = 2)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val hs = hashes.map(r =>
-      (r.getLong(0), r.getInt(1), r.getInt(2), r.getLong(4)))
-    val brute = (for {
-      (a, wa, ha, xa) <- hs; (b, wb, hb, xb) <- hs
-      if a < b && wa == wb && ha == hb &&
-        java.lang.Long.bitCount(xa ^ xb) <= 2
-    } yield (a, b)).toSet
-    assert(banded === brute)
-  }
-
-  test("WAV decode: RIFF header fields, int16 frames, integer features") {
-    // byte-level fixture check, independent of the Spark plumbing
-    val bytes = MultimodalOps.wavBytes(5L) // n = 32 + 5%17 = 37 samples
-    assert(new String(bytes.slice(0, 4), "US-ASCII") === "RIFF")
-    assert(new String(bytes.slice(8, 12), "US-ASCII") === "WAVE")
-    assert(bytes.length === 44 + 2 * 37)
-    val docs = Tables.documents(spark, sf).limit(50)
-    val decoded = MultimodalOps.decodeWav(MultimodalOps.encodeWav(docs))
-    assert(decoded.schema === MultimodalOps.wavStatsSchema)
-    val rows = decoded.collect()
-    assert(rows.length === 50)
-    rows.foreach { r =>
-      val id = r.getLong(0)
-      val n = (32 + id % 17).toInt
-      val s = (0 until n).map(k => (((id * 31 + k * 57) % 4096) - 2048).toInt)
-      assert(r.getInt(1) === 44 + 2 * n)
-      assert(r.getInt(2) === 8000 && r.getInt(3) === n)
-      assert(r.getInt(4) === s.head, s"first_sample mismatch for doc $id")
-      assert(r.getInt(5) === s.map(math.abs).max)
-      assert(r.getLong(6) === s.map(_.toLong).sum)
-      assert(r.getLong(7) === s.map(x => x.toLong * x).sum)
-      val zc = s.sliding(2).count(p => (p(0) >= 0) != (p(1) >= 0))
-      assert(r.getInt(8) === zc, s"zero_crossings mismatch for doc $id")
-    }
-    // framed energy tiles the waveform exactly: Σ frame_energy == energy,
-    // Σ frame_n == n_samples, last frame partial
-    val frames = MultimodalOps.wavFrameEnergy(MultimodalOps.encodeWav(docs))
-      .collect().groupBy(_.getLong(0))
-    rows.foreach { r =>
-      val fs = frames(r.getLong(0))
-      assert(fs.map(_.getLong(3)).sum === r.getLong(7))
-      assert(fs.map(_.getInt(2)).sum === r.getInt(3))
-      assert(fs.map(_.getInt(1)).sorted.toSeq === (0 until fs.length))
-    }
-    // fingerprint: bit f ≡ frame f beats the per-sample mean energy
-    // (cross-multiplied with the frame length), replayed from the frames
-    val fps = MultimodalOps.wavFingerprint(MultimodalOps.encodeWav(docs))
-      .collect().map(r => r.getLong(0) -> r).toMap
-    frames.foreach { case (id, fs) =>
-      val total = fs.map(_.getLong(3)).sum
-      val n = fs.map(_.getInt(2)).sum
-      val expect = fs.sortBy(_.getInt(1)).zipWithIndex.map { case (f, i) =>
-        if (f.getLong(3) * n > total * f.getInt(2)) 1L << i else 0L
-      }.sum
-      val got = fps(id)
-      assert(got.getInt(1) === n && got.getInt(2) === fs.length)
-      assert(got.getLong(3) === expect, s"fingerprint mismatch doc $id")
-    }
-    assert(fps.values.exists(_.getLong(3) != 0L), "fixture must set bits")
-    // a corrupted magic or truncated payload fails loudly, by doc id
-    import spark.implicits._
-    val bad = bytes.clone(); bad(0) = 'X'.toByte
-    val ex = intercept[org.apache.spark.SparkException] {
-      MultimodalOps.decodeWav(Seq((5L, bad)).toDF("doc_id", "payload"))
-        .collect()
-    }
-    assert(ex.getMessage.contains("RIFF") || ex.getCause != null)
-    // a LIST/INFO chunk between fmt and data (what real encoders emit)
-    // decodes identically — the parser must WALK chunks, not assume
-    // offsets; odd-sized chunks are word-aligned with a pad byte
-    val withList = {
-      val info = "INFOISFT".getBytes("US-ASCII") :+ 0.toByte // odd size 9
-      val buf = java.nio.ByteBuffer
-        .allocate(bytes.length + 8 + info.length + 1)
-        .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-      buf.put(bytes, 0, 36) // RIFF header + fmt chunk
-      buf.put("LIST".getBytes("US-ASCII")).putInt(info.length).put(info)
-      buf.put(0.toByte) // word-align pad for the odd chunk size
-      buf.put(bytes, 36, bytes.length - 36) // data chunk
-      val out = buf.array()
-      // fix the RIFF size field
-      java.nio.ByteBuffer.wrap(out).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-        .putInt(4, out.length - 8)
-      out
-    }
-    val plain = MultimodalOps.decodeWav(
-      Seq((5L, bytes)).toDF("doc_id", "payload")).collect().head
-    val listed = MultimodalOps.decodeWav(
-      Seq((5L, withList)).toDF("doc_id", "payload")).collect().head
-    // all fields except n_bytes (the container grew) must match
-    assert((1 until plain.length).filter(_ != 1)
-      .forall(i => plain.get(i) == listed.get(i)),
-      s"plain=$plain listed=$listed")
-    val fplain = MultimodalOps.wavFrameEnergy(
-      Seq((5L, bytes)).toDF("doc_id", "payload")).collect().map(_.toString)
-    val flist = MultimodalOps.wavFrameEnergy(
-      Seq((5L, withList)).toDF("doc_id", "payload")).collect().map(_.toString)
-    assert(fplain.toSeq === flist.toSeq)
   }
 
   test("duplicated spans: maximal cross-doc runs, any alignment, no self-dup") {
