@@ -23,7 +23,7 @@ object Bench {
     */
   private val headline: Seq[String] = Seq(
     "q1_agg", "q3_shipping_priority", "q5_local_supplier",
-    "q_asof_join", "q_asof_native", "q_sma", "q_vwap_signals",
+    "q_asof_join", "q_sma", "q_vwap_signals",
     "q_weekly_rollup", "q_hvc_daily", "q_events_sessions",
     "q_dedup_exact", "q_neardup_clusters",
     "q_simhash_neardup", "q_ngram_jaccard",
@@ -90,7 +90,7 @@ object Bench {
     * headline set is still measured and lands in BENCH_FULL.json). */
   private[graft] val stdoutQueryKeys: Seq[String] = Seq(
     "q1_agg", "q3_shipping_priority", "q9_product_profit",
-    "q_asof_native", "q_sma", "q_vwap_signals", "q_events_sessions",
+    "q_asof_join", "q_sma", "q_vwap_signals", "q_events_sessions",
     "q_dedup_exact", "q_neardup_clusters", "q_semantic_dedup",
     "q_quality_filter", "q_ema", "q_pagerank",
     "q_dup_spans", "q_span_removal", "q_geo_neighbors")

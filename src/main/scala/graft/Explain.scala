@@ -13,7 +13,7 @@ object Explain {
       else Seq("q_scan_filter", "q1_agg", "q_left_join", "q_split_adjust",
         "q_vwap_signals", "q_sma", "q_minhash_pairs", "q_cosine_knn",
         "q_band_join", "q_topk_per_group", "q_exists_subquery",
-        "q_simhash_neardup", "q_gap_fill", "q_asof_native", "q_tfidf",
+        "q_simhash_neardup", "q_gap_fill", "q_asof_join", "q_tfidf",
         "q_interval_overlap", "q_skyline", "q_corpus_card", "q_sq_knn",
         "q_domain_cap", "q_table_checksum")
     names.foreach { n =>

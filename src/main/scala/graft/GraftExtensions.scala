@@ -10,21 +10,23 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
   * conventional way a Spark library ships SQL-callable extensions, and it
   * composes with other extensions (the conf takes a comma-separated list).
   *
-  * Injected surface (same as [[GraftSession.registerFunctions]]):
+  * Injected surface, all expression-level (no custom physical operator or
+  * planner strategy):
   *   - `array_dot(a, b)` — native whole-stage-codegen dot product over
   *     float/double arrays (the similarity-search hot path; see
-  *     [[graft.functions.ArrayDotProduct]]).
+  *     [[graft.functions.ArrayDotProduct]]), its integer twin
+  *     `array_dot_long`, and the sorted-set merge counter
+  *     `sorted_intersect_count`;
+  *   - optimizer rules [[graft.plans.RewriteDotProduct]] and
+  *     [[graft.plans.PruneJaroWinkler]].
+  * The `product_agg` UDAF is not injectable this way; see
+  * [[GraftSession.registerFunctions]].
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     // optimizer rule: composable HOF dot products become the native
     // codegen'd expression (semantics preserved — see RewriteDotProduct)
     ext.injectOptimizerRule(_ => graft.plans.RewriteDotProduct)
-    // whole-operator extension: plans AsOfJoinNode → AsOfJoinExec (the
-    // native sort-merge as-of join; see graft.plans.AsOfJoinPlan), plus
-    // the column-pruning rule Catalyst can't apply to an unknown node
-    ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
-    ext.injectOptimizerRule(_ => graft.plans.PruneAsOfJoin)
     // jw >= t implies a length-ratio bound — inject the cheap guard
     ext.injectOptimizerRule(_ => graft.plans.PruneJaroWinkler)
     ext.injectFunction((

@@ -78,11 +78,13 @@ object GraftSession {
   }
 
   /** Expose the engine's custom functions to SQL text so `spark.sql` users
-    * get the same surface as the DataFrame API. `array_dot` is injected by
+    * get the same surface as the DataFrame API. `array_dot`,
+    * `array_dot_long` and `sorted_intersect_count` are injected by
     * [[GraftExtensions]] (spark.sql.extensions, set in `builder`); the
     * product UDAF goes through `spark.udf` — `Aggregator`-backed UDAFs
     * register per-session, not via extensions. Sessions built outside
-    * `builder` can still call `ColumnBridge.registerFunction` directly. */
+    * `builder` get the injected functions by setting
+    * `spark.sql.extensions=graft.GraftExtensions` themselves. */
   def registerFunctions(spark: SparkSession): Unit = {
     spark.udf.register("product_agg",
       org.apache.spark.sql.functions.udaf(graft.functions.ProductAgg))

@@ -9,13 +9,14 @@ import org.apache.spark.sql.functions._
   * flavored" shape promoted to a first-class operator — the time-series
   * join Polars ships as `join_asof` and DuckDB as `ASOF JOIN`).
   *
-  * Spark-first composition (preference (a) in the builder brief — no custom
-  * physical operator needed): tag both sides, union, and carry the latest
-  * right values forward with `last(..., ignoreNulls)` over one
-  * key-partitioned, time-ordered window. Exactly ONE shuffle on the key and
-  * a single sort — the same cost as a sort-merge join, but produces the
-  * as-of semantics directly. A right row tied on time sorts before the left
-  * row, so equality matches (≤, not <).
+  * Spark-first composition, no custom physical operator: tag both sides,
+  * union, and carry the latest right values forward with
+  * `last(..., ignoreNulls)` over one key-partitioned, time-ordered window.
+  * Exactly ONE shuffle on the key and a single sort — the same cost as a
+  * sort-merge join, but produces the as-of semantics directly — and
+  * Catalyst's own column pruning reaches both scans through the union
+  * (AsOfJoinSpec pins both over parquet inputs). A right row tied on time
+  * sorts before the left row, so equality matches (≤, not <).
   *
   * Requirements: right rows unique per (key, time); `valueCols` must not
   * collide with left column names.
@@ -74,49 +75,6 @@ object AsOfJoin {
                   leftTime: String, rightTime: String,
                   valueCols: Seq[String]): DataFrame =
     asOfImpl(left, right, key, leftTime, rightTime, valueCols, forward = true)
-
-  /** The as-of join through the native Catalyst operator
-    * ([[graft.plans.AsOfJoinNode]] → `AsOfJoinExec`): one hash exchange per
-    * side, sort by (key, time), and a linear per-partition merge with O(1)
-    * state — no window machinery at all. Same output contract as
-    * [[asOf]]/[[asOfForward]] (value columns + `matched_time`), proven
-    * row-identical by AsOfJoinSpec and the `q_asof_native` oracle.
-    * Requires the session to carry [[graft.GraftExtensions]] (the default
-    * builder does) so the planner knows the node. */
-  def asOfNative(left: DataFrame, right: DataFrame, key: Seq[String],
-                 leftTime: String, rightTime: String,
-                 valueCols: Seq[String], forward: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference}
-    import org.apache.spark.sql.catalyst.plans.logical.Project
-    import org.apache.spark.sql.graftshim.ColumnBridge
-    val lPlan = ColumnBridge.analyzed(left)
-    val rPlan0 = ColumnBridge.analyzed(right)
-    // self-join shape: when the two sides share attribute ids the analyzer
-    // would re-alias one child underneath us and orphan the captured refs —
-    // mint fresh ids for the right side up front instead
-    val rPlan =
-      if (lPlan.outputSet.intersect(rPlan0.outputSet).isEmpty) rPlan0
-      else Project(rPlan0.output.map(a => Alias(a, a.name)()), rPlan0)
-    def attr(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-             name: String) =
-      p.output.find(_.name == name).getOrElse(
-        throw new IllegalArgumentException(
-          s"column $name not found in ${p.output.map(_.name).mkString(", ")}"))
-    // the right side's contract is fixed (keys + time + values) — project
-    // it down immediately so the scan below never reads more columns
-    val rNeeded = (key :+ rightTime) ++ valueCols
-    val rPruned = Project(rNeeded.distinct.map(attr(rPlan, _)), rPlan)
-    val rightValues = valueCols.map(attr(rPruned, _))
-    val rTime = attr(rPruned, rightTime)
-    val outAttrs = (rightValues.map(a =>
-      AttributeReference(a.name, a.dataType, nullable = true)()) :+
-      AttributeReference("matched_time", rTime.dataType, nullable = true)())
-    ColumnBridge.ofRows(left.sparkSession, graft.plans.AsOfJoinNode(
-      lPlan, rPruned,
-      key.map(attr(lPlan, _)), key.map(attr(rPruned, _)),
-      attr(lPlan, leftTime), rTime,
-      rightValues :+ rTime, outAttrs, forward))
-  }
 
   /** Nearest as-of join: for each left row, the right row minimizing
     * |left-time − right-time| (Polars `join_asof(strategy="nearest")`),

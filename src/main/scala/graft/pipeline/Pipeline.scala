@@ -61,17 +61,17 @@ object Pipeline {
   /** Bronze: land the daily bars (fixture-backed stand-in for the REST
     * ingest S6-S8), Hive-partitioned, plus the splits dim.
     *
-    * Partition grain (`GRAFT_BRONZE_GRAIN`): `date` matches the reference's
-    * layout and keeps incremental ingest O(day) via dynamic partition
-    * overwrite; `month` is for bulk backfills, where per-day directories at
-    * small data-per-day hit the small-files trap; `auto` (default) picks by
+    * Partition grain (`grain`): `date` matches the reference's layout and
+    * keeps incremental ingest O(day) via dynamic partition overwrite;
+    * `month` is for bulk backfills, where per-day directories at small
+    * data-per-day hit the small-files trap; `auto` (default) picks by
     * measured volume — per-day directories only once a day of data is big
     * enough to be worth a directory (at 100 TB / 5 y that's ~80 GB/day →
     * date; at test scale factors → month). Both layouts read back
     * identically (`readTable` + pruning handle either); PipelineSpec proves
     * silver is byte-identical on top of each. */
   def runBronze(spark: SparkSession, sfDir: String, lake: Lake,
-                grain: String = sys.env.getOrElse("GRAFT_BRONZE_GRAIN", "auto")): Unit = {
+                grain: String = "auto"): Unit = {
     // one shuffle on the partition key so each partition directory gets
     // exactly one writer (otherwise: |dirs| × |tasks| tiny files)
     val raw = Tables.bars(spark, sfDir)
@@ -181,9 +181,7 @@ object Pipeline {
   /** Silver: split-adjust, roll up to three grains, compute indicators.
     * Append path processes only bars newer than the checkpoint; rewrite
     * path rebuilds everything (same code, different input slice + mode). */
-  def runSilver(spark: SparkSession, lake: Lake,
-                clusteredFiles: Option[Int] =
-                  sys.env.get("GRAFT_SILVER_CLUSTERED").map(_.trim.toInt)): Unit = {
+  def runSilver(spark: SparkSession, lake: Lake): Unit = {
     val full = shouldFullRewrite(spark, lake)
     val bronze = Storage.readTable(spark, lake.bronze("stocks"))
     val splits = Storage.readTable(spark, lake.bronze("splits"))
@@ -226,16 +224,8 @@ object Pipeline {
       try Jobs.overlap(spark, "silver.derived")(
         "weekly" -> grain("week", "weekly_aggregates", "weekly_indicators"),
         "monthly" -> grain("month", "monthly_aggregates", "monthly_indicators"),
-        // GRAFT_SILVER_CLUSTERED=<numFiles>: lay indicators out range-
-        // clustered on ticker (narrow per-file key ranges → min/max-stat
-        // pruning for the per-ticker reads gold and the catalog do).
-        "daily_indicators" -> (() => clusteredFiles match {
-          case Some(n) => Storage.writeClustered(
-            SilverOps.indicators(allDaily), lake.silver("daily_indicators"),
-            clusterBy = Seq("ticker"), numFiles = n)
-          case None => Storage.writeTable(
-            SilverOps.indicators(allDaily), lake.silver("daily_indicators"))
-        }))
+        "daily_indicators" -> (() => Storage.writeTable(
+          SilverOps.indicators(allDaily), lake.silver("daily_indicators"))))
       finally if (allDaily ne daily) allDaily.unpersist(false)
     } finally daily.unpersist(false)
 

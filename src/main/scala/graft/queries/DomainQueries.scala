@@ -281,18 +281,6 @@ object DomainQueries {
           col("split_from"), col("split_to"),
           col("matched_time").as("last_exec_date"))),
 
-    // Same join through the native Catalyst operator (AsOfJoinNode →
-    // AsOfJoinExec: hash-cluster + sort + linear merge, no window
-    // machinery) — identical output contract, same DuckDB ASOF oracle.
-    "q_asof_native" -> ((s, dir) =>
-      graft.operators.AsOfJoin.asOfNative(
-        Tables.bars(s, dir).select("ticker", "date", "close"),
-        syntheticSplits(s), Seq("ticker"),
-        "date", "execution_date", Seq("split_from", "split_to"))
-        .select(col("ticker"), col("date"), col("close"),
-          col("split_from"), col("split_to"),
-          col("matched_time").as("last_exec_date"))),
-
     // As-of with a match-staleness tolerance (Polars join_asof(tolerance)):
     // matches older than 90 days are nulled out. Oracle = ASOF join + the
     // same CASE nulling.
@@ -584,12 +572,6 @@ object DomainQueries {
         |  ON b.ticker = f.ticker AND b.date = f.date""".stripMargin),
 
     "q_asof_join" -> withBars(splitsSql,
-      """SELECT b.ticker, b.date, b.close, s.split_from, s.split_to,
-        |  s.execution_date AS last_exec_date
-        |FROM bars b ASOF LEFT JOIN splits s
-        |  ON b.ticker = s.ticker AND b.date >= s.execution_date""".stripMargin),
-
-    "q_asof_native" -> withBars(splitsSql,
       """SELECT b.ticker, b.date, b.close, s.split_from, s.split_to,
         |  s.execution_date AS last_exec_date
         |FROM bars b ASOF LEFT JOIN splits s

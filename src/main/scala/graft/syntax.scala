@@ -34,11 +34,6 @@ object syntax {
                         rightTime: String, valueCols: Seq[String]): DataFrame =
       AsOfJoin.asOfForward(df, right, key, leftTime, rightTime, valueCols)
 
-    /** As-of join through the native Catalyst operator. */
-    def asofJoinNative(right: DataFrame, key: Seq[String], leftTime: String,
-                       rightTime: String, valueCols: Seq[String]): DataFrame =
-      AsOfJoin.asOfNative(df, right, key, leftTime, rightTime, valueCols)
-
     /** Skew-safe equi-join: left salted by a unique column, right
       * replicated `salts` ways. */
     def saltedJoin(right: DataFrame, key: Seq[String], salts: Int,

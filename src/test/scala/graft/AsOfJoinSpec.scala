@@ -2,6 +2,7 @@ package graft
 
 import graft.operators.AsOfJoin
 import java.sql.Date
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class AsOfJoinSpec extends SparkSpecBase {
@@ -79,24 +80,18 @@ class AsOfJoinSpec extends SparkSpecBase {
     assert(out.isNullAt(out.fieldIndex("matched_time")))
   }
 
-  test("native as-of operator reproduces the small-fixture semantics, both directions") {
-    val back = AsOfJoin.asOfNative(quotes, marks, Seq("ticker"), "date", "mark_date", Seq("mark"))
-      .collect().map(r => (r.getString(0), r.getDate(1).toString,
-        Option(r.get(3)).map(_.asInstanceOf[Double]))).toSet
-    assert(back === Set(
-      ("A", "2024-01-01", Some(1.0)),
-      ("A", "2024-01-05", Some(2.0)),
-      ("A", "2024-03-01", Some(2.0)),
-      ("B", "2024-01-03", None)))
-    val fwd = AsOfJoin.asOfNative(quotes, marks, Seq("ticker"), "date", "mark_date", Seq("mark"),
-      forward = true)
-      .collect().map(r => (r.getString(0), r.getDate(1).toString,
-        Option(r.get(3)).map(_.asInstanceOf[Double]))).toSet
-    assert(fwd === Set(
-      ("A", "2024-01-01", Some(1.0)),
-      ("A", "2024-01-05", None),
-      ("A", "2024-03-01", None),
-      ("B", "2024-01-03", None)))
+  /** Spark's own as-of join: `Dataset.joinAsOf` builds Catalyst's logical
+    * `AsOfJoin`, which `RewriteAsOfJoin` turns into a correlated `min_by`
+    * subquery (planned as a nested-loop join on the time predicate). The
+    * method is `private[sql]`, so it is reached by reflection. Its output
+    * keeps both sides' key columns, so callers pick the key through `left(..)`. */
+  private def sparkAsOf(left: DataFrame, right: DataFrame, leftTime: String,
+      rightTime: String, forward: Boolean): DataFrame = {
+    val joinAsOf = left.getClass.getMethods.find(m => m.getName == "joinAsOf" &&
+      m.getParameterTypes()(3) == classOf[Seq[_]]).get
+    joinAsOf.invoke(left, right, left(leftTime), right(rightTime), Seq("ticker"), "left",
+      null, java.lang.Boolean.TRUE, if (forward) "forward" else "backward")
+      .asInstanceOf[DataFrame]
   }
 
   test("native as-of ≡ composed as-of on the bars fixture, both directions") {
@@ -110,44 +105,70 @@ class AsOfJoinSpec extends SparkSpecBase {
         (if (fwd) AsOfJoin.asOfForward(left, right, Seq("ticker"), "date", "rdate", Seq("volume"))
          else AsOfJoin.asOf(left, right, Seq("ticker"), "date", "rdate", Seq("volume")))
           .select(cols.map(col): _*)
-      val native = AsOfJoin.asOfNative(left, right, Seq("ticker"), "date", "rdate",
-        Seq("volume"), forward = fwd).select(cols.map(col): _*)
+      val native = sparkAsOf(left, right, "date", "rdate", fwd)
+        .select(left("ticker"), $"date", $"close", $"volume", $"rdate".as("matched_time"))
+      // every right row of the same ticker on the allowed side of the left
+      // row's date; the as-of match is the latest (backward) or earliest
+      // (forward) of them, and no candidate at all leaves nulls
+      val reference = left
+        .join(right.withColumnRenamed("ticker", "rticker"), $"rticker" === $"ticker" &&
+          (if (fwd) $"rdate" >= $"date" else $"rdate" <= $"date"), "left")
+        .groupBy($"ticker", $"date", $"close")
+        .agg(
+          (if (fwd) min_by($"volume", $"rdate") else max_by($"volume", $"rdate")).as("volume"),
+          (if (fwd) min($"rdate") else max($"rdate")).as("matched_time"))
+        .select(cols.map(col): _*)
       val a = composed.collect().map(_.toString).sorted
-      val b = native.collect().map(_.toString).sorted
-      assert(a.length === b.length, s"row counts differ (forward=$fwd)")
-      assert(a === b, s"rows differ (forward=$fwd)")
+      assert(a.length === left.count(), s"one output row per left row (forward=$fwd)")
+      assert(a === native.collect().map(_.toString).sorted, s"native rows differ (forward=$fwd)")
+      assert(a === reference.collect().map(_.toString).sorted,
+        s"reference rows differ (forward=$fwd)")
+      assert(reference.filter($"matched_time".isNotNull).count() > 0,
+        s"no left row matched (forward=$fwd)")
     }
   }
 
-  test("native as-of plans one merge operator over two exchanges") {
-    // materialize the inputs so the only exchanges in the plan are the
-    // operator's own (bars itself aggregates → one exchange per side)
-    val dir = java.nio.file.Files.createTempDirectory("graft_asof_native").toString
-    Tables.bars(spark, sf).write.mode("overwrite").parquet(dir)
-    val bars = spark.read.parquet(dir)
-    val native = AsOfJoin.asOfNative(
-      bars.select($"ticker", $"date", $"close"),
-      bars.select($"ticker", $"date".as("rdate"), $"volume"),
-      Seq("ticker"), "date", "rdate", Seq("volume"))
-    native.write.format("noop").mode("overwrite").save()
-    val plan = native.queryExecution.executedPlan.toString
-    assert(plan.contains("AsOfJoin"), plan.take(500))
+  /** Both inputs materialized as parquet, so the only exchanges in a plan
+    * are the join's own (bars itself aggregates); the left side keeps all
+    * 8 bar columns. */
+  private lazy val (wideBars, barMarks) = {
+    val leftDir = java.nio.file.Files.createTempDirectory("graft_asof_left").toString
+    val rightDir = java.nio.file.Files.createTempDirectory("graft_asof_right").toString
+    Tables.bars(spark, sf).write.mode("overwrite").parquet(leftDir)
+    Tables.bars(spark, sf).filter(dayofmonth($"date") <= 7)
+      .select($"ticker", $"date".as("mark_date"), $"open".as("mark"))
+      .write.mode("overwrite").parquet(rightDir)
+    (spark.read.parquet(leftDir), spark.read.parquet(rightDir))
+  }
+
+  test("composed as-of plans exactly one exchange, hash-partitioned on the key") {
+    val out = AsOfJoin.asOf(wideBars, barMarks, Seq("ticker"), "date", "mark_date", Seq("mark"))
+      .select("ticker", "date", "mark", "matched_time")
+    val plan = out.queryExecution.executedPlan.toString
     val exchanges = "Exchange".r.findAllIn(plan).length
-    assert(exchanges === 2, s"expected 2 exchanges, plan:\n${plan.take(1500)}")
+    assert(exchanges === 1, s"expected 1 exchange, plan:\n${plan.take(2000)}")
+    assert(plan.contains("Exchange hashpartitioning(ticker"), plan.take(2000))
+    assert(out.collect().length === wideBars.count())
   }
 
   test("pruning rule narrows the left scan under the native as-of join") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_asof_prune").toString
-    Tables.bars(spark, sf).write.mode("overwrite").parquet(dir)
-    val wide = spark.read.parquet(dir) // 8 columns
-    val out = AsOfJoin.asOfNative(wide, marks, Seq("ticker"), "date", "mark_date", Seq("mark"))
-      .select("ticker", "date", "mark", "matched_time")
-    val plan = out.queryExecution.executedPlan.toString
-    // the only parquet scan is the left side (marks is a local relation);
-    // pruning must drop the five unused bar columns from its ReadSchema
-    assert(!plan.contains("close"), plan.take(1200))
-    assert(!plan.contains("volume"), plan.take(1200))
-    assert(out.collect().length === Tables.bars(spark, sf).count())
+    // Catalyst's own column pruning, under Spark's as-of join and under
+    // the composed one: a query that projects away the unused bar columns
+    // reads only the join key and time from the left parquet
+    val native = sparkAsOf(wideBars, barMarks, "date", "mark_date", forward = false)
+      .select(wideBars("ticker"), wideBars("date"), barMarks("mark"),
+        barMarks("mark_date").as("matched_time"))
+    val composed = AsOfJoin.asOf(wideBars, barMarks, Seq("ticker"), "date", "mark_date",
+      Seq("mark")).select("ticker", "date", "mark", "matched_time")
+    for ((name, out) <- Seq("native" -> native, "composed" -> composed)) {
+      val plan = out.queryExecution.executedPlan.toString
+      val schemas = "ReadSchema: (struct<[^>]*>)".r.findAllMatchIn(plan)
+        .map(_.group(1)).toSeq
+      assert(schemas.contains("struct<ticker:string,date:date>"), s"$name: $schemas")
+      assert(schemas.forall(s => !s.contains("close") && !s.contains("volume")),
+        s"$name: $schemas")
+      assert(out.collect().length === wideBars.count(), name)
+    }
   }
 
   test("custom functions are callable from SQL text") {

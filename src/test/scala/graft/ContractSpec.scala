@@ -94,6 +94,6 @@ class ContractSpec extends AnyFunSuite with SparkSpecBase {
     } fail(s"$na and $nb both define: ${dup.toSeq.sorted}")
     assert(modules.map(_._2.size).sum === SparkEntry.queries.size)
     // a change to this count is a declared scope decision: record it in CHANGES.md
-    assert(SparkEntry.queries.size === 303)
+    assert(SparkEntry.queries.size === 302)
   }
 }

@@ -28,19 +28,6 @@ class PipelineSpec extends SparkSpecBase {
     assert(cp.contains("silver_last_full_rewrite"))
   }
 
-  test("clustered silver layout holds the same indicator rows") {
-    val lakeA = Lake(Files.createTempDirectory("graft_lake_a").toString)
-    val lakeB = Lake(Files.createTempDirectory("graft_lake_b").toString)
-    Pipeline.runBronze(spark, sf, lakeA)
-    Pipeline.runSilver(spark, lakeA, clusteredFiles = None)
-    Pipeline.runBronze(spark, sf, lakeB)
-    Pipeline.runSilver(spark, lakeB, clusteredFiles = Some(4))
-    val a = Storage.readTable(spark, lakeA.silver("daily_indicators"))
-    val b = Storage.readTable(spark, lakeB.silver("daily_indicators"))
-    assert(a.except(b).count() === 0)
-    assert(b.except(a).count() === 0)
-  }
-
   test("month-grain bronze produces byte-identical silver to date-grain") {
     val lakeD = Lake(Files.createTempDirectory("graft_lake_d").toString)
     val lakeM = Lake(Files.createTempDirectory("graft_lake_m").toString)
