@@ -28,12 +28,14 @@ object AsOfJoin {
            valueCols: Seq[String]): DataFrame =
     asOfImpl(left, right, key, leftTime, rightTime, valueCols, forward = false)
 
-  /** Shared union+window composition; `forward` flips the sort direction,
-    * the frame side, and the carrying aggregate — everything else
-    * (tagging, union, carry-fold, projection) is direction-independent. */
-  private def asOfImpl(left: DataFrame, right: DataFrame, key: Seq[String],
-                       leftTime: String, rightTime: String,
-                       valueCols: Seq[String], forward: Boolean): DataFrame = {
+  /** Both sides on one time axis `_t`: left rows tagged `_side` 1, right
+    * rows (key, time, values) tagged `_side` 0 with their time kept as `_rt`.
+    * Every window here orders by `_t` (either direction), then `_side`
+    * ascending, so at equal times a right row precedes the left row in
+    * traversal and equality matches. */
+  private def tagAndUnion(left: DataFrame, right: DataFrame, key: Seq[String],
+                          leftTime: String, rightTime: String,
+                          valueCols: Seq[String]): DataFrame = {
     val leftTagged = left
       .withColumn("_t", col(leftTime))
       .withColumn("_side", lit(1))
@@ -41,8 +43,16 @@ object AsOfJoin {
       .select((key.map(col) :+ col(rightTime).as("_t")) ++ valueCols.map(col): _*)
       .withColumn("_side", lit(0))
       .withColumn("_rt", col("_t"))
+    leftTagged.unionByName(rightTagged, allowMissingColumns = true)
+  }
 
-    val unioned = leftTagged.unionByName(rightTagged, allowMissingColumns = true)
+  /** Shared union+window composition; `forward` flips the sort direction,
+    * the frame side, and the carrying aggregate — everything else
+    * (tagging, union, carry-fold, projection) is direction-independent. */
+  private def asOfImpl(left: DataFrame, right: DataFrame, key: Seq[String],
+                       leftTime: String, rightTime: String,
+                       valueCols: Seq[String], forward: Boolean): DataFrame = {
+    val unioned = tagAndUnion(left, right, key, leftTime, rightTime, valueCols)
     // Forward is the SAME running-frame carry on a time-DESCENDING sort:
     // walking latest→earliest, "last right seen" is the smallest right time
     // ≥ the current row's. (A currentRow→unboundedFollowing frame would be
@@ -88,14 +98,7 @@ object AsOfJoin {
   def asOfNearest(left: DataFrame, right: DataFrame, key: Seq[String],
                   leftTime: String, rightTime: String,
                   valueCols: Seq[String]): DataFrame = {
-    val leftTagged = left
-      .withColumn("_t", col(leftTime))
-      .withColumn("_side", lit(1))
-    val rightTagged = right
-      .select((key.map(col) :+ col(rightTime).as("_t")) ++ valueCols.map(col): _*)
-      .withColumn("_side", lit(0))
-      .withColumn("_rt", col("_t"))
-    val unioned = leftTagged.unionByName(rightTagged, allowMissingColumns = true)
+    val unioned = tagAndUnion(left, right, key, leftTime, rightTime, valueCols)
     val wB = Window.partitionBy(key.map(col): _*)
       .orderBy(col("_t").asc, col("_side"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)

@@ -4,6 +4,7 @@ import graft.Tables
 import graft.operators.{PatternOps, SilverOps}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.collection.mutable
 
 /** The reference's COMPLETE declared query catalog: all 19 canned queries
   * from `metadata.json` (databases/hvcs/queries), registered verbatim
@@ -69,35 +70,46 @@ object DeclaredCatalog {
     "falling_vs_stairstepping" ->
       "SELECT 'Falling' as pattern_type, COUNT(*) as count, AVG(steps) as avg_steps FROM falling_down_stairs_summary_stocks UNION ALL SELECT 'Rising' as pattern_type, COUNT(*) as count, AVG(steps) as avg_steps FROM stairstepping_summary_stocks")
 
-  // DataFrames cached per dir; views are (re-)registered on EVERY call —
-  // temp view names are global to the session, so a second dir would
-  // otherwise silently hijack the first dir's cached registration.
+  // Temp views are per session and their names are global within it, so
+  // the built DataFrames are cached per (session, dir) and a session's
+  // views are registered only when it last served another dir: serving
+  // dir B re-registers, so B never reads A's tables. `tables` and
+  // `servedDir` are guarded by this object's lock.
   private val tables =
-    scala.collection.concurrent.TrieMap.empty[String, Map[String, DataFrame]]
+    mutable.Map.empty[(SparkSession, String), Map[String, DataFrame]]
+  private val servedDir = mutable.Map.empty[SparkSession, String]
 
-  /** Build (cached per dir) + register every catalog table for `dir`.
-    * Map keys starting with "_" are shared intermediates (the raw pattern
-    * tables [[DeclaredQueries]] also serves), not registered as views. */
-  def registerViews(s: SparkSession, dir: String): Unit =
-    built(s, dir).foreach { case (name, df) =>
-      if (!name.startsWith("_")) df.createOrReplaceTempView(name)
+  /** The raw rising/falling pattern tables [[DeclaredQueries]] serves. The
+    * catalog tables derive from them, but they are not part of the export. */
+  private val patternViews = Set("stairstepping_patterns", "falling_down_stairs_patterns")
+
+  /** Build (cached per session and dir) and register every view the
+    * declared surfaces read in `s`: the 9 catalog tables plus the two
+    * pattern views. Registers nothing while `s` already serves `dir`. */
+  def registerViews(s: SparkSession, dir: String): Unit = synchronized {
+    if (!servedDir.get(s).contains(dir)) {
+      servedDir -= s // a failure part-way leaves the views unclaimed
+      built(s, dir).foreach { case (name, df) => df.createOrReplaceTempView(name) }
+      servedDir(s) = dir
     }
+  }
+
+  /** `text` analysed over `dir`'s views in `s`. Registration and analysis
+    * hold one lock, so a concurrent switch to another dir cannot rebind
+    * the views in between. */
+  def query(s: SparkSession, dir: String, text: String): DataFrame = synchronized {
+    registerViews(s, dir)
+    s.sql(text)
+  }
 
   /** The publishable catalog tables (view name → DataFrame), i.e. every
     * table the 19 canned queries run over — the export set for
     * [[graft.publish.Publisher]]. */
   def catalogTables(s: SparkSession, dir: String): Map[String, DataFrame] =
-    built(s, dir).filter { case (name, _) => !name.startsWith("_") }
+    built(s, dir) -- patternViews
 
-  /** The raw rising/falling pattern tables for `dir` (pre-enrichment) —
-    * one cached computation shared with the DeclaredQueries surface. */
-  def patternTables(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val t = built(s, dir)
-    (t("_rising_patterns"), t("_falling_patterns"))
-  }
-
-  private def built(s: SparkSession, dir: String): Map[String, DataFrame] =
-    tables.getOrElseUpdate(dir, {
+  private def built(s: SparkSession, dir: String): Map[String, DataFrame] = synchronized {
+    tables.getOrElseUpdate((s, dir), {
       val disk = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
       val daily = Tables.bars(s, dir)
       def hvcOf(bars: DataFrame) = PatternOps.highVolumeCloses(
@@ -151,14 +163,13 @@ object DeclaredCatalog {
         "stairstepping_hvcs_stocks" -> hvcsTable,
         "stairstepping_summary_stocks" -> summary(rising, rising = true),
         "falling_down_stairs_summary_stocks" -> summary(falling, rising = false),
-        "_rising_patterns" -> rising,
-        "_falling_patterns" -> falling))
+        "stairstepping_patterns" -> rising,
+        "falling_down_stairs_patterns" -> falling))
         .toMap
     })
+  }
 
   /** Run one catalog query by name over `dir`'s tables. */
-  def run(s: SparkSession, dir: String, name: String): DataFrame = {
-    registerViews(s, dir)
-    s.sql(sql(name))
-  }
+  def run(s: SparkSession, dir: String, name: String): DataFrame =
+    query(s, dir, sql(name))
 }
