@@ -3247,9 +3247,13 @@ object TextQueries {
     // cosine, CC as a recursive CTE (the q_neardup_clusters shape), keep
     // the min id per component. `e`/`norms` stay in scope from the kmeans
     // CTE; `e2` aliases edges to avoid colliding with the `e` CTE.
+    // MATERIALIZED is a DuckDB planner hint, not a change of meaning: each
+    // of `assign`, `dup` and `edges` is read twice or inside the recursion,
+    // and inlined copies re-run the k-means replay per reference, which
+    // exhausts DuckDB's default 12.5 GiB memory limit on a 15 GB host.
     "q_semantic_dedup" -> (
       ivfScoresCte.replaceFirst("WITH ", "WITH RECURSIVE ") + ",\n" +
-      """assign AS (
+      """assign AS MATERIALIZED (
         |  SELECT vec_id, cid FROM (
         |    SELECT vec_id, cid,
         |      ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY s DESC, cid) AS rn
@@ -3257,7 +3261,7 @@ object TextQueries {
         |cand AS (
         |  SELECT a.vec_id AS id_a, b.vec_id AS id_b
         |  FROM assign a JOIN assign b ON a.cid = b.cid AND a.vec_id < b.vec_id),
-        |dup AS (
+        |dup AS MATERIALIZED (
         |  SELECT c.id_a, c.id_b
         |  FROM cand c
         |  JOIN e va ON va.vec_id = c.id_a
@@ -3269,7 +3273,7 @@ object TextQueries {
         |  HAVING ROUND(SUM(CAST(va.embedding[CAST(i AS INTEGER)] AS DOUBLE)
         |           * CAST(vb.embedding[CAST(i AS INTEGER)] AS DOUBLE))
         |         / (MAX(na.nrm) * MAX(nb.nrm)), 6) >= 0.4),
-        |edges AS (
+        |edges AS MATERIALIZED (
         |  SELECT id_a AS a, id_b AS b FROM dup
         |  UNION ALL
         |  SELECT id_b, id_a FROM dup),

@@ -1,9 +1,12 @@
 package graft
 
+import graft.operators.{PatternOps, SilverOps}
 import graft.queries.{DeclaredCatalog, DeclaredQueries}
 import java.nio.file.Files
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.plans.logical.View
 import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.execution.command.CreateViewCommand
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.graftshim.ListenerBusBridge
@@ -54,6 +57,30 @@ class DeclaredCatalogSpec extends SparkSpecBase {
     assert(views.get === 0)
   }
 
+  test("every view is served from its one cached node, with a truncated lineage") {
+    // a pass fills every table's cached blocks; the first job over them
+    // truncates their lineage, so tasks no longer ship the derivation
+    DeclaredCatalog.sql.keys.foreach(DeclaredCatalog.run(spark, sf, _).collect())
+    DeclaredQueries.queries.values.foreach(_(spark, sf).collect())
+    val views = DeclaredCatalog.catalogTables(spark, sf).keySet ++
+      Set("stairstepping_patterns", "falling_down_stairs_patterns")
+    assert(views.size === 11)
+    views.foreach { v =>
+      withClue(s"$v: ") {
+        val qe = DeclaredCatalog.synchronized {
+          DeclaredCatalog.registerViews(spark, sf)
+          spark.table(v).queryExecution
+        }
+        // what the view expands to: the cached node, under the rename at most
+        val body = qe.analyzed.collectFirst { case view: View => view.child }.get
+        assert(body.collect { case p => p.nodeName }.size <= 2)
+        val cached = qe.withCachedData.collect { case r: InMemoryRelation => r }
+        assert(cached.size === 1)
+        assert(cached.head.cacheBuilder.cachedColumnBuffers.isCheckpointed)
+      }
+    }
+  }
+
   test("a second session serves a directory another session built") {
     def hvcs(s: SparkSession) = DeclaredCatalog.query(s, sf,
       "SELECT * FROM daily_high_volume_closes_stocks").collect().map(_.toString).sorted
@@ -92,6 +119,24 @@ class DeclaredCatalogSpec extends SparkSpecBase {
         }
       }
     } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dirB))
+  }
+
+  test("dropped served blocks make the next call build the dir again, not fail") {
+    // clearCache (Verify and Bench call it between queries) drops checkpointed
+    // blocks that the derived tables' cached plans still scan. Unpersisting
+    // equal plans of the daily HVC table and the rising patterns drops two of
+    // them without clearing the rest of the shared session's cache.
+    def rows() = DeclaredQueries.queries("q_decl_recent_strong")(spark, sf)
+      .collect().map(_.toString).sorted.toSeq
+    def stored = spark.sparkContext.getRDDStorageInfo.length
+    val expected = rows()
+    val before = stored
+    val dailyHvc = PatternOps.highVolumeCloses(
+      SilverOps.indicators(Tables.bars(spark, sf)), threshold = 1.5)
+    dailyHvc.unpersist(blocking = true)
+    PatternOps.stairPatterns(dailyHvc, ascending = true, minSteps = 2).unpersist(blocking = true)
+    assert(stored === before - 2)
+    assert(rows() === expected)
   }
 
   test("catalog invariants: limits respected, union compares both directions") {
