@@ -1,7 +1,11 @@
 package graft
 
+import graft.queries.DeclaredCatalog
+
 /** Plan audit tool: prints the formatted physical plan for selected queries
-  * so pushdown / broadcast / codegen spans can be inspected.
+  * so pushdown / broadcast / codegen spans can be inspected. A name is a
+  * [[SparkEntry]] query or one of the 19 canned catalog queries
+  * ([[graft.queries.DeclaredCatalog.sql]]).
   * Usage: runMain graft.Explain [queryName ...]  (default: a headline set)
   */
 object Explain {
@@ -24,8 +28,11 @@ object Explain {
       // POST-materialization plan (cached-relation scans feeding the
       // final shape); a missing/corrupt table there must not abort the
       // remaining plan dumps
-      try SparkEntry.queries(n)(spark, sfDir).explain("formatted")
-      catch { case e: Throwable =>
+      try {
+        val df = if (DeclaredCatalog.sql.contains(n)) DeclaredCatalog.run(spark, sfDir, n)
+          else SparkEntry.queries(n)(spark, sfDir)
+        df.explain("formatted")
+      } catch { case e: Throwable =>
         println(s"(failed to build plan: ${e.getClass.getSimpleName}: ${e.getMessage})")
       }
       // the eager queries above persist small results; clear so a later

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.operators.{PatternOps, SilverOps}
+import org.apache.spark.network.util.JavaUtils
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.functions._
@@ -31,9 +32,22 @@ import scala.collection.mutable
   *    are tamer than real markets'.
   *
   * Serving: each table is persisted `MEMORY_AND_DISK` with its columnar
-  * cache blocks locally checkpointed in place (`served`), and each view is
-  * registered over the one cached node. A query analyses a leaf, not the
-  * derivation, and its tasks ship no lineage.
+  * cache blocks locally checkpointed in place (`checkpointed`), and each
+  * view is registered over the one cached node. A query analyses a leaf,
+  * not the derivation, and its tasks ship no lineage.
+  *
+  * Layout (`layout`, decided once per dir when it is built): when the
+  * input's scan-free size estimate fits one
+  * `spark.sql.adaptive.advisoryPartitionSizeInBytes` (64 MB by default),
+  * each table is served as one partition (`coalesce(1)`). A leaf reporting
+  * `SinglePartition` satisfies every ordering and distribution, so the
+  * catalog's `ORDER BY`s, global aggregates and the derived tables'
+  * per-ticker windows plan no exchange, and a query without a broadcast
+  * runs one job. The threshold is the advisory size because that is the
+  * partition AQE itself would coalesce such an input into: below it, more
+  * partitions only add per-task and per-stage cost. Larger inputs keep the
+  * derivation's partitions, so a big catalog's window stages are not
+  * serialised into one task.
   *
   * The trade-off is fault tolerance: a locally checkpointed block cannot be
   * recomputed. If an executor holding one is lost, queries over its table
@@ -51,7 +65,8 @@ import scala.collection.mutable
   * `unpersist` or `uncacheTable` on a view itself matches no cache entry
   * (entries are keyed by the derivation; the view is the cached node), so
   * it changes nothing, and `spark.catalog.isCached` reads false on the
-  * views for the same reason.
+  * views for the same reason. `release(dir)` is the way to shed a dir: it
+  * removes the dir's cache entries and views in every session.
   */
 object DeclaredCatalog {
 
@@ -105,9 +120,11 @@ object DeclaredCatalog {
   private val servedDir = mutable.Map.empty[SparkSession, String]
 
   /** A dir's views in `s`: each frame's plan is its table's one cached
-    * node (under the HVC rename), not the derivation. `blocks` are captured
-    * here, before anything can drop them. */
-  private final class Served(s: SparkSession, derived: Map[String, DataFrame]) {
+    * node (under the HVC rename), not the derivation. `persisted` are the
+    * frames `served` persisted, in build order. `blocks` are captured here,
+    * before anything can drop them. */
+  private final class Served(s: SparkSession, derived: Map[String, DataFrame],
+      persisted: Seq[DataFrame]) {
     private val plans = derived.map { case (name, df) => name -> df.queryExecution.withCachedData }
     val frames: Map[String, DataFrame] = plans.map { case (name, plan) => name -> PlanFrame(s, plan) }
     private val blocks = plans.values.flatMap(_.collect {
@@ -116,6 +133,10 @@ object DeclaredCatalog {
 
     /** False once `clearCache` or an `unpersist` dropped any table's blocks. */
     def live: Boolean = blocks.forall(_.getStorageLevel != StorageLevel.NONE)
+
+    /** Removes the cache entries, derived tables first, so no dependent
+      * entry is re-planned over one already gone. */
+    def unpersist(): Unit = persisted.reverseIterator.foreach(_.unpersist(blocking = true))
   }
 
   /** The raw rising/falling pattern tables [[DeclaredQueries]] serves. The
@@ -149,12 +170,37 @@ object DeclaredCatalog {
   def catalogTables(s: SparkSession, dir: String): Map[String, DataFrame] =
     built(s, dir) -- patternViews
 
+  /** Stops serving `dir` in every session: unpersists its tables (removing
+    * the cache entries, not only the blocks), forgets them, and drops the
+    * views of each session that serves `dir`. The next call for `dir`
+    * builds it again. */
+  def release(dir: String): Unit = synchronized {
+    tables.keys.filter(_._2 == dir).toSeq.foreach { case key @ (s, _) =>
+      val entry = tables.remove(key).get
+      entry.unpersist()
+      if (servedDir.get(s).contains(dir)) {
+        servedDir -= s
+        entry.frames.keys.foreach(s.catalog.dropTempView)
+      }
+    }
+  }
+
+  /** The layout `dir`'s tables are served in, decided from the input's
+    * scan-free size estimate: one partition when it fits one advisory
+    * partition, otherwise the derivation's own partitioning. */
+  private[graft] def layout(s: SparkSession, dir: String): DataFrame => DataFrame = {
+    val estimate = Tables.bars(s, dir).queryExecution.optimizedPlan.stats.sizeInBytes
+    val advisory = JavaUtils.byteStringAsBytes(
+      s.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes"))
+    if (estimate <= advisory) _.coalesce(1) else identity
+  }
+
   /** `df` persisted, with its columnar cache blocks marked for local
     * checkpointing before any job touches them: the first job that fills
     * the blocks truncates their lineage, and they stay the same compressed
     * batches. An equal plan another session already persisted keeps its
     * (already checkpointed) blocks. */
-  private def served(df: DataFrame): DataFrame = {
+  private def checkpointed(df: DataFrame): DataFrame = {
     df.persist(StorageLevel.MEMORY_AND_DISK)
     df.queryExecution.withCachedData match {
       case leaf: InMemoryRelation =>
@@ -173,7 +219,14 @@ object DeclaredCatalog {
       tables -= ((s, dir))
       servedDir -= s
     }
-    tables.getOrElseUpdate((s, dir), new Served(s, {
+    tables.getOrElseUpdate((s, dir), {
+      val shape = layout(s, dir)
+      val persisted = mutable.ArrayBuffer.empty[DataFrame]
+      def served(df: DataFrame): DataFrame = {
+        val p = checkpointed(shape(df))
+        persisted += p
+        p
+      }
       val daily = Tables.bars(s, dir)
       def hvcOf(bars: DataFrame) = PatternOps.highVolumeCloses(
         SilverOps.indicators(bars), threshold = 1.5).transform(served)
@@ -222,14 +275,15 @@ object DeclaredCatalog {
           .transform(served)
       }
 
-      (hvcViews ++ Seq(
+      val views = (hvcViews ++ Seq(
         "stairstepping_hvcs_stocks" -> hvcsTable,
         "stairstepping_summary_stocks" -> summary(rising, rising = true),
         "falling_down_stairs_summary_stocks" -> summary(falling, rising = false),
         "stairstepping_patterns" -> rising,
         "falling_down_stairs_patterns" -> falling))
         .toMap
-    })).frames
+      new Served(s, views, persisted.toSeq)
+    }).frames
   }
 
   /** Run one catalog query by name over `dir`'s tables. */

@@ -2,12 +2,18 @@ package graft
 
 import graft.operators.{PatternOps, SilverOps}
 import graft.queries.{DeclaredCatalog, DeclaredQueries}
+import java.io.File
 import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.commons.io.FileUtils
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.View
 import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.execution.command.CreateViewCommand
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.graftshim.ListenerBusBridge
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -15,6 +21,12 @@ import org.apache.spark.sql.util.QueryExecutionListener
 /** Every canned query in the reference's Datasette catalog must run
   * unchanged over this engine's gold views — the switch-over contract. */
 class DeclaredCatalogSpec extends SparkSpecBase {
+
+  /** The 11 views the declared surfaces read. */
+  private def views: Set[String] = DeclaredCatalog.catalogTables(spark, sf).keySet ++
+    Set("stairstepping_patterns", "falling_down_stairs_patterns")
+
+  private def stored = spark.sparkContext.getRDDStorageInfo.length
 
   test("all 19 catalog queries run verbatim and project the declared columns") {
     assert(DeclaredCatalog.sql.size === 19)
@@ -62,8 +74,6 @@ class DeclaredCatalogSpec extends SparkSpecBase {
     // truncates their lineage, so tasks no longer ship the derivation
     DeclaredCatalog.sql.keys.foreach(DeclaredCatalog.run(spark, sf, _).collect())
     DeclaredQueries.queries.values.foreach(_(spark, sf).collect())
-    val views = DeclaredCatalog.catalogTables(spark, sf).keySet ++
-      Set("stairstepping_patterns", "falling_down_stairs_patterns")
     assert(views.size === 11)
     views.foreach { v =>
       withClue(s"$v: ") {
@@ -94,6 +104,77 @@ class DeclaredCatalogSpec extends SparkSpecBase {
     assert(topGainers(other) === topGainers(spark))
   }
 
+  test("a warm pass over a small catalog plans no shuffle and runs one job per query") {
+    // every served table is one partition at sf0.001, so no ORDER BY,
+    // global aggregate or join needs an exchange; the one exchange left is
+    // q_decl_recent_positive's broadcast of its MAX(end_date)
+    val queries: Seq[(String, () => DataFrame)] =
+      DeclaredCatalog.sql.keys.toSeq.sorted.map(n => n -> (() => DeclaredCatalog.run(spark, sf, n))) ++
+        DeclaredQueries.queries.toSeq.sortBy(_._1).map { case (n, q) => n -> (() => q(spark, sf)) }
+    assert(queries.size === 23)
+    queries.foreach(_._2().collect())
+    val aqe = new AdaptiveSparkPlanHelper {}
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    ListenerBusBridge.waitUntilEmpty(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    val seen = try queries.map { case (n, q) =>
+      val j0 = jobs.get
+      val df = q()
+      df.collect()
+      ListenerBusBridge.waitUntilEmpty(spark.sparkContext)
+      val exchanges = aqe.collectWithSubqueries(df.queryExecution.executedPlan) {
+        case _: ShuffleExchangeExec => "shuffle"
+        case _: BroadcastExchangeExec => "broadcast"
+      }
+      n -> (jobs.get - j0, exchanges)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    val expected = queries.map { case (n, _) =>
+      n -> (if (n == "q_decl_recent_positive") (2, Seq("broadcast")) else (1, Nil))
+    }
+    assert(seen === expected)
+    assert(seen.map(_._2._1).sum === 24)
+  }
+
+  test("an input larger than one advisory partition keeps its tables' partitions") {
+    // a copy of sf0.001 gets its own (session, dir) entry; with the advisory
+    // size below its estimate it takes the large-input layout
+    val big = Files.createTempDirectory("graft_decl_big").toString
+    FileUtils.copyFile(new File(s"$sf/lineitem.parquet"), new File(s"$big/lineitem.parquet"))
+    val advisory = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    def served(dir: String): Map[String, (Int, Seq[String])] = DeclaredCatalog.synchronized {
+      DeclaredCatalog.registerViews(spark, dir)
+      views.toSeq.map { v =>
+        val df = spark.table(v)
+        val rows = df.collect().map(_.toString).sorted.toSeq
+        val parts = df.queryExecution.withCachedData.collect {
+          case r: InMemoryRelation => r.cacheBuilder.cachedColumnBuffers.getNumPartitions
+        }
+        v -> (parts.head, rows)
+      }.toMap
+    }
+    try {
+      val estimate = Tables.bars(spark, big).queryExecution.optimizedPlan.stats.sizeInBytes
+      spark.conf.set(advisory, (estimate / 2).toString)
+      try DeclaredCatalog.registerViews(spark, big) finally spark.conf.unset(advisory)
+      val large = served(big)
+      val small = served(sf)
+      assert(large.size === 11)
+      views.foreach { v =>
+        withClue(s"$v: ") {
+          assert(large(v)._1 > 1)
+          assert(small(v)._1 === 1)
+          assert(large(v)._2 === small(v)._2)
+        }
+      }
+    } finally {
+      DeclaredCatalog.release(big)
+      FileUtils.deleteQuietly(new File(big))
+    }
+  }
+
   test("switching directories A, B, A serves each call its own directory's rows") {
     // dir B holds tickers T0..T49 of sf's lineitem; every view row is
     // computed per ticker, so B's rows are exactly A's rows of those tickers
@@ -108,6 +189,7 @@ class DeclaredCatalogSpec extends SparkSpecBase {
     def inB(row: String): Boolean = row.drop(2).takeWhile(_.isDigit).toInt < 50
     try {
       val a1 = rows(sf)
+      val before = stored
       val b = rows(dirB)
       val a2 = rows(sf)
       assert(a2 === a1)
@@ -118,7 +200,15 @@ class DeclaredCatalogSpec extends SparkSpecBase {
           assert(b(k) === aRows.filter(inB))
         }
       }
-    } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dirB))
+      // releasing B removes its cache entries, and the next call builds it again
+      DeclaredCatalog.release(dirB)
+      assert(stored === before)
+      assert(rows(dirB) === b)
+      assert(stored > before)
+    } finally {
+      DeclaredCatalog.release(dirB)
+      FileUtils.deleteQuietly(new File(dirB))
+    }
   }
 
   test("dropped served blocks make the next call build the dir again, not fail") {
@@ -128,13 +218,14 @@ class DeclaredCatalogSpec extends SparkSpecBase {
     // them without clearing the rest of the shared session's cache.
     def rows() = DeclaredQueries.queries("q_decl_recent_strong")(spark, sf)
       .collect().map(_.toString).sorted.toSeq
-    def stored = spark.sparkContext.getRDDStorageInfo.length
     val expected = rows()
     val before = stored
+    val shape = DeclaredCatalog.layout(spark, sf)
     val dailyHvc = PatternOps.highVolumeCloses(
-      SilverOps.indicators(Tables.bars(spark, sf)), threshold = 1.5)
+      SilverOps.indicators(Tables.bars(spark, sf)), threshold = 1.5).transform(shape)
     dailyHvc.unpersist(blocking = true)
-    PatternOps.stairPatterns(dailyHvc, ascending = true, minSteps = 2).unpersist(blocking = true)
+    PatternOps.stairPatterns(dailyHvc, ascending = true, minSteps = 2).transform(shape)
+      .unpersist(blocking = true)
     assert(stored === before - 2)
     assert(rows() === expected)
   }
