@@ -2,7 +2,6 @@ package graft.queries
 
 import graft.Tables
 import graft.operators.{PatternOps, SilverOps}
-import org.apache.spark.network.util.JavaUtils
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.functions._
@@ -36,18 +35,15 @@ import scala.collection.mutable
   * view is registered over the one cached node. A query analyses a leaf,
   * not the derivation, and its tasks ship no lineage.
   *
-  * Layout (`layout`, decided once per dir when it is built): when the
-  * input's scan-free size estimate fits one
-  * `spark.sql.adaptive.advisoryPartitionSizeInBytes` (64 MB by default),
-  * each table is served as one partition (`coalesce(1)`). A leaf reporting
-  * `SinglePartition` satisfies every ordering and distribution, so the
-  * catalog's `ORDER BY`s, global aggregates and the derived tables'
+  * Layout: each table is served as one partition (`coalesce(1)`). A leaf
+  * reporting `SinglePartition` satisfies every ordering and distribution,
+  * so the catalog's `ORDER BY`s, global aggregates and the derived tables'
   * per-ticker windows plan no exchange, and a query without a broadcast
-  * runs one job. The threshold is the advisory size because that is the
-  * partition AQE itself would coalesce such an input into: below it, more
-  * partitions only add per-task and per-stage cost. Larger inputs keep the
-  * derivation's partitions, so a big catalog's window stages are not
-  * serialised into one task.
+  * runs one job. Every input served so far is small (the sf0.1 fixture's
+  * scan-free estimate is 7.5 MB), and there one partition was measured
+  * faster than the derivation's partitions at every size, sf0.1 included.
+  * A size rule that keeps several partitions for a large input needs a
+  * measured workload on each side of it first.
   *
   * The trade-off is fault tolerance: a locally checkpointed block cannot be
   * recomputed. If an executor holding one is lost, queries over its table
@@ -185,16 +181,6 @@ object DeclaredCatalog {
     }
   }
 
-  /** The layout `dir`'s tables are served in, decided from the input's
-    * scan-free size estimate: one partition when it fits one advisory
-    * partition, otherwise the derivation's own partitioning. */
-  private[graft] def layout(s: SparkSession, dir: String): DataFrame => DataFrame = {
-    val estimate = Tables.bars(s, dir).queryExecution.optimizedPlan.stats.sizeInBytes
-    val advisory = JavaUtils.byteStringAsBytes(
-      s.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes"))
-    if (estimate <= advisory) _.coalesce(1) else identity
-  }
-
   /** `df` persisted, with its columnar cache blocks marked for local
     * checkpointing before any job touches them: the first job that fills
     * the blocks truncates their lineage, and they stay the same compressed
@@ -220,10 +206,9 @@ object DeclaredCatalog {
       servedDir -= s
     }
     tables.getOrElseUpdate((s, dir), {
-      val shape = layout(s, dir)
       val persisted = mutable.ArrayBuffer.empty[DataFrame]
       def served(df: DataFrame): DataFrame = {
-        val p = checkpointed(shape(df))
+        val p = checkpointed(df.coalesce(1))
         persisted += p
         p
       }

@@ -22,10 +22,6 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * unchanged over this engine's gold views — the switch-over contract. */
 class DeclaredCatalogSpec extends SparkSpecBase {
 
-  /** The 11 views the declared surfaces read. */
-  private def views: Set[String] = DeclaredCatalog.catalogTables(spark, sf).keySet ++
-    Set("stairstepping_patterns", "falling_down_stairs_patterns")
-
   private def stored = spark.sparkContext.getRDDStorageInfo.length
 
   test("all 19 catalog queries run verbatim and project the declared columns") {
@@ -74,6 +70,8 @@ class DeclaredCatalogSpec extends SparkSpecBase {
     // truncates their lineage, so tasks no longer ship the derivation
     DeclaredCatalog.sql.keys.foreach(DeclaredCatalog.run(spark, sf, _).collect())
     DeclaredQueries.queries.values.foreach(_(spark, sf).collect())
+    val views = DeclaredCatalog.catalogTables(spark, sf).keySet ++
+      Set("stairstepping_patterns", "falling_down_stairs_patterns")
     assert(views.size === 11)
     views.foreach { v =>
       withClue(s"$v: ") {
@@ -104,8 +102,8 @@ class DeclaredCatalogSpec extends SparkSpecBase {
     assert(topGainers(other) === topGainers(spark))
   }
 
-  test("a warm pass over a small catalog plans no shuffle and runs one job per query") {
-    // every served table is one partition at sf0.001, so no ORDER BY,
+  test("a warm pass over the catalog plans no shuffle and runs one job per query") {
+    // every served table is one partition, so no ORDER BY,
     // global aggregate or join needs an exchange; the one exchange left is
     // q_decl_recent_positive's broadcast of its MAX(end_date)
     val queries: Seq[(String, () => DataFrame)] =
@@ -136,43 +134,6 @@ class DeclaredCatalogSpec extends SparkSpecBase {
     }
     assert(seen === expected)
     assert(seen.map(_._2._1).sum === 24)
-  }
-
-  test("an input larger than one advisory partition keeps its tables' partitions") {
-    // a copy of sf0.001 gets its own (session, dir) entry; with the advisory
-    // size below its estimate it takes the large-input layout
-    val big = Files.createTempDirectory("graft_decl_big").toString
-    FileUtils.copyFile(new File(s"$sf/lineitem.parquet"), new File(s"$big/lineitem.parquet"))
-    val advisory = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
-    def served(dir: String): Map[String, (Int, Seq[String])] = DeclaredCatalog.synchronized {
-      DeclaredCatalog.registerViews(spark, dir)
-      views.toSeq.map { v =>
-        val df = spark.table(v)
-        val rows = df.collect().map(_.toString).sorted.toSeq
-        val parts = df.queryExecution.withCachedData.collect {
-          case r: InMemoryRelation => r.cacheBuilder.cachedColumnBuffers.getNumPartitions
-        }
-        v -> (parts.head, rows)
-      }.toMap
-    }
-    try {
-      val estimate = Tables.bars(spark, big).queryExecution.optimizedPlan.stats.sizeInBytes
-      spark.conf.set(advisory, (estimate / 2).toString)
-      try DeclaredCatalog.registerViews(spark, big) finally spark.conf.unset(advisory)
-      val large = served(big)
-      val small = served(sf)
-      assert(large.size === 11)
-      views.foreach { v =>
-        withClue(s"$v: ") {
-          assert(large(v)._1 > 1)
-          assert(small(v)._1 === 1)
-          assert(large(v)._2 === small(v)._2)
-        }
-      }
-    } finally {
-      DeclaredCatalog.release(big)
-      FileUtils.deleteQuietly(new File(big))
-    }
   }
 
   test("switching directories A, B, A serves each call its own directory's rows") {
@@ -220,11 +181,10 @@ class DeclaredCatalogSpec extends SparkSpecBase {
       .collect().map(_.toString).sorted.toSeq
     val expected = rows()
     val before = stored
-    val shape = DeclaredCatalog.layout(spark, sf)
     val dailyHvc = PatternOps.highVolumeCloses(
-      SilverOps.indicators(Tables.bars(spark, sf)), threshold = 1.5).transform(shape)
+      SilverOps.indicators(Tables.bars(spark, sf)), threshold = 1.5).coalesce(1)
     dailyHvc.unpersist(blocking = true)
-    PatternOps.stairPatterns(dailyHvc, ascending = true, minSteps = 2).transform(shape)
+    PatternOps.stairPatterns(dailyHvc, ascending = true, minSteps = 2).coalesce(1)
       .unpersist(blocking = true)
     assert(stored === before - 2)
     assert(rows() === expected)
