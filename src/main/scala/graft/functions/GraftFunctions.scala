@@ -15,23 +15,6 @@ object GraftFunctions {
                    order: String = "date"): WindowSpec =
     Window.partitionBy(partition.map(col): _*).orderBy(col(order))
 
-  /** W1 — strict rolling mean: null until the window holds exactly `n` rows,
-    * matching Polars `rolling_mean` min-periods semantics
-    * (`silver/indicators.py:10-25`). Spark's plain `avg().over(rowsBetween)`
-    * would emit partial-window means for the first n-1 rows — the #1
-    * correctness trap called out in SURVEY §7.4.
-    */
-  def rollingMeanStrict(c: Column, n: Int, w: WindowSpec): Column = {
-    val frame = w.rowsBetween(-(n - 1), 0)
-    when(count(c).over(frame) === n, avg(c).over(frame))
-  }
-
-  /** Strict rolling sum with the same min-periods guard. */
-  def rollingSumStrict(c: Column, n: Int, w: WindowSpec): Column = {
-    val frame = w.rowsBetween(-(n - 1), 0)
-    when(count(c).over(frame) === n, sum(c).over(frame))
-  }
-
   /** Running (unbounded-preceding) sum — W5/W6 cumulative VWAP inputs. */
   def cumSum(c: Column, w: WindowSpec): Column =
     sum(c).over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))

@@ -59,54 +59,59 @@ object Timing {
 object Pipeline {
 
   /** Bronze: land the daily bars (fixture-backed stand-in for the REST
-    * ingest S6-S8), Hive-partitioned, plus the splits dim.
+    * ingest S6-S8), plus the splits dim.
     *
-    * Partition grain (`grain`): `date` matches the reference's layout and
-    * keeps incremental ingest O(day) via dynamic partition overwrite;
-    * `month` is for bulk backfills, where per-day directories at small
-    * data-per-day hit the small-files trap; `auto` (default) picks by
-    * measured volume — per-day directories only once a day of data is big
-    * enough to be worth a directory (at 100 TB / 5 y that's ~80 GB/day →
-    * date; at test scale factors → month). Both layouts read back
-    * identically (`readTable` + pruning handle either); PipelineSpec proves
-    * silver is byte-identical on top of each. */
+    * Layout (`grain`): `date` is the reference's Hive layout and keeps
+    * incremental ingest O(day) via dynamic partition overwrite; `auto`
+    * (default) takes it only once a day holds ≥ 16 MB (at 100 TB / 5 y
+    * that's ~80 GB/day), and otherwise, an empty source included, writes
+    * one unpartitioned table. Below that threshold directories are mostly
+    * fixed cost: every written file costs ~11 ms whatever the codec
+    * (Spark 4.1, `local[4]`), so 5 years as 60 month directories of ~13 KB
+    * wrote in ~1.4 s against ~0.2 s flat, and reading back more than 32
+    * partition paths adds a partition-discovery job. The flat table is
+    * the aggregate's output as is (AQE sizes its files: one at bench
+    * scale, ~64 MB each above it) and lands through
+    * [[Storage.overwriteWithSwap]], so a failed reload leaves the previous
+    * table readable, as a dynamic partition overwrite does; a static
+    * Overwrite deletes it before the job runs. Both layouts read back
+    * identically; PipelineSpec proves silver is byte-identical on top of
+    * each. */
   def runBronze(spark: SparkSession, sfDir: String, lake: Lake,
                 grain: String = "auto"): Unit = {
-    // one shuffle on the partition key so each partition directory gets
-    // exactly one writer (otherwise: |dirs| × |tasks| tiny files)
     val raw = Tables.bars(spark, sfDir)
     // ONE date-span probe over the source, for every grain: its min/max
     // size `auto`'s day count, and its max is the checkpoint high-water
-    // mark. Reading max(date) back from the written table instead costs a
-    // partition-listing job plus an aggregate, and at the `month` grain
-    // (what `auto` picks at test and bench scale) `date` is a data column
-    // there, not a partition column. Empty source ⇒ null min/max.
+    // mark. Reading max(date) back from the written table instead costs
+    // another job, and in the flat layout (what `auto` picks at test and
+    // bench scale) `date` is a data column, not a partition column.
+    // Empty source ⇒ null min/max.
     val span = raw.agg(min(col("date")), max(col("date"))).first()
     val lastDate =
       if (span.isNullAt(1)) None else Some(span.getDate(1).toLocalDate)
-    val resolved = if (grain != "auto") grain else lastDate match {
-      // empty source: degrade to the coarse grain instead of NPEing
-      // before the (empty) write
-      case None => "month"
-      case Some(hi) =>
+    val byDate = grain match {
+      case "date" => true
+      case "auto" => lastDate.exists { hi =>
         // scan-free volume estimate: optimizer stats = source file bytes
         val bytes = raw.queryExecution.optimizedPlan.stats.sizeInBytes
         val days = math.max(1L, java.time.temporal.ChronoUnit.DAYS.between(
           span.getDate(0).toLocalDate, hi) + 1)
-        if (bytes / days >= BigInt(16L << 20)) "date" else "month"
-    }
-    val (bars, partCols) = resolved match {
-      case "date"  => (raw.repartition(col("date")), Seq("date"))
-      case "month" => (raw.withColumn("month", trunc(col("date"), "month"))
-        .repartition(col("month")), Seq("month"))
+        bytes / days >= BigInt(16L << 20)
+      }
       case other => throw new IllegalArgumentException(s"bronze grain: $other")
     }
+    val stocks = lake.bronze("stocks")
     // independent: the tiny splits write hides under the stocks write
     Jobs.overlap(spark, "bronze.writes")(
-      "stocks" -> (() => Storage.writeTable(bars, lake.bronze("stocks"),
-        partitionBy = partCols)),
+      "stocks" -> (() =>
+        // one shuffle on the partition key so each date directory gets
+        // exactly one writer (otherwise: |dirs| × |tasks| tiny files)
+        if (byDate) Storage.writeTable(raw.repartition(col("date")), stocks,
+          partitionBy = Seq("date"))
+        else Storage.overwriteWithSwap(raw, stocks)),
+      // two unioned ranges: one file instead of one per range partition
       "splits" -> (() => Storage.writeTable(
-        DomainQueries.syntheticSplits(spark), lake.bronze("splits"))))
+        DomainQueries.syntheticSplits(spark).coalesce(1), lake.bronze("splits"))))
     Checkpoints.save(lake.checkpointPath,
       Checkpoints.load(lake.checkpointPath) +
         ("bronze_stocks_last_date" -> lastDate.map(_.toString).getOrElse("")))

@@ -20,7 +20,7 @@ class PipelineSpec extends SparkSpecBase {
     assert(daily.count() === bronze.count())
     assert(weekly.count() < daily.count())
     assert(gold.count() > 0)
-    // bronze is hive-partitioned by date
+    // bronze carries the bar date as a column in either layout
     assert(bronze.columns.contains("date"))
     // checkpoints recorded
     val cp = Checkpoints.load(lake.checkpointPath)
@@ -28,19 +28,30 @@ class PipelineSpec extends SparkSpecBase {
     assert(cp.contains("silver_last_full_rewrite"))
   }
 
-  test("month-grain bronze produces byte-identical silver to date-grain") {
+  test("flat bronze produces byte-identical silver to date-grain") {
     val lakeD = Lake(Files.createTempDirectory("graft_lake_d").toString)
-    val lakeM = Lake(Files.createTempDirectory("graft_lake_m").toString)
+    val lakeF = Lake(Files.createTempDirectory("graft_lake_f").toString)
     Pipeline.runBronze(spark, sf, lakeD, grain = "date")
     Pipeline.runSilver(spark, lakeD)
-    Pipeline.runBronze(spark, sf, lakeM, grain = "month")
-    Pipeline.runSilver(spark, lakeM)
+    Pipeline.runBronze(spark, sf, lakeF)
+    // `auto` at sf0.001 lands one unpartitioned table: no `col=value`
+    // directory anywhere under bronze/stocks, and the splits dim as one file
+    def under(ref: graft.sources.TableRef) = {
+      import scala.jdk.CollectionConverters._
+      val walk = Files.walk(java.nio.file.Paths.get(ref.path))
+      try walk.iterator.asScala.toList finally walk.close()
+    }
+    assert(under(lakeF.bronze("stocks")).exists(_.toString.endsWith(".parquet")))
+    assert(!under(lakeF.bronze("stocks")).exists(p =>
+      Files.isDirectory(p) && p.getFileName.toString.contains("=")))
+    assert(under(lakeF.bronze("splits")).count(_.toString.endsWith(".parquet")) === 1)
+    Pipeline.runSilver(spark, lakeF)
     val d = Storage.readTable(spark, lakeD.silver("daily_aggregates"))
-    val m = Storage.readTable(spark, lakeM.silver("daily_aggregates"))
-    assert(d.except(m).count() === 0)
-    assert(m.except(d).count() === 0)
-    // both grains checkpoint the written table's last date
-    for (lake <- Seq(lakeD, lakeM))
+    val f = Storage.readTable(spark, lakeF.silver("daily_aggregates"))
+    assert(d.except(f).count() === 0)
+    assert(f.except(d).count() === 0)
+    // both layouts checkpoint the written table's last date
+    for (lake <- Seq(lakeD, lakeF))
       assert(Checkpoints.load(lake.checkpointPath)("bronze_stocks_last_date")
         === Storage.maxDate(spark, lake.bronze("stocks")).get.toString)
   }

@@ -187,6 +187,28 @@ class SourcesSpec extends SparkSpecBase {
     assert(bars.except(after).count() === 0)
   }
 
+  test("a failed swap write leaves the previous table; the next swap replaces it") {
+    import org.apache.spark.sql.functions._
+    val root = Files.createTempDirectory("graft_swap").toString
+    val ref = TableRef(root, "bronze", "stocks")
+    val bars = Tables.bars(spark, sf)
+    val cols = bars.columns.toSeq
+    def stored() = Storage.tableChecksum(Storage.readTable(spark, ref), cols).first()
+    Storage.overwriteWithSwap(bars, ref)
+    val before = stored()
+    val victim = bars.select("ticker").first().getString(0)
+    val boom = udf { (t: String) =>
+      if (t == victim) throw new IllegalStateException("boom"); t }
+    intercept[Exception](
+      Storage.overwriteWithSwap(bars.withColumn("ticker", boom(col("ticker"))), ref))
+    assert(stored() === before)
+    val next = bars.filter(col("ticker") =!= victim)
+    Storage.overwriteWithSwap(next, ref)
+    assert(stored() === Storage.tableChecksum(next, cols).first())
+    assert(stored() !== before)
+    assert(new java.io.File(s"$root/bronze").list().toSeq === Seq("stocks"))
+  }
+
   test("upsert replaces matched keys, inserts the rest") {
     import spark.implicits._
     val base = Seq((1L, "a", 1.0), (2L, "b", 2.0), (3L, "c", 3.0))
