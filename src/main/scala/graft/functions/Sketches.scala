@@ -175,16 +175,6 @@ object Sketches {
     pmod(conv(substring(md5(concat(lit(s"cms$j:"), c.cast("string"))), 1, 12),
       16, 10).cast("long"), lit(w.toLong))
 
-  /** The (j, bucket, cnt) counter table — the sketch itself. */
-  def cmsCounters(df: DataFrame, valueCol: String, d: Int, w: Int): DataFrame = {
-    require(d >= 1 && w >= 2, s"need d >= 1, w >= 2; got d=$d w=$w")
-    val buckets = (0 until d).map(j =>
-      struct(lit(j).as("j"), cmsHash(col(valueCol), j, w).as("bucket")))
-    df.select(explode(array(buckets: _*)).as("jb"))
-      .groupBy(col("jb.j").as("j"), col("jb.bucket").as("bucket"))
-      .agg(count(lit(1)).as("cnt"))
-  }
-
   /** Per-distinct-item CMS frequency estimate: min over the d counters the
     * item hashes into. est_cnt >= true count always (one-sided error). */
   def cmsEstimates(df: DataFrame, valueCol: String, d: Int, w: Int): DataFrame =

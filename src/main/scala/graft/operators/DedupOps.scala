@@ -809,9 +809,8 @@ object DedupOps {
         // exchanges and skips the digest→hex materialization per gram
         // (optimization guide §2.3 "narrower types"; r11, measured).
         xxhash64(col("col")).as("h"))
-    // single-consumer callers (buildSpanIndex — run per micro-batch by
-    // spanDedupSink) pass cache=false: an unreleased per-batch cache of a
-    // batch-words-sized lattice would leak across a stream's lifetime
+    // single-consumer callers (buildSpanIndex) pass cache=false: they
+    // read the lattice once and have no point at which to release it
     if (cache)
       lattice.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     else lattice

@@ -169,10 +169,8 @@ object SilverOps {
     * `0.75`-style literal one ulp adrift per step. */
   /** The recursive-fold family's input contract: ONE bar per (ticker,
     * date). Duplicate dates make the date-sorted fold order-
-    * nondeterministic (equal keys sort arbitrarily), and the streaming
-    * twins ([[graft.streaming.StreamingOps]]) DROP any bar whose date is
-    * <= the stored lastDate — so folding duplicates here would silently
-    * diverge from the replayed stream. Fail loud at the offending key
+    * nondeterministic (equal keys sort arbitrarily), so two runs over the
+    * same input could silently disagree. Fail loud at the offending key
     * instead; callers with dirty feeds dedupe (keep-last) upstream.
     * Expects the fold's already-sorted date sequence. */
   private[graft] def requireUniqueSortedDates(

@@ -1210,10 +1210,9 @@ object SimilarityOps {
   }
 
   /** Insert at a sorted position — adjacency lists stay CANONICAL
-    * (ascending node index). Canonical order is what makes warm-start
-    * insertion replayable: [[hnswInsert]] reconstructs lists from
-    * stored (lev, src, dst)-sorted edges and must see exactly the
-    * state the cold build had after its prefix. */
+    * (ascending node index), so the beam walks visit neighbours in one
+    * fixed order and a shard's graph is a function of its sorted rows
+    * alone. */
   private def insSorted(buf: scala.collection.mutable.ArrayBuffer[Int],
                         x: Int): Unit = {
     var lo = 0; var hi = buf.length
@@ -1224,32 +1223,22 @@ object SimilarityOps {
     buf.insert(lo, x)
   }
 
-  /** Continue HNSW construction from node `startFrom` against the
-    * (canonical) adjacency state of the prefix — `startFrom = 0` is the
-    * cold build; a positive value is [[hnswInsert]]'s warm start, which
-    * replays EXACTLY what the cold build would have done from that
-    * point (same beam walks over the same canonical lists), so
-    * append-only incremental insertion equals a full rebuild. */
+  /** HNSW construction: insert every node in index order into the
+    * (initially empty) canonical adjacency `adj`. The entry point is the
+    * first node of the highest level seen so far (it is replaced only on a
+    * strict increase). */
   private def insertNodes(
       vecs: Array[Array[Double]], levels: Array[Int],
       adj: Array[Array[scala.collection.mutable.ArrayBuffer[Int]]],
-      startFrom: Int, m: Int, efC: Int): Unit = {
+      m: Int, efC: Int): Unit = {
     val n = vecs.length
     val norms = vecs.map(v => math.sqrt(dotd(v, v)))
     def sim(a: Int, b: Int): Double = {
       val d = norms(a) * norms(b)
       if (d == 0) 0.0 else dotd(vecs(a), vecs(b)) / d
     }
-    // recover the builder state after the prefix: maxLev = prefix max,
-    // ep = FIRST prefix node attaining it (insertion only replaces the
-    // entry point on a strict increase)
     var ep = -1; var maxLev = -1
-    var p = 0
-    while (p < startFrom) {
-      if (levels(p) > maxLev) { maxLev = levels(p); ep = p }
-      p += 1
-    }
-    var i = startFrom
+    var i = 0
     while (i < n) {
       val li = levels(i)
       if (ep < 0) { ep = i; maxLev = li }
@@ -1304,7 +1293,7 @@ object SimilarityOps {
       m: Int, efC: Int): Array[(Int, Int, Int)] = {
     val adj = Array.tabulate(ids.length)(i =>
       Array.fill(levels(i) + 1)(scala.collection.mutable.ArrayBuffer.empty[Int]))
-    insertNodes(vecs, levels, adj, 0, m, efC)
+    insertNodes(vecs, levels, adj, m, efC)
     emitEdges(levels, adj)
   }
 
@@ -1328,73 +1317,6 @@ object SimilarityOps {
           .iterator.map { case (lev, si, di) => (shard, lev, ids(si), ids(di)) }
       }
       .toDF("shard", "level", "src", "dst")
-  }
-
-  /** Incremental insertion into a STORED graph: only the shards the
-    * delta touches are rebuilt — their vectors reload, the stored
-    * edges reconstruct the canonical adjacency, and construction
-    * resumes from the first new node; untouched shards' edges pass
-    * through VERBATIM with no compute (the anti-join pass-through
-    * discipline). Because adjacency lists are canonical and the warm
-    * start recovers the cold build's exact state, an APPEND-ONLY delta
-    * (every new id greater than every stored id — the new-documents
-    * regime) produces bit-identically the graph a full rebuild would;
-    * out-of-order ids still insert into a valid graph, just not the
-    * rebuild-identical one (HNSW insertion order is a quality
-    * heuristic, not a correctness condition). Delta cost ∝ touched
-    * shards, not corpus size; partition the stored edge table by
-    * `shard` and the untouched read prunes too. */
-  def hnswInsert(corpus: DataFrame, graph: DataFrame, delta: DataFrame,
-                 nShards: Int = 4, m: Int = 8, efC: Int = 64,
-                 idCol: String = "vec_id",
-                 vecCol: String = "embedding"): DataFrame = {
-    val ss = corpus.sparkSession
-    import ss.implicits._
-    val touched = hnswAssign(delta, nShards, idCol, vecCol)
-      .select(col("shard")).distinct().as[Int].collect().toSeq.sorted
-    val edgeCols = Seq(col("shard").cast("int").as("shard"),
-      col("level").cast("int").as("level"), col("src").cast("long").as("src"),
-      col("dst").cast("long").as("dst"))
-    val untouched = graph.select(edgeCols: _*)
-      .filter(!col("shard").isin(touched: _*))
-    def side(df: DataFrame, isNew: Boolean) =
-      hnswAssign(df, nShards, idCol, vecCol)
-        .filter(col("shard").isin(touched: _*))
-        .select(col("shard"), col(idCol).cast("long"),
-          col(vecCol).cast("array<double>"), col("level"),
-          lit(isNew).as("is_new"))
-    val vs = side(corpus, isNew = false).unionByName(side(delta, isNew = true))
-      .as[(Int, Long, Seq[Double], Int, Boolean)]
-      .groupByKey(_._1)
-    val es = graph.select(edgeCols: _*)
-      .filter(col("shard").isin(touched: _*))
-      .as[(Int, Int, Long, Long)]
-      .groupByKey(_._1)
-    val rebuilt = vs.cogroup(es) { (shard, vit, eit) =>
-      val all = vit.toArray
-      val (nw, old) = all.partition(_._5)
-      val rows = old.sortBy(_._2) ++ nw.sortBy(_._2)
-      val ids = rows.map(_._2)
-      val levels = rows.map(_._4)
-      val idx = ids.zipWithIndex.toMap
-      val adj = Array.tabulate(ids.length)(i =>
-        Array.fill(levels(i) + 1)(
-          scala.collection.mutable.ArrayBuffer.empty[Int]))
-      // stored edges sorted by (lev, src, dst) reconstruct each list in
-      // canonical (ascending dst) order — the cold build's exact state
-      eit.toArray.sortBy(t => (t._2, t._3, t._4)).foreach {
-        case (_, lev, s, d) =>
-          (idx.get(s), idx.get(d)) match {
-            case (Some(si), Some(di)) if lev <= levels(si) =>
-              adj(si)(lev) += di
-            case _ => ()
-          }
-      }
-      insertNodes(rows.map(_._3.toArray), levels, adj, old.length, m, efC)
-      emitEdges(levels, adj).iterator
-        .map { case (lev, si, di) => (shard, lev, ids(si), ids(di)) }
-    }
-    rebuilt.toDF("shard", "level", "src", "dst").unionByName(untouched)
   }
 
   /** Deletion from a STORED graph (takedowns/opt-outs — routine at

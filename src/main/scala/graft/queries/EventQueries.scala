@@ -6,12 +6,12 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-/** Event-stream semantics in batch form (SURVEY §2.9): tumbling windows and
-  * gap-based sessionization, oracle-checked. The true streaming variants
-  * (watermarks, flatMapGroupsWithState) live in
-  * [[graft.streaming.StreamingOps]] and are spec-tested — a streaming sink
-  * can't flow through the Verify harness, but these batch twins pin the
-  * same window/session semantics.
+/** Event-stream semantics in batch form (SURVEY §2.9): tumbling windows,
+  * gap-based sessionization and interval joins, oracle-checked. The
+  * reference has no streaming runtime, so these batch queries are the
+  * event surface; the one watermarked operator,
+  * [[purchaseAttributionOuter]], runs unchanged on a stream too
+  * (StreamingSpec).
   */
 object EventQueries {
 
@@ -51,6 +51,32 @@ object EventQueries {
       |      AS ev,
       |    CAST(user_id % 2 AS INTEGER) AS grp
       |  FROM u)""".stripMargin
+
+  /** LEFT OUTER interval join: each purchase joined to the same user's
+    * clicks in the preceding hour; purchases with NO such click still
+    * emit, with null click columns. Both sides are watermarked, so on a
+    * stream Spark bounds the join state to watermark + interval, and an
+    * unmatched purchase surfaces only once the watermark passes its join
+    * window ("no match" is not knowable earlier — StreamingSpec drives the
+    * watermark forward with a sentinel event to observe it). On batch
+    * input `withWatermark` is a no-op, which is how `q_attribution_outer`
+    * runs it. */
+  private[graft] def purchaseAttributionOuter(events: DataFrame): DataFrame = {
+    val clicks = events.filter(col("event_type") === "click")
+      .select(col("user_id").as("c_user"), col("ts").as("click_ts"),
+        col("event_id").as("click_id"))
+      .withWatermark("click_ts", "2 hours")
+    val purchases = events.filter(col("event_type") === "purchase")
+      .select(col("user_id"), col("ts").as("purchase_ts"),
+        col("event_id").as("purchase_id"), col("value"))
+      .withWatermark("purchase_ts", "2 hours")
+    purchases.join(clicks,
+      col("c_user") === col("user_id") &&
+        col("click_ts") >= col("purchase_ts") - expr("INTERVAL 1 HOUR") &&
+        col("click_ts") <= col("purchase_ts"),
+      "left_outer")
+      .drop("c_user")
+  }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
@@ -216,8 +242,7 @@ object EventQueries {
       graft.operators.EvalOps.logRank(
         survivalLifetimes(s, dir), "t", "ev", "grp")),
 
-    // Gap-based sessionization (30-min inactivity) via gaps-and-islands —
-    // the batch twin of StreamingOps.sessionize.
+    // Gap-based sessionization (30-min inactivity) via gaps-and-islands.
     "q_events_sessions" -> ((s, dir) => {
       val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
       Tables.events(s, dir)
@@ -236,18 +261,17 @@ object EventQueries {
           sum(col("value").cast(D6)).cast("double").as("total_value"))
     }),
 
-    // purchase→click attribution, batch twin of the watermarked
-    // stream-stream interval join (StreamingOps.purchaseAttribution):
-    // each purchase counts the same user's clicks in the preceding hour.
-    // Shuffles on user_id only; the interval predicate filters in-join.
-    // Batch twin of the streaming LEFT OUTER attribution join: unmatched
-    // purchases keep a null click_id — the row the inner join drops.
+    // LEFT OUTER purchase→click attribution (purchaseAttributionOuter):
+    // unmatched purchases keep a null click_id — the row an inner join
+    // drops.
     "q_attribution_outer" -> ((s, dir) =>
-      graft.streaming.StreamingOps.purchaseAttributionOuter(
-        Tables.events(s, dir))
+      purchaseAttributionOuter(Tables.events(s, dir))
         .select(col("purchase_id"), col("user_id"), col("purchase_ts"),
           col("click_id"), col("click_ts"))),
 
+    // purchase→click attribution: each purchase counts the same user's
+    // clicks in the preceding hour. Shuffles on user_id only; the interval
+    // predicate filters in-join.
     "q_attribution" -> ((s, dir) => {
       val ev = Tables.events(s, dir)
       val clicks = ev.filter(col("event_type") === "click")

@@ -12,7 +12,7 @@ import java.time.LocalDate
   *
   *  - grouped-daily bars: one GET per trading day
   *    (`/v2/aggs/grouped/locale/us/market/stocks/{date}`)
-  *  - reference lists (splits, tickers): cursor-paged via the response's
+  *  - the splits reference list: cursor-paged via the response's
   *    `next_url` until the cursor runs dry
   *  - HTTP 403 (plan/quota limit) → [[PlanLimitExceeded]], which
   *    [[ParallelFetch]] turns into cancel-all-outstanding-work — newest
@@ -143,12 +143,6 @@ final class HttpMarketSource(baseUrl: String, apiKey: String,
       .map(r => SplitRow(r.path("ticker").asText(),
         LocalDate.parse(r.path("execution_date").asText()),
         r.path("split_from").asDouble(), r.path("split_to").asDouble()))
-
-  /** Active ticker directory (reference tickers source). */
-  def fetchTickers(): Seq[TickerRow] =
-    fetchPaged(s"$baseUrl/v3/reference/tickers?market=stocks&active=true&limit=1000")
-      .map(r => TickerRow(r.path("ticker").asText(), r.path("name").asText(),
-        r.path("primary_exchange").asText()))
 }
 
 /** Backoff schedule for transient HTTP failures: exponential growth with
@@ -172,9 +166,6 @@ final case class RetryPolicy(maxAttempts: Int = 5,
 
 final case class SplitRow(ticker: String, executionDate: LocalDate,
                           splitFrom: Double, splitTo: Double)
-
-final case class TickerRow(ticker: String, name: String,
-                           primaryExchange: String)
 
 object HttpMarketSource {
   /** Default client: bounded connect time — with the per-request timeout

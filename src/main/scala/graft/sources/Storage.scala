@@ -219,12 +219,8 @@ object Storage {
     * plain Overwrite would truncate its own input, which Spark rejects):
     * materialize to a hidden temp sibling, then swap with the same
     * checked-rename protocol as [[compact]]. The merge/update pattern's
-    * storage half — see MergeOps and StreamingOps.upsertSink.
-    * `partitionBy` keeps a hive layout through the swap (a rewritten
-    * partitioned table must come back partitioned — the index compaction
-    * path relies on it). */
-  def overwriteWithSwap(df: DataFrame, ref: TableRef,
-                        partitionBy: Seq[String] = Nil): Unit = {
+    * storage half — see MergeOps and StreamingOps.upsertSink. */
+  def overwriteWithSwap(df: DataFrame, ref: TableRef): Unit = {
     val spark = df.sparkSession
     val f = fs(spark, ref.path)
     val dst = new Path(ref.path)
@@ -232,8 +228,7 @@ object Storage {
     val bak = new Path(dst.getParent, s".${dst.getName}._swap_bak")
     if (f.exists(tmp)) f.delete(tmp, true)
     if (f.exists(bak)) f.delete(bak, true)
-    val w = df.write.mode(SaveMode.Overwrite).option("compression", "zstd")
-    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
+    df.write.mode(SaveMode.Overwrite).option("compression", "zstd")
       .parquet(tmp.toString)
     if (f.exists(dst) && !f.rename(dst, bak))
       throw new IllegalStateException(s"swap: could not move $dst aside")

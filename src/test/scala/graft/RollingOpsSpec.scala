@@ -43,6 +43,24 @@ class RollingOpsSpec extends SparkSpecBase {
     }
   }
 
+  test("recursive folds reject a duplicate (ticker, date), naming the date") {
+    import spark.implicits._
+    // a duplicate date makes the date-sorted fold order-nondeterministic,
+    // so the fold family fails loud instead of folding it
+    val dirty = Seq(("X", d(1), 10.0), ("X", d(2), 11.0), ("X", d(2), 99.0),
+      ("X", d(3), 12.0)).toDF("ticker", "date", "close")
+    val folds = Seq[(String, org.apache.spark.sql.DataFrame)](
+      "holtWinters" -> SilverOps.holtWinters(dirty),
+      "ema" -> SilverOps.ema(dirty, 0.25))
+    folds.foreach { case (name, df) =>
+      val ex = intercept[org.apache.spark.SparkException](df.collect())
+      val msgs = Iterator.iterate[Throwable](ex)(_.getCause)
+        .takeWhile(_ != null).flatMap(e => Option(e.getMessage))
+      assert(msgs.exists(_.contains("duplicate date")),
+        s"$name must name the duplicate date: ${ex.getMessage}")
+    }
+  }
+
   test("stochastic %K/%D conventions: short-window and flat-range NULLs") {
     import spark.implicits._
     // 5 flat bars then a spike: with n=3 the first two rows are short,

@@ -454,29 +454,6 @@ class SimilarityOpsSpec extends SparkSpecBase {
       "the stored-index path must produce exactly the inline path's rows")
   }
 
-  test("incremental HNSW: append-only delta == full rebuild bit-exactly; " +
-    "untouched shards pass through verbatim") {
-    import spark.implicits._
-    def edges(df: org.apache.spark.sql.DataFrame): Set[(Int, Int, Long, Long)] =
-      df.collect().map(r =>
-        (r.getInt(0), r.getInt(1), r.getLong(2), r.getLong(3))).toSet
-    val old = e.filter(col("vec_id") < 450)
-    val delta = e.filter(col("vec_id") >= 450)
-    val incr = SimilarityOps.hnswInsert(old, SimilarityOps.hnswBuild(old), delta)
-    assert(edges(incr) === edges(SimilarityOps.hnswBuild(e)),
-      "warm-start insertion must replay the cold build exactly")
-    // one-vector delta: every shard but its own passes through verbatim
-    val one = e.filter(col("vec_id") === 499)
-    val old499 = e.filter(col("vec_id") < 499)
-    val g499 = SimilarityOps.hnswBuild(old499)
-    val s499 = SimilarityOps.hnswAssign(one)
-      .select(col("shard")).as[Int].head()
-    val out = SimilarityOps.hnswInsert(old499, g499, one)
-    assert(edges(out.filter(col("shard") =!= s499)) ===
-      edges(g499.filter(col("shard") =!= s499)),
-      "untouched shards must not be rebuilt")
-  }
-
   test("scalar quantization: constant dimension encodes to 0, zero error") {
     import spark.implicits._
     val docs = Seq((1L, Seq(1.0f, 5.0f)), (2L, Seq(1.0f, -5.0f)))
