@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Benchmark main. Prints ONE JSON line the driver parses into BENCH_r{N}.json.

@@ -58,7 +58,7 @@ object GraftFunctions {
     * `x` lands at output bit 2i, bit i of `y` at 2i+1, so sorting by the
     * result interleaves both dimensions — files in a z-sorted layout get
     * narrow min/max ranges on BOTH columns (2-D data skipping; the 1-D
-    * version is [[graft.sources.Storage.writeClustered]]). Pure integer
+    * version is a range-partitioned sort on one column). Pure integer
     * mask-shift arithmetic (the classic magic-number bit spread), identical
     * on any engine — no UDF, fully codegen'd. */
   def zorder2(x: Column, y: Column): Column = {

@@ -715,7 +715,7 @@ object DedupOps {
 
   /** Stored side of incremental passage dedup: the chunk-hash occurrence
     * counts ([[chunkDupStats]]' df table) for the corpus. Persist
-    * clustered by `h` at scale (`Storage.writeClustered`) so a delta's
+    * clustered by `h` at scale (range-partitioned and sorted) so a delta's
     * point lookups read only touched row groups — the chunk-granularity
     * sibling of [[buildNearDupIndex]] / `buildSemanticIndex`. */
   def buildChunkIndex(docs: DataFrame, chunkWords: Int = 8,

@@ -105,16 +105,7 @@ object MergeOps {
         baseAll.join(updates.select(col(partitionCol)).distinct(),
           Seq(partitionCol), "left_semi")
       else baseAll.filter(col(partitionCol).isin(touched: _*))
-    val merged = upsert(base, updates, keys)
-      .repartition(col(partitionCol))
-    merged.write
-      // per-write option, NOT the session conf: on a session without
-      // spark.sql.sources.partitionOverwriteMode=dynamic, a static
-      // Overwrite+partitionBy truncates the whole table path first —
-      // silently destroying every partition the updates didn't touch
-      .option("partitionOverwriteMode", "dynamic")
-      .mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .partitionBy(partitionCol)
-      .parquet(ref.path)
+    Storage.writeTable(upsert(base, updates, keys).repartition(col(partitionCol)),
+      ref, partitionBy = Seq(partitionCol))
   }
 }

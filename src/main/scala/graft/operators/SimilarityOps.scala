@@ -387,7 +387,7 @@ object SimilarityOps {
 
   /** The stored side of incremental semantic dedup: every corpus vector
     * with its assigned cluster id. Persist this clustered/partitioned BY
-    * cid (the lookup key — `Storage.writeClustered` at scale) so a
+    * cid (the lookup key: range-partition and sort on it at scale) so a
     * delta's touched-cluster reads skip everything else, the same way the
     * near-dup band index is clustered by bucket. */
   def buildSemanticIndex(corpus: DataFrame,

@@ -71,12 +71,10 @@ object Pipeline {
     * wrote in ~1.4 s against ~0.2 s flat, and reading back more than 32
     * partition paths adds a partition-discovery job. The flat table is
     * the aggregate's output as is (AQE sizes its files: one at bench
-    * scale, ~64 MB each above it) and lands through
-    * [[Storage.overwriteWithSwap]], so a failed reload leaves the previous
-    * table readable, as a dynamic partition overwrite does; a static
-    * Overwrite deletes it before the job runs. Both layouts read back
-    * identically; PipelineSpec proves silver is byte-identical on top of
-    * each. */
+    * scale, ~64 MB each above it). Either layout lands through
+    * [[Storage.writeTable]], whose protocol leaves the previous table
+    * readable if the reload fails. Both layouts read back identically;
+    * PipelineSpec proves silver is byte-identical on top of each. */
   def runBronze(spark: SparkSession, sfDir: String, lake: Lake,
                 grain: String = "auto"): Unit = {
     val raw = Tables.bars(spark, sfDir)
@@ -103,12 +101,11 @@ object Pipeline {
     val stocks = lake.bronze("stocks")
     // independent: the tiny splits write hides under the stocks write
     Jobs.overlap(spark, "bronze.writes")(
-      "stocks" -> (() =>
-        // one shuffle on the partition key so each date directory gets
-        // exactly one writer (otherwise: |dirs| × |tasks| tiny files)
-        if (byDate) Storage.writeTable(raw.repartition(col("date")), stocks,
-          partitionBy = Seq("date"))
-        else Storage.overwriteWithSwap(raw, stocks)),
+      // by date: one shuffle on the partition key so each date directory
+      // gets exactly one writer (otherwise: |dirs| × |tasks| tiny files)
+      "stocks" -> (() => Storage.writeTable(
+        if (byDate) raw.repartition(col("date")) else raw, stocks,
+        partitionBy = if (byDate) Seq("date") else Nil)),
       // two unioned ranges: one file instead of one per range partition
       "splits" -> (() => Storage.writeTable(
         DomainQueries.syntheticSplits(spark).coalesce(1), lake.bronze("splits"))))

@@ -4,7 +4,7 @@ import graft.functions.JaroWinkler
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.types.{DoubleType, StringType}
+import org.apache.spark.sql.types.DoubleType
 
 /** Optimizer rule: derive a cheap length-ratio prefilter from a
   * Jaro-Winkler threshold predicate.

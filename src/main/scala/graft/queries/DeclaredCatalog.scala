@@ -11,9 +11,10 @@ import scala.collection.mutable
 
 /** The reference's COMPLETE declared query catalog: all 19 canned queries
   * from `metadata.json` (databases/hvcs/queries), registered verbatim
-  * over the gold tables this engine produces. A Datasette-style consumer of
-  * the reference can point at these views and run every saved query
-  * unchanged — the "complete" bar the builder brief sets.
+  * over views this object derives itself from the raw fixture bars
+  * (`Tables.bars`, not split-adjusted), not over the gold lake the pipeline
+  * writes. A Datasette-style consumer of the reference can point at these
+  * views and run every saved query unchanged.
   *
   * Table notes:
   *  - `*_high_volume_closes_*` at daily/weekly/monthly grain: HVCs off the

@@ -1,13 +1,13 @@
 package graft.queries
 
 import graft.Tables
-import graft.operators.{PatternOps, SilverOps}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The reference's published SQL query surface (`metadata.json:580-676` —
-  * SURVEY §2.11): canned queries served over the gold pattern tables, the
-  * `stairstepping_patterns` and `falling_down_stairs_patterns` views that
-  * [[DeclaredCatalog]] registers with its own (so the indicators → HVC →
+  * SURVEY §2.11): canned queries served over the raw pattern tables
+  * `stairstepping_patterns` and `falling_down_stairs_patterns`, which
+  * [[DeclaredCatalog]] derives from the unadjusted fixture bars and
+  * registers with its own views (so the indicators → HVC →
   * stairs chain is computed once no matter which declared surface runs
   * first). The canned SQL runs verbatim through `spark.sql`, exactly as a
   * Datasette-style consumer would; every shape in the catalog is

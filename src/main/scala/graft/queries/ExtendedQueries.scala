@@ -1029,8 +1029,8 @@ object ExtendedQueries {
       liOrphans.unionByName(okChildless)
     }),
 
-    // z-order (Morton) values: the 2-D bit interleave underlying
-    // Storage.writeZOrdered, exposed and oracle-checked — pure mask-shift
+    // z-order (Morton) values: the 2-D bit interleave a z-ordered file
+    // layout sorts on, exposed and oracle-checked — pure mask-shift
     // integer arithmetic the oracle reproduces verbatim.
     "q_zorder" -> ((s, dir) =>
       Tables.part(s, dir).select(col("p_partkey"),

@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{col, max}
 import org.apache.spark.sql.types.StructType
 
@@ -21,6 +21,11 @@ import java.time.LocalDate
   *    reference's read-concat-rewrite of the whole dataset
   *    (`bronze/main.py:245-253`) — the difference between O(day) and
   *    O(history) I/O at 100 TB;
+  *  - an unpartitioned overwrite is a swap, not Spark's static Overwrite:
+  *    a static Overwrite deletes the table before its job runs, so a failed
+  *    write leaves it unreadable, while the swap leaves the previous table
+  *    readable, as a dynamic partition overwrite does. The guarantee is
+  *    per table; a stage that lands several tables is not all-or-nothing;
   *  - reads are plain `spark.read.parquet`, which natively handles both the
   *    single-file and hive-partitioned layouts and gives predicate pushdown
   *    + partition pruning for free.
@@ -34,86 +39,59 @@ object Storage {
   private def fs(spark: SparkSession, path: String): FileSystem =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** S1 — write a table; optional hive partitioning, zstd compression.
-    * `bloomFilterFor` enables a parquet bloom filter per named column —
-    * point lookups (ticker, doc_id) then skip row groups whose filter
-    * rejects the key, without any sort requirement. */
+  /** S1 — write a table, zstd-compressed. The protocol follows from `mode`
+    * and `partitionBy`, so no caller chooses one:
+    *  - `Append` (or any mode but `Overwrite`): a plain write;
+    *  - `Overwrite` with `partitionBy`: a dynamic partition overwrite,
+    *    pinned on the write itself (a static-mode session would otherwise
+    *    truncate the whole path and lose every partition the frame does
+    *    not touch);
+    *  - `Overwrite` without `partitionBy`: a swap. The frame is written to
+    *    the hidden sibling `.<name>._swap_tmp` and moved into place with
+    *    checked renames, so `df` may read `ref` itself (compaction is
+    *    `writeTable(readTable(spark, ref).repartition(n), ref)`) and a
+    *    failed write leaves the previous table as it was. */
   def writeTable(df: DataFrame, ref: TableRef,
                  mode: SaveMode = SaveMode.Overwrite,
-                 partitionBy: Seq[String] = Nil,
-                 bloomFilterFor: Seq[String] = Nil): Unit = {
-    val base = df.write.mode(mode).option("compression", "zstd")
-    val w = bloomFilterFor.foldLeft(base)((acc, c) =>
-      acc.option(s"parquet.bloom.filter.enabled#$c", "true"))
-    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
-      .parquet(ref.path)
-  }
-
-  /** Range-clustered write: range-partition on the cluster key and sort
-    * within partitions, so every output file covers a narrow key range.
-    * Parquet min/max column stats then prune whole files/row-groups for
-    * range or point predicates on that key — the 1-D version of what
-    * Z-ordering buys, with zero read-side machinery. The layout of choice
-    * for silver/gold tables queried by ticker at 100 TB. */
-  def writeClustered(df: DataFrame, ref: TableRef, clusterBy: Seq[String],
-                     numFiles: Int,
-                     bloomFilterFor: Seq[String] = Nil): Unit = {
-    val cols = clusterBy.map(org.apache.spark.sql.functions.col)
-    writeTable(
-      df.repartitionByRange(numFiles, cols: _*).sortWithinPartitions(cols: _*),
-      ref, SaveMode.Overwrite, Nil, bloomFilterFor)
-  }
-
-  /** Z-ordered write: bucket each cluster column to 8 bits by its value
-    * distribution (sampled quantile boundaries — same mechanism as
-    * RangePartitioner, no global sort), interleave the buckets into a
-    * Morton value ([[graft.functions.GraftFunctions.zorder2]]), and
-    * range-partition + sort on it. Every output file then covers a narrow
-    * min/max range on BOTH columns, so parquet stats prune files for
-    * predicates on either dimension — Delta/Iceberg's OPTIMIZE ZORDER
-    * expressed as plain Spark. A layout/maintenance op: one extra pass at
-    * write time, zero read-side machinery. */
-  def writeZOrdered(df: DataFrame, ref: TableRef,
-                    colA: String, colB: String, numFiles: Int,
-                    bloomFilterFor: Seq[String] = Nil): Unit = {
-    import org.apache.spark.sql.functions._
-    val probes = (1 until 256).map(_ / 256.0).toArray
-    // one sampling pass computes both columns' boundaries
-    val allBounds = df.stat.approxQuantile(Array(colA, colB), probes, 0.01)
-    def bucket(c: String, bounds: Array[Double]): org.apache.spark.sql.Column = {
-      val bs = bounds.distinct.sorted
-      val arr = array(bs.toIndexedSeq.map(lit): _*)
-      // index of the largest boundary ≤ value == the value's bucket —
-      // then RESCALED onto the full 8-bit range: a low-cardinality column
-      // yields few distinct boundaries, and without rescaling its bits
-      // would occupy only the low end of the interleave, letting the other
-      // dimension dominate the sort order entirely
-      val pos = coalesce(array_position(arr,
-        array_max(filter(arr, b => b <= col(c).cast("double")))), lit(0L))
-      (pos * 255L) / lit(bs.length.toLong)
+                 partitionBy: Seq[String] = Nil): Unit = {
+    val w = df.write.mode(mode).option("compression", "zstd")
+    if (partitionBy.nonEmpty)
+      w.option("partitionOverwriteMode", "dynamic")
+        .partitionBy(partitionBy: _*).parquet(ref.path)
+    else if (mode != SaveMode.Overwrite) w.parquet(ref.path)
+    else {
+      // Swap: write a hidden temp sibling, move the live dir to a backup,
+      // move temp into place, drop the backup. Hadoop signals a failed
+      // rename by returning false, so each is checked; a failed second
+      // rename restores the backup, so the table is never lost, though a
+      // reader racing the two renames can see the path briefly absent.
+      // Dot-prefixed siblings are hidden from Spark's file listing, so a
+      // crash mid-swap never surfaces them as data; the live dir is
+      // authoritative, so stale leftovers are cleared first.
+      val spark = df.sparkSession
+      val f = fs(spark, ref.path)
+      val dst = new Path(ref.path)
+      val tmp = new Path(dst.getParent, s".${dst.getName}._swap_tmp")
+      val bak = new Path(dst.getParent, s".${dst.getName}._swap_bak")
+      if (f.exists(tmp)) f.delete(tmp, true)
+      if (f.exists(bak)) f.delete(bak, true)
+      w.parquet(tmp.toString)
+      if (f.exists(dst) && !f.rename(dst, bak))
+        throw new IllegalStateException(s"swap: could not move $dst aside")
+      if (!f.rename(tmp, dst)) {
+        if (f.exists(bak)) f.rename(bak, dst) // restore — the table must survive
+        throw new IllegalStateException(s"swap: could not move $tmp into place")
+      }
+      f.delete(bak, true)
+      // what Spark's own Overwrite does for its output path: drop cached
+      // plans and file listings that still point at the replaced files
+      spark.catalog.refreshByPath(ref.path)
     }
-    val z = graft.functions.GraftFunctions.zorder2(
-      bucket(colA, allBounds(0)), bucket(colB, allBounds(1)))
-    writeTable(
-      df.withColumn("_z", z)
-        .repartitionByRange(numFiles, col("_z"))
-        .sortWithinPartitions(col("_z"))
-        .drop("_z"),
-      ref, SaveMode.Overwrite, Nil, bloomFilterFor)
   }
 
   /** S2 — read a table (single file or partitioned dir, transparently). */
   def readTable(spark: SparkSession, ref: TableRef): DataFrame =
     spark.read.parquet(ref.path)
-
-  /** Schema-evolution read: merge the footer schemas of every file, so a
-    * table whose appends gained columns over time reads as the SUPERSET
-    * schema with nulls where old files lack a column — additive evolution
-    * without a rewrite. Costs one footer read per file (why it isn't the
-    * default read path); columns may only be ADDED — a type change for an
-    * existing name fails the merge, which is the correct contract. */
-  def readTableMerged(spark: SparkSession, ref: TableRef): DataFrame =
-    spark.read.option("mergeSchema", "true").parquet(ref.path)
 
   /** S3 — existence probe: any parquet footer under the path. */
   def tableExists(spark: SparkSession, ref: TableRef): Boolean = {
@@ -132,8 +110,7 @@ object Storage {
 
   /** S4 — create an empty table with an explicit schema. */
   def initTable(spark: SparkSession, ref: TableRef, schema: StructType): Unit =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      .write.mode(SaveMode.Overwrite).parquet(ref.path)
+    writeTable(spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema), ref)
 
   /** S5 — scalar max(date); served from parquet footer statistics, so this
     * is a metadata-only job even over a 100 TB table. */
@@ -146,98 +123,6 @@ object Storage {
         case d: LocalDate     => d
         case other => LocalDate.parse(other.toString.take(10))
       }
-
-  /** Small-files compaction: bin-pack an UNPARTITIONED table's files toward
-    * `targetMB`-sized outputs. The nightly maintenance job every parquet
-    * lake needs — incremental appends accrete small files, and at 100 TB
-    * an uncompacted table turns every scan into millions of opens. Sizing
-    * comes from the on-disk byte count (compressed). Hive-partitioned
-    * tables are refused: their unit of compaction is the partition
-    * directory (compact each as its own ref), and a flat rewrite would
-    * destroy the layout the incremental-ingest path depends on.
-    *
-    * Swap protocol: write to a temp dir, rename the live dir to a backup,
-    * rename temp into place, drop the backup. Each rename's return value is
-    * checked (Hadoop signals failure by returning false); a failed second
-    * rename restores the backup, so the table is never lost — though a
-    * reader racing the two renames can see the path briefly absent.
-    * Returns the output file count. */
-  def compact(spark: SparkSession, ref: TableRef, targetMB: Int = 128): Int = {
-    val f = fs(spark, ref.path)
-    val dst = new Path(ref.path)
-    require(!f.listStatus(dst).exists(s =>
-      s.isDirectory && s.getPath.getName.contains("=")),
-      s"compact: ${ref.path} is hive-partitioned — compact each partition directory instead")
-    val bytes = f.getContentSummary(dst).getLength
-    val n = math.max(1, math.ceil(bytes / (targetMB * 1024.0 * 1024.0)).toInt)
-    // dot-prefixed siblings: hidden from Spark's file listing and partition
-    // discovery, so a crash mid-swap can never surface them as data — for a
-    // partition ref the temp dirs live inside the parent table directory,
-    // where an unhidden name containing '=' would be parsed as a partition
-    val tmp = new Path(dst.getParent, s".${dst.getName}._compact_tmp")
-    val bak = new Path(dst.getParent, s".${dst.getName}._compact_bak")
-    // stale leftovers from a crashed run — dst is authoritative
-    if (f.exists(tmp)) f.delete(tmp, true)
-    if (f.exists(bak)) f.delete(bak, true)
-    readTable(spark, ref).repartition(n)
-      .write.mode(SaveMode.Overwrite).option("compression", "zstd")
-      .parquet(tmp.toString)
-    if (!f.rename(dst, bak))
-      throw new IllegalStateException(s"compact: could not move $dst aside")
-    if (!f.rename(tmp, dst)) {
-      f.rename(bak, dst) // restore the original; the table must survive
-      throw new IllegalStateException(s"compact: could not move $tmp into place")
-    }
-    f.delete(bak, true)
-    n
-  }
-
-  /** Compact every partition directory of a hive-partitioned table, each
-    * as its own independent swap (so a failure mid-way leaves every
-    * untouched partition intact — there is no global half-state). Driver
-    * iterates partition dirs; each compaction is an ordinary cluster job,
-    * and partitions can be sharded across nightly runs at 100 TB. Returns
-    * (partitionPath → output file count). */
-  def compactPartitions(spark: SparkSession, ref: TableRef,
-                        targetMB: Int = 128): Map[String, Int] = {
-    val f = fs(spark, ref.path)
-    val parts = f.listStatus(new Path(ref.path)).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.contains("="))
-    require(parts.nonEmpty,
-      s"compactPartitions: ${ref.path} has no partition directories")
-    parts.map { s =>
-      val rel = s.getPath.getName
-      // a partition dir is itself an unpartitioned parquet dir — reuse the
-      // single-table swap; basePath-less read keeps the partition column
-      // out of the rewritten files, exactly as the original layout has it
-      rel -> compact(spark,
-        TableRef(ref.root, ref.layer, s"${ref.name}/$rel"), targetMB)
-    }.toMap
-  }
-
-  /** Overwrite `ref` with `df` even when `df`'s lineage READS `ref` (a
-    * plain Overwrite would truncate its own input, which Spark rejects):
-    * materialize to a hidden temp sibling, then swap with the same
-    * checked-rename protocol as [[compact]]. The merge/update pattern's
-    * storage half — see MergeOps and StreamingOps.upsertSink. */
-  def overwriteWithSwap(df: DataFrame, ref: TableRef): Unit = {
-    val spark = df.sparkSession
-    val f = fs(spark, ref.path)
-    val dst = new Path(ref.path)
-    val tmp = new Path(dst.getParent, s".${dst.getName}._swap_tmp")
-    val bak = new Path(dst.getParent, s".${dst.getName}._swap_bak")
-    if (f.exists(tmp)) f.delete(tmp, true)
-    if (f.exists(bak)) f.delete(bak, true)
-    df.write.mode(SaveMode.Overwrite).option("compression", "zstd")
-      .parquet(tmp.toString)
-    if (f.exists(dst) && !f.rename(dst, bak))
-      throw new IllegalStateException(s"swap: could not move $dst aside")
-    if (!f.rename(tmp, dst)) {
-      if (f.exists(bak)) f.rename(bak, dst) // restore — the table must survive
-      throw new IllegalStateException(s"swap: could not move $tmp into place")
-    }
-    f.delete(bak, true)
-  }
 
   /** S10 — drop a table (the reference's `clean` stage). */
   def deleteTable(spark: SparkSession, ref: TableRef): Boolean =

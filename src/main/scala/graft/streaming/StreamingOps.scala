@@ -72,13 +72,8 @@ object StreamingOps {
     * (which is also the write's lineage). */
   private def idempotentBatchAppend(df: DataFrame, ref: graft.sources.TableRef,
                                     batchId: Long): Unit =
-    df.withColumn("batch_id", lit(batchId))
-      .write
-      .option("partitionOverwriteMode", "dynamic")
-      .option("compression", "zstd")
-      .mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .partitionBy("batch_id")
-      .parquet(ref.path)
+    graft.sources.Storage.writeTable(df.withColumn("batch_id", lit(batchId)),
+      ref, partitionBy = Seq("batch_id"))
 
   /** Streaming incremental near-dup: each micro-batch of documents is
     * checked against the STORED LSH index (pairs vs everything already
@@ -190,12 +185,11 @@ object StreamingOps {
           case Some(pc) =>
             graft.sources.Storage.writeTable(
               latest.repartition(col(pc)), ref, partitionBy = Seq(pc))
-          case None if exists =>
-            graft.sources.Storage.overwriteWithSwap(
-              graft.operators.MergeOps.upsert(
-                graft.sources.Storage.readTable(spark, ref), latest, keys), ref)
           case None =>
-            graft.sources.Storage.writeTable(latest, ref)
+            graft.sources.Storage.writeTable(
+              if (exists) graft.operators.MergeOps.upsert(
+                graft.sources.Storage.readTable(spark, ref), latest, keys)
+              else latest, ref)
         }
       }
       .start()

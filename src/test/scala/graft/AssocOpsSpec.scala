@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators.AssocOps
-import org.apache.spark.sql.functions._
 
 class AssocOpsSpec extends SparkSpecBase {
 

@@ -19,7 +19,8 @@ import org.apache.spark.sql.graftshim.ListenerBusBridge
 import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Every canned query in the reference's Datasette catalog must run
-  * unchanged over this engine's gold views — the switch-over contract. */
+  * unchanged over this engine's catalog views (derived from the raw,
+  * unadjusted fixture bars) — the switch-over contract. */
 class DeclaredCatalogSpec extends SparkSpecBase {
 
   private def stored = spark.sparkContext.getRDDStorageInfo.length

@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators.GraphOps
-import org.apache.spark.sql.functions._
 
 class GraphOpsSpec extends SparkSpecBase {
 

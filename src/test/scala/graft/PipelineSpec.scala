@@ -88,7 +88,7 @@ class PipelineSpec extends SparkSpecBase {
   }
 
   test("incremental append produces the same silver daily table as a full rewrite") {
-    import graft.sources.{Storage, TableRef}
+    import graft.sources.Storage
     import graft.queries.DomainQueries
 
     val lakeInc = Lake(Files.createTempDirectory("graft_lake_inc").toString)
@@ -128,7 +128,7 @@ class PipelineSpec extends SparkSpecBase {
   }
 
   test("a split newer than silver's high-water mark forces a full rewrite") {
-    import graft.sources.{Storage, TableRef}
+    import graft.sources.Storage
     val lake = Lake(Files.createTempDirectory("graft_lake_split").toString)
     Pipeline.runAll(spark, sf, lake)
     assert(!Pipeline.shouldFullRewrite(spark, lake))

@@ -2,7 +2,6 @@ package graft
 
 import graft.publish.Publisher
 import java.nio.file.{Files, Paths}
-import scala.jdk.CollectionConverters._
 
 /** The publishing step (reference: Datasette over SQLite): the dump must
   * be a loadable SQLite script covering every catalog table, and the

@@ -109,84 +109,6 @@ class SourcesSpec extends SparkSpecBase {
     assert(Storage.readTable(spark, ref).count() === 3)
   }
 
-  test("partitioned tables: compact refuses, compactPartitions compacts each dir") {
-    val ref = TableRef(Files.createTempDirectory("graft_cmpp").toString, "bronze", "t")
-    val bars = Tables.bars(spark, sf).filter(org.apache.spark.sql.functions.col("ticker") < "T2")
-    Storage.writeTable(bars.repartition(4), ref, partitionBy = Seq("ticker"))
-    intercept[IllegalArgumentException](Storage.compact(spark, ref))
-    val results = Storage.compactPartitions(spark, ref)
-    assert(results.nonEmpty && results.values.forall(_ >= 1))
-    val after = Storage.readTable(spark, ref)
-    // partition column survives the per-dir rewrite and data is intact
-    assert(after.columns.contains("ticker"))
-    assert(after.count() === bars.count())
-  }
-
-  test("clustered write: each file covers a narrow key range; blooms accepted") {
-    val ref = TableRef(Files.createTempDirectory("graft_clus").toString, "silver", "t")
-    val bars = Tables.bars(spark, sf)
-    Storage.writeClustered(bars, ref, Seq("ticker"), numFiles = 8,
-      bloomFilterFor = Seq("ticker"))
-    val files = new java.io.File(ref.path).listFiles()
-      .filter(_.getName.endsWith(".parquet")).map(_.getPath)
-    assert(files.length > 1)
-    val total = bars.select("ticker").distinct().count()
-    // narrow per-file ranges: every file holds well under the full
-    // ticker universe (that's what makes min/max stats prune)
-    files.foreach { f =>
-      val d = spark.read.parquet(f).select("ticker").distinct().count()
-      assert(d < total / 2, s"$f covers $d of $total tickers")
-    }
-    assert(Storage.readTable(spark, ref).count() === bars.count())
-  }
-
-  test("z-ordered write narrows per-file ranges on BOTH dimensions") {
-    import org.apache.spark.sql.functions._
-    val ev = Tables.events(spark, sf)
-      .select(col("event_id"), col("user_id"), col("value"))
-    val zref = TableRef(Files.createTempDirectory("graft_zord").toString, "silver", "z")
-    Storage.writeZOrdered(ev, zref, "user_id", "value", numFiles = 16)
-    // baseline: 1-D clustering on user_id leaves the second dim unclustered
-    val cref = TableRef(Files.createTempDirectory("graft_zord1d").toString, "silver", "c")
-    Storage.writeClustered(ev, cref, Seq("user_id"), numFiles = 16)
-    def avgSpanFraction(ref: TableRef, c: String): Double = {
-      val g = Storage.readTable(spark, ref)
-        .agg(min(col(c)).cast("double"), max(col(c)).cast("double")).first()
-      val span = g.getDouble(1) - g.getDouble(0)
-      val files = new java.io.File(ref.path).listFiles()
-        .filter(_.getName.endsWith(".parquet")).map(_.getPath)
-      val fracs = files.map { f =>
-        val r = spark.read.parquet(f)
-          .agg(min(col(c)).cast("double"), max(col(c)).cast("double")).first()
-        (r.getDouble(1) - r.getDouble(0)) / span
-      }
-      fracs.sum / fracs.length
-    }
-    // z-order: both dims well under the full span per file
-    assert(avgSpanFraction(zref, "user_id") < 0.5)
-    assert(avgSpanFraction(zref, "value") < 0.5)
-    // 1-D clustering: first dim narrow, second dim left wide — the z
-    // layout must beat it on the dimension it ignores
-    assert(avgSpanFraction(cref, "user_id") < 0.5)
-    assert(avgSpanFraction(zref, "value") < avgSpanFraction(cref, "value") * 0.75)
-    // layout change only — same rows
-    assert(Storage.readTable(spark, zref).count() === ev.count())
-  }
-
-  test("compact bin-packs small files and preserves the data exactly") {
-    val ref = TableRef(Files.createTempDirectory("graft_cmp").toString, "silver", "t")
-    val bars = Tables.bars(spark, sf)
-    Storage.writeTable(bars.repartition(16), ref)
-    def files() = new java.io.File(ref.path).listFiles()
-      .count(_.getName.endsWith(".parquet"))
-    assert(files() === 16)
-    val n = Storage.compact(spark, ref)
-    assert(files() === n && n < 16)
-    val after = Storage.readTable(spark, ref)
-    assert(after.except(bars).count() === 0)
-    assert(bars.except(after).count() === 0)
-  }
-
   test("a failed swap write leaves the previous table; the next swap replaces it") {
     import org.apache.spark.sql.functions._
     val root = Files.createTempDirectory("graft_swap").toString
@@ -194,19 +116,44 @@ class SourcesSpec extends SparkSpecBase {
     val bars = Tables.bars(spark, sf)
     val cols = bars.columns.toSeq
     def stored() = Storage.tableChecksum(Storage.readTable(spark, ref), cols).first()
-    Storage.overwriteWithSwap(bars, ref)
+    Storage.writeTable(bars, ref)
     val before = stored()
     val victim = bars.select("ticker").first().getString(0)
     val boom = udf { (t: String) =>
       if (t == victim) throw new IllegalStateException("boom"); t }
     intercept[Exception](
-      Storage.overwriteWithSwap(bars.withColumn("ticker", boom(col("ticker"))), ref))
+      Storage.writeTable(bars.withColumn("ticker", boom(col("ticker"))), ref))
     assert(stored() === before)
     val next = bars.filter(col("ticker") =!= victim)
-    Storage.overwriteWithSwap(next, ref)
+    Storage.writeTable(next, ref)
     assert(stored() === Storage.tableChecksum(next, cols).first())
     assert(stored() !== before)
     assert(new java.io.File(s"$root/bronze").list().toSeq === Seq("stocks"))
+  }
+
+  test("a failed write among overlapped overwrites leaves every table readable") {
+    // the failing table keeps its old contents; the sibling the failure
+    // cancels holds its old or its new contents, never nothing
+    import org.apache.spark.sql.functions._
+    val root = Files.createTempDirectory("graft_swap_overlap").toString
+    val (failing, sibling) = (TableRef(root, "gold", "a"), TableRef(root, "gold", "b"))
+    val bars = Tables.bars(spark, sf)
+    val cols = bars.columns.toSeq
+    def sum(df: org.apache.spark.sql.DataFrame) = Storage.tableChecksum(df, cols).first()
+    def stored(ref: TableRef) = sum(Storage.readTable(spark, ref))
+    val victim = bars.select("ticker").first().getString(0)
+    val (oldB, newB) = (bars.filter(col("ticker") === victim),
+      bars.filter(col("ticker") =!= victim))
+    Storage.writeTable(bars, failing)
+    Storage.writeTable(oldB, sibling)
+    val (beforeA, beforeB) = (stored(failing), stored(sibling))
+    val boom = udf { (t: String) =>
+      if (t == victim) throw new IllegalStateException("boom"); t }
+    intercept[Exception](graft.pipeline.Jobs.overlap(spark, "test.writes")(
+      "a" -> (() => Storage.writeTable(bars.withColumn("ticker", boom(col("ticker"))), failing)),
+      "b" -> (() => Storage.writeTable(newB, sibling))))
+    assert(stored(failing) === beforeA)
+    assert(Set(beforeB, sum(newB)).contains(stored(sibling)))
   }
 
   test("upsert replaces matched keys, inserts the rest") {
@@ -328,22 +275,5 @@ class SourcesSpec extends SparkSpecBase {
     val m = sums(mutated)
     assert(m._1 === base._1 && (m._2 != base._2 || m._3 != base._3),
       "a single mutated value must move the checksum")
-  }
-
-  test("schema-evolution read: appended columns merge, old rows null-fill") {
-    import spark.implicits._
-    val ref = TableRef(
-      java.nio.file.Files.createTempDirectory("graft_evolve").toString,
-      "silver", "evolving")
-    Storage.writeTable(Seq((1L, "a"), (2L, "b")).toDF("id", "x"), ref)
-    // a later producer gained a column; append, don't rewrite
-    Seq((3L, "c", 9.5)).toDF("id", "x", "y").write
-      .mode("append").parquet(ref.path)
-    val merged = Storage.readTableMerged(spark, ref)
-    assert(merged.columns.sorted.toSeq === Seq("id", "x", "y"))
-    val rows = merged.collect()
-      .map(r => r.getLong(0) -> (if (r.isNullAt(2)) None else Some(r.getDouble(2))))
-      .toMap
-    assert(rows === Map(1L -> None, 2L -> None, 3L -> Some(9.5)))
   }
 }

@@ -35,12 +35,31 @@ class StreamingSpec extends SparkSpecBase {
   }
 
   test("q_events_sessions: every session ends at or after its start") {
-    val batchSessions = SparkEntry.queries("q_events_sessions")(spark, sf)
-    val n = batchSessions.count()
-    assert(n > 0)
-    val bad = batchSessions.filter(
-      unix_millis(col("session_end")) - unix_millis(col("session_start")) < 0).count()
-    assert(bad === 0)
+    // the 30-minute rule that defines the query: a user's next session
+    // starts more than 30 min after the previous one ends, a session
+    // breaks at every gap of more than 30 min between a user's events, and
+    // every event lands in exactly one session
+    import org.apache.spark.sql.expressions.Window
+    val gapMs = 30 * 60000L
+    val sessions = SparkEntry.queries("q_events_sessions")(spark, sf)
+    val events = Tables.events(spark, sf)
+    assert(sessions.count() > 0)
+    assert(sessions.filter(
+      unix_millis(col("session_end")) < unix_millis(col("session_start"))).count() === 0)
+    val bySession = Window.partitionBy(col("user_id")).orderBy(col("session_start"))
+    val closeSessions = sessions
+      .withColumn("prev_end", lag(col("session_end"), 1).over(bySession))
+      .filter(unix_millis(col("session_start")) - unix_millis(col("prev_end")) <= gapMs)
+      .count()
+    assert(closeSessions === 0, "consecutive sessions of a user within 30 min")
+    val byTs = Window.partitionBy(col("user_id")).orderBy(col("ts"))
+    val breaks = events
+      .withColumn("prev_ts", lag(col("ts"), 1).over(byTs))
+      .filter(unix_millis(col("ts")) - unix_millis(col("prev_ts")) > gapMs)
+      .count()
+    val users = events.select(col("user_id")).distinct().count()
+    assert(sessions.count() === users + breaks, "one session per user plus one per break")
+    assert(sessions.agg(sum(col("n_events"))).first().getLong(0) === events.count())
   }
 
   test("partitioned upsert sink leaves untouched partition files byte-identical") {
