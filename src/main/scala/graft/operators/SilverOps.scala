@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.functions.{GraftFunctions => F, ProductAgg}
+import graft.functions.{GraftFunctions => F}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -11,10 +11,10 @@ import org.apache.spark.sql.types.DecimalType
   *
   * Scale notes (100 TB): every operator here shuffles at most once, on
   * `ticker` (window functions) or `(ticker, bucket)` (roll-ups). The splits
-  * dim is tiny (~500 rows in the reference) and always broadcast, so split
-  * adjustment adds zero shuffles. The reference's manual 250/500-ticker
-  * batching loops (`silver/main.py:133-146`) are deliberately absent —
-  * partitioning replaces them (SURVEY §4).
+  * dim is tiny (~500 rows in the reference), grouped per ticker and
+  * broadcast, so split adjustment adds zero shuffles of the bars. The
+  * reference's manual 250/500-ticker batching loops (`silver/main.py:133-146`)
+  * are deliberately absent — partitioning replaces them (SURVEY §4).
   */
 object SilverOps {
 
@@ -26,26 +26,25 @@ object SilverOps {
     *
     * For every bar dated before a split's execution date, price scales by
     * `split_from/split_to` and volume by its inverse (floor-cast to long,
-    * `silver/splits.py:92-97`). Multiple splits compound via the exact
-    * product aggregate. Implemented as: broadcast-join bars×splits on
-    * ticker, conditional factor, product per (ticker,date), then adjust —
-    * the factor is computed in a narrow plan and joined back, so bar columns
-    * are never fanned out through the aggregate (SURVEY A4's cleaner shape).
+    * `silver/splits.py:92-97`). Multiple splits compound: the splits dim is
+    * grouped into one array per ticker, sorted so the fold order is fixed,
+    * broadcast onto the bars by ticker, and each bar folds the product of
+    * the ratios dated after it — one scan, no shuffle of the bars. A null
+    * ratio is skipped, as SQL `product` skips nulls; no splits is factor 1.0.
     *
     * `splits` schema: (ticker, execution_date, split_from, split_to).
     */
   def applySplits(bars: DataFrame, splits: DataFrame): DataFrame = {
-    val factors = bars.select("ticker", "date")
-      .join(broadcast(splits), Seq("ticker"), "inner")
-      .withColumn("factor",
-        when(col("date") < col("execution_date"),
-          col("split_from").cast("double") / col("split_to").cast("double"))
-          .otherwise(lit(1.0)))
-      .groupBy("ticker", "date")
-      .agg(ProductAgg.product(col("factor")).as("adj_factor"))
+    val byTicker = splits.groupBy("ticker").agg(array_sort(collect_list(struct(
+      col("execution_date").as("on"),
+      (col("split_from").cast("double") / col("split_to").cast("double")).as("ratio"))))
+      .as("splits"))
+    val factor = aggregate(
+      filter(col("splits"), s => col("date") < s("on") && s("ratio").isNotNull),
+      lit(1.0), (f, s) => f * s("ratio"))
 
-    bars.join(factors, Seq("ticker", "date"), "left")
-      .withColumn("adj_factor", coalesce(col("adj_factor"), lit(1.0)))
+    bars.join(broadcast(byTicker), Seq("ticker"), "left")
+      .withColumn("adj_factor", coalesce(factor, lit(1.0)))
       .select(col("ticker"), col("date"),
         (col("open") * col("adj_factor")).as("open"),
         (col("high") * col("adj_factor")).as("high"),

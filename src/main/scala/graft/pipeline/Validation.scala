@@ -10,9 +10,9 @@ import org.apache.spark.sql.functions._
   * (`silver/validation.py:360`).
   *
   * The reference diffs against Polygon's adjusted prices; offline, the
-  * independent oracle is a from-scratch recomputation over bronze — a
-  * different plan (window-free, join + product per row) than the silver
-  * pipeline's, so a bug in either path surfaces as a mismatch.
+  * independent oracle is a from-scratch recomputation over bronze — join
+  * + product aggregate per (ticker, date), not silver's per-row fold — so
+  * a bug in either path surfaces as a mismatch.
   */
 object Validation {
 

@@ -53,7 +53,7 @@ object PruneJaroWinkler extends Rule[LogicalPlan] {
     }
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
-    case f @ Filter(cond, child)
+    case Filter(cond, child)
         if !alreadyGuarded(cond) &&
           splitConjuncts(cond).exists(c => thresholdOf(c).exists(_._3 >= 0.8)) =>
       val guards = splitConjuncts(cond).flatMap(thresholdOf).collect {

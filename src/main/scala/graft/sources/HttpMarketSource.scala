@@ -94,7 +94,7 @@ final class HttpMarketSource(baseUrl: String, apiKey: String,
       case Left((why, _)) if attempt + 1 >= retry.maxAttempts =>
         throw new RuntimeException(
           s"$why from ${redacted(url)} (gave up after ${retry.maxAttempts} attempts)")
-      case Left((why, serverDelay)) =>
+      case Left((_, serverDelay)) =>
         sleeper(retry.delayMs(attempt, serverDelay))
         getWithRetry(url, attempt + 1)
     }

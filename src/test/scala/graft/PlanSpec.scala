@@ -31,6 +31,10 @@ class PlanSpec extends SparkSpecBase {
   test("split adjustment broadcasts the splits dim") {
     val p = plan("q_split_adjust")
     assert(p.contains("BroadcastHashJoin"), p)
+    // the factor is folded per bar: no (ticker, date) product aggregate
+    // and no join back onto the bars
+    assert(!p.contains("SortMergeJoin"), p)
+    assert(!p.toLowerCase.contains("productagg"), p)
   }
 
   test("vwap: year and quarter windows share one exchange") {

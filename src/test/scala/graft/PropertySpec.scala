@@ -50,6 +50,40 @@ class PropertySpec extends SparkSpecBase {
     }
   }
 
+  test("split factors fold per bar: compounded before, skipped when null, 1.0 without splits") {
+    def d(s: String) = java.sql.Date.valueOf(s)
+    val bars = Seq(
+      ("A", "2024-01-05"), ("A", "2024-01-10"), ("A", "2024-01-15"), ("A", "2024-01-25"),
+      ("B", "2024-01-05"), ("B", "2024-01-15"), ("B", "2024-01-25"),
+      ("C", "2024-01-05"))
+      .map { case (t, day) => (t, d(day), 40.0, 48.0, 32.0, 40.0, 101L, 7L) }
+      .toDF("ticker", "date", "open", "high", "low", "close", "volume", "transactions")
+    // A: 1→2 then 1→4; B: a 2→1 reverse split and a split with no split_to
+    val splits = Seq(
+      ("A", d("2024-01-10"), Option(1.0), Option(2.0)),
+      ("A", d("2024-01-20"), Option(1.0), Option(4.0)),
+      ("B", d("2024-01-10"), Option(2.0), Option(1.0)),
+      ("B", d("2024-01-20"), Option(1.0), Option.empty[Double]))
+      .toDF("ticker", "execution_date", "split_from", "split_to")
+    val got = SilverOps.applySplits(bars, splits)
+      .select($"ticker", $"date".cast("string"), $"open", $"high", $"low", $"close",
+        $"volume", $"transactions")
+      .as[(String, String, Double, Double, Double, Double, Long, Long)]
+      .collect().sortBy(r => (r._1, r._2)).toSeq
+    // factor per bar, by hand: price × f, volume floor(101 / f)
+    val expected = Seq(
+      ("A", "2024-01-05", 0.125, 808L), // both splits ahead: 1/2 × 1/4
+      ("A", "2024-01-10", 0.25, 404L),  // on the execution date: only the later one
+      ("A", "2024-01-15", 0.25, 404L),
+      ("A", "2024-01-25", 1.0, 101L),
+      ("B", "2024-01-05", 2.0, 50L),    // 101 / 2 = 50.5, floored
+      ("B", "2024-01-15", 1.0, 101L),   // only the null-ratio split ahead
+      ("B", "2024-01-25", 1.0, 101L),
+      ("C", "2024-01-05", 1.0, 101L))
+      .map { case (t, day, f, v) => (t, day, 40.0 * f, 48.0 * f, 32.0 * f, 40.0 * f, v, 7L) }
+    assert(got === expected)
+  }
+
   test("vwap lies within [min close, max close] per (ticker, year)") {
     forSeeds { bars =>
       val v = GoldOps.vwapSignals(bars)
