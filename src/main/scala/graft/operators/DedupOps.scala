@@ -225,18 +225,6 @@ object DedupOps {
     jaccardVerified(cand, shr, shingleSets, minJaccard = 0.0, shr, bandRows)
   }
 
-  /** The persisted LSH index of a corpus: (doc_id, band, bucket) rows plus
-    * (doc_id, sh) shingle rows — the two tables an incremental dedup
-    * pipeline stores (bucketed by `bucket` / `doc_id` respectively at
-    * scale) so each new batch hashes ONLY the delta. */
-  def buildBandIndex(docs: DataFrame, k: Int = 8, bands: Int = 4,
-                     shingleN: Int = 3, textCol: String = "text",
-                     idCol: String = "doc_id"): (DataFrame, DataFrame) = {
-    val shr = shingleRows(docs, shingleN, textCol, idCol)
-    val sigs = signaturesFromShingles(docs, shr, k, idCol)
-    (lshBands(sigs, bands, k / bands), shr)
-  }
-
   /** Per-doc sorted shingle-hash sets — ONE row per doc (sorted 64-bit
     * xxhash64 array, values can be negative, + cardinality): the
     * verification half of the near-dup index. Stored instead of raw shingle rows, Jaccard verification of a
@@ -254,11 +242,12 @@ object DedupOps {
     rows.groupBy(col("doc_id"))
       .agg(sort_array(collect_list(elem)).as("hs"), count(lit(1)).as("n"))
 
-  /** The near-dup index in its INCREMENTAL-friendly form: (bands, sets).
-    * Bands are identical to [[buildBandIndex]]'s; the second table is
-    * [[shingleSets]] (one row per doc) rather than raw shingle rows, so
-    * [[incrementalNearDupsIndexed]] verifies a delta with per-doc joins
-    * instead of an O(corpus) shingle re-aggregation. */
+  /** The persisted LSH index of a corpus, in its INCREMENTAL-friendly
+    * form: (doc_id, band, bucket) rows plus [[shingleSets]] (one row per
+    * doc) rather than raw shingle rows — the two tables an incremental
+    * dedup pipeline stores, so each new batch hashes ONLY the delta and
+    * [[incrementalNearDupsIndexed]] verifies it with per-doc joins instead
+    * of an O(corpus) shingle re-aggregation. */
   def buildNearDupIndex(docs: DataFrame, k: Int = 8, bands: Int = 4,
                         shingleN: Int = 3, textCol: String = "text",
                         idCol: String = "doc_id"): (DataFrame, DataFrame) =
@@ -340,27 +329,6 @@ object DedupOps {
     else keys.grouped(500).map(c => df.filter(col(key).isin(c: _*)))
       .reduce(_.union(_))
 
-  /** [[incrementalNearDups]] against the [[buildNearDupIndex]] form of the
-    * stored index: same pair set and Jaccard values (TextOpsSpec asserts
-    * both equal the batch result restricted to delta-touching pairs), but
-    * the stored corpus is touched ONLY by (a) the band equi-join and (b) a
-    * doc_id join on the per-doc set table restricted to pair members —
-    * the delta cost is O(delta hashing + candidates), with no
-    * corpus-sized aggregation anywhere.
-    *
-    * Scope of the "delta cost independent of index size" claim
-    * (VERDICT r8 #2): it holds in the UNDER-CAP regime — a delta touching
-    * ≤ `maxPushdownKeys` buckets reads the stored index via IN-pushdown
-    * point lookups, so bytes-read is O(delta buckets) at any index size
-    * (BENCH dedup_prune: same delta, 3×-different index, near-equal MB).
-    * PAST the cap the stored band table is scanned once per delta — a
-    * term linear in index size (though not all SHUFFLED: the
-    * [[overCapBloomWorthIt]]-gated bloom prefilter drops non-matching
-    * stored rows before the join exchange once the index is
-    * shuffle-dominant). Measured at 10× data with a 10× over-cap delta
-    * (r8 one-off re-run, medians): ~5.6× wall time — sublinear,
-    * because the scan is cheap relative to delta hashing + candidate
-    * verification at that shape. */
   /** Floor + ratio for [[overCapBloomWorthIt]]'s cost gate. The bloom
     * build costs two extra delta-sized jobs (a count for sizing, then a
     * full aggregation pass) BEFORE any stored row moves; at fixture scale
@@ -400,6 +368,31 @@ object DedupOps {
       "rebuild stored band index (r12 bucket format: long), found bucket: " +
         storedBands.schema("bucket").dataType.simpleString)
 
+  /** Incremental near-dup: pairs introduced by a NEW batch against a
+    * stored [[buildNearDupIndex]] (bands, sets) index — new×stored
+    * candidates come from joining the new docs' bands against the stored
+    * band table, new×new from a self-join of the delta; stored×stored
+    * pairs are never re-examined. Exactly the batch [[minhashNearDups]]
+    * result restricted to pairs touching a new doc (hashing is per-doc
+    * deterministic — asserted in TextOpsSpec). The stored corpus is
+    * touched ONLY by (a) the band equi-join and (b) a doc_id join on the
+    * per-doc set table restricted to pair members — the delta cost is
+    * O(delta hashing + candidates), with no corpus-sized aggregation
+    * anywhere.
+    *
+    * Scope of the "delta cost independent of index size" claim
+    * (VERDICT r8 #2): it holds in the UNDER-CAP regime — a delta touching
+    * ≤ `maxPushdownKeys` buckets reads the stored index via IN-pushdown
+    * point lookups, so bytes-read is O(delta buckets) at any index size
+    * (BENCH dedup_prune: same delta, 3×-different index, near-equal MB).
+    * PAST the cap the stored band table is scanned once per delta — a
+    * term linear in index size (though not all SHUFFLED: the
+    * [[overCapBloomWorthIt]]-gated bloom prefilter drops non-matching
+    * stored rows before the join exchange once the index is
+    * shuffle-dominant). Measured at 10× data with a 10× over-cap delta
+    * (r8 one-off re-run, medians): ~5.6× wall time — sublinear,
+    * because the scan is cheap relative to delta hashing + candidate
+    * verification at that shape. */
   def incrementalNearDupsIndexed(newDocs: DataFrame, storedBands: DataFrame,
                                  storedSets: DataFrame, k: Int = 8,
                                  bands: Int = 4, shingleN: Int = 3,
@@ -435,7 +428,7 @@ object DedupOps {
       newDocs: DataFrame, storedBands: DataFrame, storedSets: DataFrame,
       k: Int, bands: Int, shingleN: Int, textCol: String, idCol: String,
       keepDelta: Boolean, maxPushdownKeys: Int,
-      overCapBloom: Option[Boolean]): (DataFrame, DataFrame, DataFrame) =
+      overCapBloom: Option[Boolean]): (DataFrame, DataFrame, DataFrame) = {
     // AQE stays ON here. An earlier build flipped the session-global
     // spark.sql.adaptive.enabled off for the delta pass — it shaved ~40%
     // at local[8] but (a) mutated shared-session state visible to every
@@ -444,14 +437,6 @@ object DedupOps {
     // the full shuffle.partitions width: at local[32] the pass regressed
     // 1.5 s → 16 s. The pruning that matters (clustered index + chunked-IN
     // point lookups) is independent of AQE and stays.
-    incrementalIndexedBody(newDocs, storedBands, storedSets, k, bands,
-      shingleN, textCol, idCol, keepDelta, maxPushdownKeys, overCapBloom)
-
-  private def incrementalIndexedBody(
-      newDocs: DataFrame, storedBands: DataFrame, storedSets: DataFrame,
-      k: Int, bands: Int, shingleN: Int, textCol: String, idCol: String,
-      keepDelta: Boolean, maxPushdownKeys: Int,
-      overCapBloom: Option[Boolean]): (DataFrame, DataFrame, DataFrame) = {
     requireLongBuckets(storedBands)
     val disk = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     // every persist is tracked so a mid-flight failure (stored-table read,
@@ -607,50 +592,6 @@ object DedupOps {
         tracked.foreach(df => scala.util.Try(df.unpersist(false)))
         throw t
     }
-  }
-
-  /** Incremental near-dup: pairs introduced by a NEW batch against an
-    * existing corpus index — new×stored candidates come from joining the
-    * new docs' bands against the stored band table, new×new from a
-    * self-join of the delta; stored×stored pairs are never re-examined.
-    * Exactly the batch result restricted to pairs touching a new doc
-    * (hashing is per-doc deterministic — asserted in TextOpsSpec).
-    * Prefer [[incrementalNearDupsIndexed]] when the stored index is in
-    * [[buildNearDupIndex]] (bands, sets) form — it avoids re-aggregating
-    * the stored shingle table, and that form is what the streaming sink
-    * ([[graft.streaming.StreamingOps.incrementalDedupSink]]) maintains.
-    * This raw-shingle variant remains for indexes stored as plain
-    * [[shingleRows]] output (e.g. one shared with the batch verify path).
-    *
-    * 100 TB shape: the expensive side (the full corpus) is touched only
-    * through the equi-join on (band, bucket) against its STORED index, so
-    * a delta of d docs costs O(d) hashing + bucket-local joins, not a
-    * corpus re-scan. Jaccard verification reads only the shingle sets of
-    * docs that appear in some candidate pair. */
-  def incrementalNearDups(newDocs: DataFrame, storedBands: DataFrame,
-                          storedShingles: DataFrame, k: Int = 8, bands: Int = 4,
-                          shingleN: Int = 3, textCol: String = "text",
-                          idCol: String = "doc_id"): DataFrame = {
-    requireLongBuckets(storedBands)
-    val disk = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val shrNew = shingleRows(newDocs, shingleN, textCol, idCol).persist(disk)
-    val sigs = signaturesFromShingles(newDocs, shrNew, k, idCol)
-    // consumed by four candidate joins below — hash the delta once and
-    // materialize, so concurrent consumers read the cache instead of
-    // racing to compute the same partitions
-    val newBands = lshBands(sigs, bands, k / bands).persist(disk)
-    newBands.count()
-    def pairsOf(a: DataFrame, b: DataFrame) = a.as("a")
-      .join(b.as("b"),
-        col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-    val cand = pairsOf(newBands, storedBands)
-      .union(pairsOf(storedBands, newBands))
-      .union(pairsOf(newBands, newBands))
-      .distinct()
-    val shrAll = storedShingles.select(col("doc_id"), col("sh")).union(shrNew)
-    jaccardVerified(cand, shrAll, shingleSets, minJaccard = 0.0, shrNew, newBands)
   }
 
   /** Chunk-level cross-corpus dedup statistics — the "remove duplicated
@@ -1150,7 +1091,7 @@ object DedupOps {
                             idCol: String = "doc_id"): DataFrame = {
     import graft.functions.SetExpressions.sorted_intersect_count
     val disk = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    // tracked persists released in the finally (incrementalIndexedBody
+    // tracked persists released in the finally (incrementalIndexedCore
     // doctrine: a failure between persist and release must not leak
     // corpus-sized caches for the session)
     val tracked = scala.collection.mutable.ArrayBuffer.empty[DataFrame]

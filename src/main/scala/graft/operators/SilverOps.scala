@@ -5,6 +5,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
+import scala.reflect.ClassTag
+import scala.reflect.runtime.universe.TypeTag
 
 /** Silver-layer transforms: retroactive split adjustment, time-bucket
   * roll-ups, technical indicators (reference `silver/` — SURVEY §2.3-§2.5).
@@ -143,11 +145,21 @@ object SilverOps {
       .drop("c_cum", "c_cnt", "tr_cum", "tr_cnt", "v_cum", "v_cnt")
   }
 
-  /** Exponential moving average per ticker: `ema_t = α·x_t + (1−α)·ema_{t−1}`,
-    * seeded `ema_0 = x_0` — the recursive indicator family (EMA/MACD/RSI-
-    * Wilder/Kaufman) that NO SQL window frame can express: each output
-    * depends on the previous *output*, not on a bounded frame of inputs,
-    * so the W-family's running-cumulative doctrine doesn't apply.
+  /** (ticker, date, value): one bar of a single-series fold. */
+  private type Bar = (String, java.sql.Date, Double)
+  /** (ticker, date, close, high, low): one bar of an extrema fold. */
+  private[graft] type Ohlc = (String, java.sql.Date, Double, Double, Double)
+
+  /** The recursive-fold family's one driver. Its members are per-ticker
+    * ordered folds that NO SQL window frame can express: each output
+    * depends on the previous *output* ([[ema]], [[macd]], [[wilderRsi]],
+    * [[kama]], [[holt]], [[holtWinters]], [[cusum]]) or on a non-invertible
+    * trailing aggregate ([[rollingExtrema]], [[rollingMedian]],
+    * [[ichimoku]]), so the W-family's running-cumulative doctrine doesn't
+    * apply. Each member supplies only its recursion: `step` receives one
+    * ticker's bars, `(ticker, date, in…)` cast to (string, date, double…)
+    * and sorted by date, and returns its output rows, named
+    * `ticker, date, out…`.
     *
     * Shape: one shuffle on `ticker`, then a per-key ordered fold — the
     * same sequential-scan-per-key plan Flink/kdb run for recursive
@@ -162,48 +174,54 @@ object SilverOps {
     * recursion is exactly the "genuine per-group imperative logic" the
     * typed API exists for.
     *
+    * Input contract: ONE bar per (ticker, date). Duplicate dates make the
+    * date-sorted fold order-nondeterministic (equal keys sort arbitrarily),
+    * so two runs over the same input could silently disagree. The driver
+    * fails loud at the offending key instead, before any step runs;
+    * callers with dirty feeds dedupe (keep-last) upstream. */
+  private def foldByTicker[I <: Product : TypeTag : ClassTag, O <: Product : TypeTag](
+      daily: DataFrame, in: Seq[String], out: Seq[String])(
+      step: (String, Array[I]) => Iterator[O]): DataFrame = {
+    val ss = daily.sparkSession
+    import ss.implicits._
+    def day(r: I): Long = r.productElement(1).asInstanceOf[java.sql.Date].getTime
+    daily
+      .select(col("ticker").cast("string") +: col("date").cast("date") +:
+        in.map(col(_).cast("double")): _*)
+      .as[I]
+      .groupByKey(_.productElement(0).asInstanceOf[String])
+      .flatMapGroups { (t: String, it: Iterator[I]) =>
+        val s = it.toArray.sortBy(day)
+        for (j <- 1 until s.length)
+          require(day(s(j)) != day(s(j - 1)),
+            s"duplicate date ${s(j).productElement(1)} for key $t: the " +
+              "recursive-fold family folds one bar per (ticker, date) — " +
+              "dedupe upstream before folding")
+        step(t, s)
+      }
+      .toDF("ticker" +: "date" +: out: _*)
+  }
+
+  /** Exponential moving average per ticker: `ema_t = α·x_t + (1−α)·ema_{t−1}`,
+    * seeded `ema_0 = x_0` — the first member of the recursive-fold family
+    * ([[foldByTicker]]).
+    *
     * Float parity: the fold evaluates `α·x + β·prev` — callers wanting
     * cross-engine bit-identity (the oracle) pick α with exact binary
     * representation (0.25 ⇒ β = 0.75 exact); an inexact α would put a SQL
     * `0.75`-style literal one ulp adrift per step. */
-  /** The recursive-fold family's input contract: ONE bar per (ticker,
-    * date). Duplicate dates make the date-sorted fold order-
-    * nondeterministic (equal keys sort arbitrarily), so two runs over the
-    * same input could silently disagree. Fail loud at the offending key
-    * instead; callers with dirty feeds dedupe (keep-last) upstream.
-    * Expects the fold's already-sorted date sequence. */
-  private[graft] def requireUniqueSortedDates(
-      key: String, dates: Iterator[java.sql.Date]): Unit = {
-    var prev = Long.MinValue
-    dates.foreach { d =>
-      require(d.getTime != prev,
-        s"duplicate date $d for key $key: the recursive-fold family " +
-          "folds one bar per (ticker, date) — dedupe upstream before folding")
-      prev = d.getTime
-    }
-  }
-
   def ema(daily: DataFrame, alpha: Double, valueCol: String = "close"): DataFrame = {
-    val ss = daily.sparkSession
-    import ss.implicits._
     val beta = 1.0 - alpha
-    daily
-      .select(col("ticker").cast("string"), col("date").cast("date"),
-        col(valueCol).cast("double"))
-      .as[(String, java.sql.Date, Double)]
-      .groupByKey(_._1)
-      .flatMapGroups { (t: String, it: Iterator[(String, java.sql.Date, Double)]) =>
-        val sorted = it.toArray.sortBy(_._2.getTime)
-        requireUniqueSortedDates(t, sorted.iterator.map(_._2))
+    foldByTicker(daily, Seq(valueCol), Seq(valueCol, "ema")) {
+      (t: String, s: Array[Bar]) =>
         var prev = 0.0
         var first = true
-        sorted.iterator.map { case (_, d, x) =>
+        s.iterator.map { case (_, d, x) =>
           val e = if (first) { first = false; x } else alpha * x + beta * prev
           prev = e
           (t, d, x, e)
         }
-      }
-      .toDF("ticker", "date", valueCol, "ema")
+    }
   }
 
   /** MACD (fast EMA − slow EMA, signal = EMA of MACD, histogram = MACD −
@@ -221,20 +239,13 @@ object SilverOps {
   def macd(daily: DataFrame, alphaFast: Double = 0.1875,
            alphaSlow: Double = 0.0625, alphaSignal: Double = 0.25,
            valueCol: String = "close"): DataFrame = {
-    val ss = daily.sparkSession
-    import ss.implicits._
     val (bF, bS, bG) = (1.0 - alphaFast, 1.0 - alphaSlow, 1.0 - alphaSignal)
-    daily
-      .select(col("ticker").cast("string"), col("date").cast("date"),
-        col(valueCol).cast("double"))
-      .as[(String, java.sql.Date, Double)]
-      .groupByKey(_._1)
-      .flatMapGroups { (t: String, it: Iterator[(String, java.sql.Date, Double)]) =>
-        val sorted = it.toArray.sortBy(_._2.getTime)
-        requireUniqueSortedDates(t, sorted.iterator.map(_._2))
+    foldByTicker(daily, Seq(valueCol),
+        Seq(valueCol, "macd", "signal", "histogram")) {
+      (t: String, s: Array[Bar]) =>
         var (pf, ps, pg) = (0.0, 0.0, 0.0)
         var first = true
-        sorted.iterator.map { case (_, d, x) =>
+        s.iterator.map { case (_, d, x) =>
           val f = if (first) x else alphaFast * x + bF * pf
           val sl = if (first) x else alphaSlow * x + bS * ps
           val m = f - sl
@@ -243,8 +254,7 @@ object SilverOps {
           pf = f; ps = sl; pg = g
           (t, d, x, m, g, m - g)
         }
-      }
-      .toDF("ticker", "date", valueCol, "macd", "signal", "histogram")
+    }
   }
 
   /** Wilder-smoothed RSI: average gain/loss are themselves EMAs
@@ -258,21 +268,13 @@ object SilverOps {
     * the TradingView-parity surface. */
   def wilderRsi(daily: DataFrame, alpha: Double = 0.0625,
                 valueCol: String = "close"): DataFrame = {
-    val ss = daily.sparkSession
-    import ss.implicits._
     val beta = 1.0 - alpha
-    daily
-      .select(col("ticker").cast("string"), col("date").cast("date"),
-        col(valueCol).cast("double"))
-      .as[(String, java.sql.Date, Double)]
-      .groupByKey(_._1)
-      .flatMapGroups { (t: String, it: Iterator[(String, java.sql.Date, Double)]) =>
-        val sorted = it.toArray.sortBy(_._2.getTime)
-        requireUniqueSortedDates(t, sorted.iterator.map(_._2))
+    foldByTicker(daily, Seq(valueCol), Seq(valueCol, "rsi_wilder")) {
+      (t: String, s: Array[Bar]) =>
         var prevClose = Double.NaN
         var ag = 0.0
         var al = 0.0
-        sorted.iterator.map { case (_, d, x) =>
+        s.iterator.map { case (_, d, x) =>
           if (!prevClose.isNaN) {
             val gain = math.max(x - prevClose, 0.0)
             val loss = math.max(prevClose - x, 0.0)
@@ -286,8 +288,7 @@ object SilverOps {
             else Some(100.0 - 100.0 / (1.0 + ag / al))
           (t, d, x, rsi)
         }
-      }
-      .toDF("ticker", "date", valueCol, "rsi_wilder")
+    }
   }
 
   /** Kaufman Adaptive Moving Average — the fourth member of the recursive
@@ -307,17 +308,9 @@ object SilverOps {
   def kama(daily: DataFrame, n: Int = 10, fastSC: Double = 0.625,
            slowSC: Double = 0.0625, valueCol: String = "close"): DataFrame = {
     require(n >= 1, s"ER window must be >= 1, got $n")
-    val ss = daily.sparkSession
-    import ss.implicits._
     val diff = fastSC - slowSC
-    daily
-      .select(col("ticker").cast("string"), col("date").cast("date"),
-        col(valueCol).cast("double"))
-      .as[(String, java.sql.Date, Double)]
-      .groupByKey(_._1)
-      .flatMapGroups { (t: String, it: Iterator[(String, java.sql.Date, Double)]) =>
-        val s = it.toArray.sortBy(_._2.getTime)
-        requireUniqueSortedDates(t, s.iterator.map(_._2))
+    foldByTicker(daily, Seq(valueCol), Seq(valueCol, "kama")) {
+      (t: String, s: Array[Bar]) =>
         val cents = s.map(x => math.round(x._3 * 100))
         val deltas = new Array[Long](s.length) // |Δcents|, deltas(0) unused
         var i = 1
@@ -342,8 +335,7 @@ object SilverOps {
             }
           (t, s(j)._2, s(j)._3, k)
         }
-      }
-      .toDF("ticker", "date", valueCol, "kama")
+    }
   }
 
   /** Holt double-exponential smoothing (level + trend) — the forecasting
@@ -354,21 +346,13 @@ object SilverOps {
     *
     * Default α=0.5, β=0.25 are binary-exact (k/2^m), so the fold and the
     * oracle's recursive CTE execute the identical IEEE sequence — the
-    * [[ema]] float-parity doctrine. Shape: one ticker shuffle, compiled
-    * per-key ordered fold, two doubles of state. */
+    * [[ema]] float-parity doctrine. Two doubles of state. */
   def holt(daily: DataFrame, alpha: Double = 0.5, beta: Double = 0.25,
            valueCol: String = "close"): DataFrame = {
-    val ss = daily.sparkSession
-    import ss.implicits._
     val (ba, bb) = (1.0 - alpha, 1.0 - beta)
-    daily
-      .select(col("ticker").cast("string"), col("date").cast("date"),
-        col(valueCol).cast("double"))
-      .as[(String, java.sql.Date, Double)]
-      .groupByKey(_._1)
-      .flatMapGroups { (t: String, it: Iterator[(String, java.sql.Date, Double)]) =>
-        val s = it.toArray.sortBy(_._2.getTime)
-        requireUniqueSortedDates(t, s.iterator.map(_._2))
+    foldByTicker(daily, Seq(valueCol),
+        Seq(valueCol, "level", "trend", "forecast")) {
+      (t: String, s: Array[Bar]) =>
         var lev = 0.0
         var tr = 0.0
         s.indices.iterator.map { j =>
@@ -384,8 +368,7 @@ object SilverOps {
           lev = nl; tr = nt
           (t, s(j)._2, x, nl, nt, fc)
         }
-      }
-      .toDF("ticker", "date", valueCol, "level", "trend", "forecast")
+    }
   }
 
   /** Holt-Winters ADDITIVE triple smoothing (level + trend + a periodic
@@ -402,23 +385,15 @@ object SilverOps {
     * Defaults α=0.5, β=γ=0.25 are binary-exact (k/2^m), so fold and
     * recursive-CTE oracle execute the identical IEEE sequence (the [[ema]]
     * doctrine); the oracle carries the seasonal vector as `period`
-    * pivoted columns with a CASE per slot. Shape: one ticker shuffle,
-    * compiled per-key ordered fold, 2+period doubles of state. */
+    * pivoted columns with a CASE per slot. 2+period doubles of state. */
   def holtWinters(daily: DataFrame, alpha: Double = 0.5, beta: Double = 0.25,
                   gamma: Double = 0.25, period: Int = 5,
                   valueCol: String = "close"): DataFrame = {
     require(period > 0, s"period must be positive: $period")
-    val ss = daily.sparkSession
-    import ss.implicits._
     val (ba, bb, bg) = (1.0 - alpha, 1.0 - beta, 1.0 - gamma)
-    daily
-      .select(col("ticker").cast("string"), col("date").cast("date"),
-        col(valueCol).cast("double"))
-      .as[(String, java.sql.Date, Double)]
-      .groupByKey(_._1)
-      .flatMapGroups { (t: String, it: Iterator[(String, java.sql.Date, Double)]) =>
-        val s = it.toArray.sortBy(_._2.getTime)
-        requireUniqueSortedDates(t, s.iterator.map(_._2))
+    foldByTicker(daily, Seq(valueCol),
+        Seq(valueCol, "level", "trend", "seasonal", "forecast")) {
+      (t: String, s: Array[Bar]) =>
         var lev = 0.0
         var tr = 0.0
         val seas = new Array[Double](period)
@@ -438,9 +413,7 @@ object SilverOps {
           lev = nl; tr = nt; seas(slot) = nsv
           (t, s(j)._2, x, nl, nt, nsv, fc)
         }
-      }
-      .toDF("ticker", "date", valueCol, "level", "trend", "seasonal",
-        "forecast")
+    }
   }
 
   /** Two-sided CUSUM change-point detector over day-over-day moves, in
@@ -454,22 +427,14 @@ object SilverOps {
     * Determinism: the whole recursion is BIGINT arithmetic on
     * `round(close·100)` cents — no float drift anywhere, so the oracle's
     * recursive CTE reproduces it bit-exactly with no rounding doctrine
-    * needed. Shape is [[ema]]'s: one shuffle on ticker, compiled per-key
-    * ordered fold, calendar-bounded state. */
+    * needed. */
   def cusum(daily: DataFrame, driftCents: Long, thresholdCents: Long,
             valueCol: String = "close"): DataFrame = {
     require(driftCents >= 0 && thresholdCents > 0,
       s"need driftCents >= 0 < thresholdCents, got $driftCents/$thresholdCents")
-    val ss = daily.sparkSession
-    import ss.implicits._
-    daily
-      .select(col("ticker").cast("string"), col("date").cast("date"),
-        col(valueCol).cast("double"))
-      .as[(String, java.sql.Date, Double)]
-      .groupByKey(_._1)
-      .flatMapGroups { (t: String, it: Iterator[(String, java.sql.Date, Double)]) =>
-        val s = it.toArray.sortBy(_._2.getTime)
-        requireUniqueSortedDates(t, s.iterator.map(_._2))
+    foldByTicker(daily, Seq(valueCol),
+        Seq(valueCol, "s_pos", "s_neg", "alarm")) {
+      (t: String, s: Array[Bar]) =>
         var sp = 0L
         var sn = 0L
         var prevCents = 0L
@@ -488,66 +453,64 @@ object SilverOps {
           prevCents = cents
           (t, s(j)._2, s(j)._3, outSp, outSn, alarm)
         }
-      }
-      .toDF("ticker", "date", valueCol, "s_pos", "s_neg", "alarm")
+    }
   }
 
-  /** Trailing-n rolling extrema (max of `high`, min of `low`) per ticker —
-    * the third case of the window discipline. The W-family's running-sum
+  /** Trailing (min low, max high) of one ticker's date-sorted bars for
+    * every window n ∈ `ns`, in one pass: `at(w, j)` covers rows
+    * j−ns(w)+1..j, and is (None, None) until the window holds ns(w) rows
+    * (strict min-periods, [[indicators]]' SMA semantics).
+    *
+    * The third case of the window discipline: the W-family's running-sum
     * doctrine (trailing sum = cum − lag(cum, n)) requires an *invertible*
     * aggregate; min/max are not invertible, so no running frame recovers
     * them, and a literal `rowsBetween(-(n-1), 0)` frame re-scans n rows per
     * row in WindowExec (the O(rows×frame) shape PlanSpec bans). The
     * monotonic deque is the O(rows) answer: each row index enters and
-    * leaves each deque at most once, so the whole per-ticker pass is
-    * amortized constant per row regardless of n. Distribution shape is the
-    * [[ema]] fold's: one shuffle on ticker, compiled per-key ordered fold,
-    * calendar-bounded key state.
-    *
-    * Strict min-periods: `min_low`/`max_high` are NULL until the trailing
-    * window holds exactly n rows, matching [[indicators]]' SMA semantics.
-    */
+    * leaves each deque at most once, so the pass is amortized constant per
+    * row and window regardless of n. */
+  private[graft] def trailingExtrema(s: Array[Ohlc], ns: IndexedSeq[Int])
+  : (Int, Int) => (Option[Double], Option[Double]) = {
+    val m = s.length
+    val mins = Array.ofDim[Double](ns.length, m)
+    val maxs = Array.ofDim[Double](ns.length, m)
+    for (w <- ns.indices) {
+      val n = ns(w)
+      // index deques: head = current window extremum; values strictly
+      // decrease (max) / increase (min) toward the tail
+      val dqMax = new java.util.ArrayDeque[Int](math.min(n + 1, m + 1))
+      val dqMin = new java.util.ArrayDeque[Int](math.min(n + 1, m + 1))
+      var i = 0
+      while (i < m) {
+        if (!dqMax.isEmpty && dqMax.peekFirst <= i - n) dqMax.pollFirst()
+        if (!dqMin.isEmpty && dqMin.peekFirst <= i - n) dqMin.pollFirst()
+        while (!dqMax.isEmpty && s(dqMax.peekLast)._4 <= s(i)._4) dqMax.pollLast()
+        while (!dqMin.isEmpty && s(dqMin.peekLast)._5 >= s(i)._5) dqMin.pollLast()
+        dqMax.addLast(i); dqMin.addLast(i)
+        maxs(w)(i) = s(dqMax.peekFirst)._4
+        mins(w)(i) = s(dqMin.peekFirst)._5
+        i += 1
+      }
+    }
+    (w, j) =>
+      if (j >= ns(w) - 1) (Some(mins(w)(j)), Some(maxs(w)(j))) else (None, None)
+  }
+
+  /** Trailing-n rolling extrema (max of `high`, min of `low`) per ticker:
+    * [[trailingExtrema]]'s one-window case, run as a [[foldByTicker]]
+    * fold. `min_low`/`max_high` are NULL until the window holds n rows. */
   def rollingExtrema(daily: DataFrame, n: Int): DataFrame = {
     require(n >= 1, s"window must be >= 1, got $n")
-    val ss = daily.sparkSession
-    import ss.implicits._
-    daily
-      .select(col("ticker").cast("string"), col("date").cast("date"),
-        col("close").cast("double"), col("high").cast("double"),
-        col("low").cast("double"))
-      .as[(String, java.sql.Date, Double, Double, Double)]
-      .groupByKey(_._1)
-      .flatMapGroups { (t: String,
-                        it: Iterator[(String, java.sql.Date, Double, Double, Double)]) =>
-        val s = it.toArray.sortBy(_._2.getTime)
-        requireUniqueSortedDates(t, s.iterator.map(_._2))
-        val m = s.length
-        val maxHigh = new Array[Double](m)
-        val minLow = new Array[Double](m)
-        // index deques: head = current window extremum; values strictly
-        // decrease (max) / increase (min) toward the tail
-        val dqMax = new java.util.ArrayDeque[Int](math.min(n + 1, m + 1))
-        val dqMin = new java.util.ArrayDeque[Int](math.min(n + 1, m + 1))
-        var i = 0
-        while (i < m) {
-          if (!dqMax.isEmpty && dqMax.peekFirst <= i - n) dqMax.pollFirst()
-          if (!dqMin.isEmpty && dqMin.peekFirst <= i - n) dqMin.pollFirst()
-          while (!dqMax.isEmpty && s(dqMax.peekLast)._4 <= s(i)._4) dqMax.pollLast()
-          while (!dqMin.isEmpty && s(dqMin.peekLast)._5 >= s(i)._5) dqMin.pollLast()
-          dqMax.addLast(i); dqMin.addLast(i)
-          maxHigh(i) = s(dqMax.peekFirst)._4
-          minLow(i) = s(dqMin.peekFirst)._5
-          i += 1
-        }
-        (0 until m).iterator.map { j =>
+    foldByTicker(daily, Seq("close", "high", "low"),
+        Seq("close", "high", "low", "min_low", "max_high")) {
+      (t: String, s: Array[Ohlc]) =>
+        val at = trailingExtrema(s, IndexedSeq(n))
+        s.indices.iterator.map { j =>
           val (_, d, c, h, l) = s(j)
-          val full = j >= n - 1
-          (t, d, c, h, l,
-            if (full) Some(minLow(j)) else None,
-            if (full) Some(maxHigh(j)) else None)
+          val (mn, mx) = at(0, j)
+          (t, d, c, h, l, mn, mx)
         }
-      }
-      .toDF("ticker", "date", "close", "high", "low", "min_low", "max_high")
+    }
   }
 
   /** Trailing-n rolling median per ticker (n odd ⇒ the exact middle order
@@ -557,22 +520,13 @@ object SilverOps {
     * re-sorts n rows per row; the dual-heap-with-lazy-deletion fold
     * (lower max-heap / upper min-heap, stale entries pruned at the top)
     * is O(rows·log n) — the textbook sliding-window-median structure,
-    * distributed here as the same one-ticker-shuffle compiled fold as
-    * [[ema]] and [[rollingExtrema]]. Strict min-periods: NULL until the
+    * run as a [[foldByTicker]] fold. Strict min-periods: NULL until the
     * window holds n rows. */
   def rollingMedian(daily: DataFrame, n: Int,
                     valueCol: String = "close"): DataFrame = {
     require(n >= 1 && n % 2 == 1, s"window must be odd and >= 1, got $n")
-    val ss = daily.sparkSession
-    import ss.implicits._
-    daily
-      .select(col("ticker").cast("string"), col("date").cast("date"),
-        col(valueCol).cast("double"))
-      .as[(String, java.sql.Date, Double)]
-      .groupByKey(_._1)
-      .flatMapGroups { (t: String, it: Iterator[(String, java.sql.Date, Double)]) =>
-        val s = it.toArray.sortBy(_._2.getTime)
-        requireUniqueSortedDates(t, s.iterator.map(_._2))
+    foldByTicker(daily, Seq(valueCol), Seq(valueCol, s"median_$n")) {
+      (t: String, s: Array[Bar]) =>
         import java.{util => ju}
         val lo = new ju.PriorityQueue[java.lang.Double](ju.Collections.reverseOrder[java.lang.Double]())
         val hi = new ju.PriorityQueue[java.lang.Double]()
@@ -614,78 +568,33 @@ object SilverOps {
           val med = if (j >= n - 1) Some(lo.peek.doubleValue) else None
           (t, s(j)._2, s(j)._3, med)
         }
-      }
-      .toDF("ticker", "date", valueCol, s"median_$n")
-  }
-
-  /** Trailing extrema for the Ichimoku windows in ONE per-ticker pass:
-    * three (max, min) deque pairs advance together over the sorted bars —
-    * not three [[rollingExtrema]] calls stitched with (ticker, date)
-    * joins, which would shuffle the bars three times for the same answer
-    * (the [[macd]] single-fold argument). */
-  private[operators] def ichimokuExtrema(daily: DataFrame, t: Int, k: Int,
-                                         s2: Int): DataFrame = {
-    val ss = daily.sparkSession
-    import ss.implicits._
-    val ns = Array(t, k, s2)
-    daily
-      .select(col("ticker").cast("string"), col("date").cast("date"),
-        col("close").cast("double"), col("high").cast("double"),
-        col("low").cast("double"))
-      .as[(String, java.sql.Date, Double, Double, Double)]
-      .groupByKey(_._1)
-      .flatMapGroups { (tk: String,
-                        it: Iterator[(String, java.sql.Date, Double, Double, Double)]) =>
-        val s = it.toArray.sortBy(_._2.getTime)
-        requireUniqueSortedDates(tk, s.iterator.map(_._2))
-        val m = s.length
-        import java.{util => ju}
-        val dqMax = Array.fill(3)(new ju.ArrayDeque[Int]())
-        val dqMin = Array.fill(3)(new ju.ArrayDeque[Int]())
-        val mins = Array.ofDim[Double](3, m)
-        val maxs = Array.ofDim[Double](3, m)
-        var i = 0
-        while (i < m) {
-          var w = 0
-          while (w < 3) {
-            val n = ns(w)
-            if (!dqMax(w).isEmpty && dqMax(w).peekFirst <= i - n) dqMax(w).pollFirst()
-            if (!dqMin(w).isEmpty && dqMin(w).peekFirst <= i - n) dqMin(w).pollFirst()
-            while (!dqMax(w).isEmpty && s(dqMax(w).peekLast)._4 <= s(i)._4)
-              dqMax(w).pollLast()
-            while (!dqMin(w).isEmpty && s(dqMin(w).peekLast)._5 >= s(i)._5)
-              dqMin(w).pollLast()
-            dqMax(w).addLast(i); dqMin(w).addLast(i)
-            maxs(w)(i) = s(dqMax(w).peekFirst)._4
-            mins(w)(i) = s(dqMin(w).peekFirst)._5
-            w += 1
-          }
-          i += 1
-        }
-        def at(w: Int, j: Int): (Option[Double], Option[Double]) =
-          if (j >= ns(w) - 1) (Some(mins(w)(j)), Some(maxs(w)(j))) else (None, None)
-        (0 until m).iterator.map { j =>
-          val ((n0, x0), (n1, x1), (n2, x2)) = (at(0, j), at(1, j), at(2, j))
-          (tk, s(j)._2, s(j)._3, n0, x0, n1, x1, n2, x2)
-        }
-      }
-      .toDF("ticker", "date", "close", "mn_t", "mx_t", "mn_k", "mx_k",
-        "mn_s", "mx_s")
+    }
   }
 
   /** Ichimoku cloud: conversion/base lines are window midpoints
     * `(max_high_n + min_low_n)/2`, the two senkou spans are midpoints
     * displaced `disp` bars back onto the current row (lag — the chart's
     * forward plot, expressed as data), chikou is close displaced forward
-    * (lead). One fold + one lag/lead window over the same ticker
-    * partitioning — offset functions are O(1)/row, so the whole indicator
-    * is two passes regardless of the three window lengths. Midpoints are
-    * single IEEE adds/halvings of exact values — no rounding needed for
-    * cross-engine equality. */
+    * (lead). The three windows' extrema come from ONE [[trailingExtrema]]
+    * fold — not three [[rollingExtrema]] calls stitched with (ticker, date)
+    * joins, which would shuffle the bars three times for the same answer
+    * (the [[macd]] single-fold argument) — then one lag/lead window over
+    * the same ticker partitioning; offset functions are O(1)/row, so the
+    * whole indicator is two passes regardless of the three window lengths.
+    * Midpoints are single IEEE adds/halvings of exact values — no rounding
+    * needed for cross-engine equality. */
   def ichimoku(daily: DataFrame, t: Int = 9, k: Int = 26, s2: Int = 52,
                disp: Int = 26): DataFrame = {
     val w = F.tickerWindow()
-    ichimokuExtrema(daily, t, k, s2)
+    foldByTicker(daily, Seq("close", "high", "low"),
+        Seq("close", "mn_t", "mx_t", "mn_k", "mx_k", "mn_s", "mx_s")) {
+      (tk: String, s: Array[Ohlc]) =>
+        val at = trailingExtrema(s, IndexedSeq(t, k, s2))
+        s.indices.iterator.map { j =>
+          val ((n0, x0), (n1, x1), (n2, x2)) = (at(0, j), at(1, j), at(2, j))
+          (tk, s(j)._2, s(j)._3, n0, x0, n1, x1, n2, x2)
+        }
+    }
       .withColumn("tenkan", (col("mx_t") + col("mn_t")) / 2.0)
       .withColumn("kijun", (col("mx_k") + col("mn_k")) / 2.0)
       .withColumn("senkou_a",

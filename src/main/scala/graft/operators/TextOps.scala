@@ -644,14 +644,6 @@ object TextOps {
         col("cnt").cast("long"))
   }
 
-  /** Read a stored merge table back into apply order. */
-  def bpeMergesFromDf(df: DataFrame): Seq[BpeMerge] =
-    df.select(col("idx").cast("int"), col("pair"), col("merged"),
-        col("cnt").cast("long"))
-      .collect().map(r => BpeMerge(r.getInt(0), r.getString(1),
-        r.getString(2), r.getLong(3)))
-      .sortBy(_.idx).toSeq
-
   /** Apply a trained merge table to the corpus: per word, replay every
     * merge in training order (chained codegen'd `replace` expressions —
     * per-row, zero shuffle at any corpus size). Output keeps the word in

@@ -54,20 +54,6 @@ object WebOps {
     concat(scheme(url), lit("://"), host(url), tidy)
   }
 
-  /** Per-domain share report: doc count and corpus fraction per registered
-    * domain — the imbalance screen run before [[domainCap]]. One
-    * map-combined aggregation; the total is a broadcast scalar. Every row
-    * lands in exactly one group, so the total is `df.count()` — a pruned
-    * count, not a second pass over the domain aggregation (which would
-    * also NPE on an empty input: sum over zero groups is null). */
-  def domainStats(df: DataFrame, urlCol: String = "url"): DataFrame = {
-    val total = math.max(df.count(), 1L)
-    df.groupBy(registeredDomain(col(urlCol)).as("domain"))
-      .agg(count(lit(1)).as("n_docs"))
-      .select(col("domain"), col("n_docs"),
-        round(col("n_docs").cast("double") / total, 6).as("share"))
-  }
-
   /** Deterministic per-domain cap: keep at most `maxPerDomain` docs per
     * registered domain, chosen in md5(id) order — reproducible across
     * engines and re-runs (same doctrine as the class cap / sampling ops).

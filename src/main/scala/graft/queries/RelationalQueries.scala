@@ -227,16 +227,12 @@ object RelationalQueries {
         count(lit(1)).as("n"),
         sum(when(col("o_totalprice").isNull, 1).otherwise(0)).as("null_prices"))),
 
-    // A8 — anomaly thresholds: per-date counts vs global mean (cross-joined
-    // scalar, the Spark-shaped version of `utils/validation.py:16-44`).
-    "q_anomaly_counts" -> ((s, dir) => {
-      val counts = Tables.lineitem(s, dir)
-        .groupBy(to_date(col("l_shipdate")).as("d")).agg(count(lit(1)).as("n"))
-      val mean = counts.agg((sum(col("n")).cast("double") / count(lit(1))).as("mean_n"))
-      counts.crossJoin(broadcast(mean))
-        .filter(col("n") < col("mean_n") * 0.5 || col("n") > col("mean_n") * 2.0)
-        .select(col("d"), col("n"))
-    }),
+    // A8 — anomaly thresholds: per-date counts vs global mean, through the
+    // pipeline's own report (floor 0 never fires: every count is ≥ 1).
+    "q_anomaly_counts" -> ((s, dir) =>
+      graft.pipeline.Validation.countAnomalies(
+        Tables.lineitem(s, dir).select(to_date(col("l_shipdate")).as("d")), "d")
+        .select(col("d"), col("n"))),
 
     // O3 — top-k: TakeOrderedAndProject, unique tiebreaker.
     "q_topk" -> ((s, dir) =>

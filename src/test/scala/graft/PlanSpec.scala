@@ -130,10 +130,15 @@ class PlanSpec extends SparkSpecBase {
   test("incremental dedup candidates join the stored index by hash, never NLJ") {
     import org.apache.spark.sql.functions._
     val docs = Tables.documents(spark, sf)
-    val (bandIdx, shingleIdx) = graft.operators.DedupOps.buildBandIndex(
+    val (bandIdx, setsIdx) = graft.operators.DedupOps.buildNearDupIndex(
       docs.filter(col("doc_id") < 150))
-    val p = formatted(graft.operators.DedupOps.incrementalNearDups(
-      docs.filter(col("doc_id") >= 150), bandIdx, shingleIdx))
+    // past the pushdown cap the candidate join stays in the result's plan
+    // (under it the candidates are collected and re-enter as a local
+    // relation, so no plan shows how they were generated)
+    val p = formatted(graft.operators.DedupOps.incrementalNearDupsIndexed(
+      docs.filter(col("doc_id") >= 150), bandIdx, setsIdx, maxPushdownKeys = 2))
+    assert(p.contains("Left keys [2]: [band"),
+      s"candidate generation must be an equi-join on (band, bucket):\n$p")
     assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"),
       s"candidate generation must stay an equi-join on (band, bucket):\n$p")
   }

@@ -23,23 +23,30 @@ class RollingOpsSpec extends SparkSpecBase {
       (t, d(i), base, base + spread, base - spread)
     }
     val bars = raw.toDF("ticker", "date", "close", "high", "low")
+    val byTicker = raw.groupBy(_._1).map { case (t, g) => t -> g.sortBy(_._2.getTime) }
+    // (windows, (ticker, window index, row) → (min low, max high)): the
+    // one-window DataFrame fold, and the multi-window deque pass itself
     val n = 14
-    val got = SilverOps.rollingExtrema(bars, n).collect()
+    val single = SilverOps.rollingExtrema(bars, n).collect()
       .map(r => (r.getString(0), r.getDate(1).toString) ->
         ((if (r.isNullAt(5)) None else Some(r.getDouble(5))),
          (if (r.isNullAt(6)) None else Some(r.getDouble(6))))).toMap
-    for ((t, grp) <- raw.groupBy(_._1)) {
-      val s = grp.sortBy(_._2.getTime)
-      for (j <- s.indices) {
-        val expect =
-          if (j < n - 1) (None, None)
-          else {
-            val win = s.slice(j - n + 1, j + 1)
-            (Some(win.map(_._5).min), Some(win.map(_._4).max))
-          }
-        assert(got((t, s(j)._2.toString)) === expect,
-          s"mismatch at $t ${s(j)._2}")
-      }
+    val multi = IndexedSeq(3, 9, 14)
+    val multiAt = byTicker.map { case (t, s) =>
+      t -> SilverOps.trailingExtrema(s.toArray, multi) }
+    val inputs = Seq[(IndexedSeq[Int], (String, Int, Int) => (Option[Double], Option[Double]))](
+      IndexedSeq(n) -> ((t, _, j) => single((t, byTicker(t)(j)._2.toString))),
+      multi -> ((t, w, j) => multiAt(t)(w, j)))
+    for ((ns, got) <- inputs; (t, s) <- byTicker; (wn, w) <- ns.zipWithIndex;
+         j <- s.indices) {
+      val expect =
+        if (j < wn - 1) (None, None)
+        else {
+          val win = s.slice(j - wn + 1, j + 1)
+          (Some(win.map(_._5).min), Some(win.map(_._4).max))
+        }
+      assert(got(t, w, j) === expect,
+        s"mismatch at windows $ns, n=$wn, $t ${s(j)._2}")
     }
   }
 
@@ -49,14 +56,24 @@ class RollingOpsSpec extends SparkSpecBase {
     // so the fold family fails loud instead of folding it
     val dirty = Seq(("X", d(1), 10.0), ("X", d(2), 11.0), ("X", d(2), 99.0),
       ("X", d(3), 12.0)).toDF("ticker", "date", "close")
+    val dirtyOhlc = dirty.withColumn("high", col("close"))
+      .withColumn("low", col("close"))
     val folds = Seq[(String, org.apache.spark.sql.DataFrame)](
+      "ema" -> SilverOps.ema(dirty, 0.25),
+      "macd" -> SilverOps.macd(dirty),
+      "wilderRsi" -> SilverOps.wilderRsi(dirty),
+      "kama" -> SilverOps.kama(dirty, n = 2),
+      "holt" -> SilverOps.holt(dirty),
       "holtWinters" -> SilverOps.holtWinters(dirty),
-      "ema" -> SilverOps.ema(dirty, 0.25))
+      "cusum" -> SilverOps.cusum(dirty, 0L, 100L),
+      "rollingExtrema" -> SilverOps.rollingExtrema(dirtyOhlc, 2),
+      "rollingMedian" -> SilverOps.rollingMedian(dirty, 3),
+      "ichimoku" -> SilverOps.ichimoku(dirtyOhlc, 1, 2, 3, 1))
     folds.foreach { case (name, df) =>
       val ex = intercept[org.apache.spark.SparkException](df.collect())
       val msgs = Iterator.iterate[Throwable](ex)(_.getCause)
         .takeWhile(_ != null).flatMap(e => Option(e.getMessage))
-      assert(msgs.exists(_.contains("duplicate date")),
+      assert(msgs.exists(_.contains(s"duplicate date ${d(2)}")),
         s"$name must name the duplicate date: ${ex.getMessage}")
     }
   }

@@ -135,13 +135,7 @@ class TextOpsSpec extends SparkSpecBase {
       (r.getLong(0), r.getLong(1), r.getDouble(2))
     val batch = DedupOps.minhashNearDups(docs).collect().map(key)
       .filter { case (a, b, _) => a >= split || b >= split }.toSet
-    val (bandIdx, shingleIdx) =
-      DedupOps.buildBandIndex(docs.filter(col("doc_id") < split))
-    val incr = DedupOps.incrementalNearDups(
-      docs.filter(col("doc_id") >= split), bandIdx, shingleIdx)
-      .collect().map(key).toSet
-    assert(incr === batch)
-    assert(incr.nonEmpty, "fixture must contain cross-batch near-dups")
+    assert(batch.nonEmpty, "fixture must contain cross-batch near-dups")
     // the INDEXED form (bands + per-doc hash sets — no stored-shingle
     // re-aggregation) must produce the identical pair set and jaccards
     val (bandIdx2, setsIdx) =
@@ -214,11 +208,6 @@ class TextOpsSpec extends SparkSpecBase {
       DedupOps.incrementalNearDupsIndexed(delta, bands,
         spark.read.parquet(s"$dir/sets")))
     assert(indexed.getMessage.contains(
-      "rebuild stored band index (r12 bucket format: long)"))
-    val (_, shingles) = DedupOps.buildBandIndex(docs)
-    val raw = intercept[IllegalArgumentException](
-      DedupOps.incrementalNearDups(delta, bands, shingles))
-    assert(raw.getMessage.contains(
       "rebuild stored band index (r12 bucket format: long)"))
   }
 
@@ -470,10 +459,6 @@ class TextOpsSpec extends SparkSpecBase {
     assert(merges.map(_.idx) === (1 to merges.size))
     // decoded forms are sentinel-free surface strings
     merges.foreach(m => assert(!m.merged.exists(_ < ' ')))
-    // merge table round-trips through its persistable DataFrame form
-    val viaDf = graft.operators.TextOps.bpeMergesFromDf(
-      graft.operators.TextOps.bpeMergesToDf(spark, merges))
-    assert(viaDf === merges)
     // apply/decode round-trip law on the real corpus, and encoding must
     // strictly compress somewhere (the frequent pairs exist by training)
     val corpus = Tables.documents(spark, sf).limit(200)

@@ -41,17 +41,6 @@ class WebOpsSpec extends SparkSpecBase {
     assert(r.getString(2) === "example.org")
   }
 
-  test("domainStats shares sum to 1 and the empty input yields no rows") {
-    val docs = (0L until 10L).map(i =>
-      (i, s"https://site${i % 4}-x.com/p/$i")).toDF("doc_id", "url")
-    val stats = WebOps.domainStats(docs).collect()
-    assert(stats.map(_.getLong(1)).sum === 10L)
-    assert(math.abs(stats.map(_.getDouble(2)).sum - 1.0) < 1e-6)
-    // empty input: no rows, no NPE (sum over zero groups is null — the
-    // total must not come from re-aggregating the domain aggregation)
-    assert(WebOps.domainStats(docs.filter(col("doc_id") < 0)).count() === 0)
-  }
-
   test("domainCap keeps at most N per registered domain, deterministically") {
     val docs = (0L until 40L).map(i =>
       (i, s"https://site${i % 2}.example.com/p/$i")).toDF("doc_id", "url")
